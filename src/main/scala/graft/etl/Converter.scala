@@ -8,6 +8,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * discover/validate input → read → 4-stage pipeline → JSON output
   * (merged or partitioned) → size stats.
   *
+  * One pass per conversion: the input is read once, by the write.
+  *  - the reference's validate probe is folded into the schema
+  *    resolution the real read already does: a read that cannot
+  *    resolve raises `input failed validation` before anything is
+  *    written (`Readers.validate` stays the public 0-row probe);
+  *  - rows/files/bytes come from the sink itself — chunks mode from
+  *    the write's own commit metrics (`Metrics.collectWriteStats`),
+  *    merge mode from the array `Sinks.jsonArrayFile` collects and
+  *    writes — never from a re-count or a directory listing.
+  *
   * Deliberate differences from the reference (SURVEY.md §4.3):
   *  - no O(chunks²) re-parsing: one declarative scan, partition-parallel;
   *  - no silent chunk loss: a failing task fails the job (vs
@@ -41,36 +51,37 @@ object Converter {
   /** Full conversion: returns the reference's R15-style size stats. */
   def convert(spark: SparkSession, inputPath: String, outputDir: String,
       cfg: Config = Config()): Stats = {
-    require(Readers.validate(spark, inputPath, cfg.format),
-      s"input failed validation: $inputPath")   // R1/R4 probe
-    val raw: DataFrame = cfg.format match {
-      case "csv" => Readers.csv(spark, inputPath, cfg.csvSeparator, cfg.header,
+    // a bad Config fails before any Spark work
+    val read: () => DataFrame = cfg.format match {
+      case "csv" => () => Readers.csv(spark, inputPath, cfg.csvSeparator, cfg.header,
         multiLine = cfg.multiLine)
-      case "json" => Readers.json(spark, inputPath)
-      case "parquet" => Readers.parquet(spark, inputPath)
+      case "json" => () => Readers.json(spark, inputPath)
+      case "parquet" => () => Readers.parquet(spark, inputPath)
       // Excel-proper (reference R3/R27 dispatch, unified_code.py:193–202):
       // the self-contained OOXML reader; multi-sheet workbooks surface
       // every sheet with its sheet_name column, like the reference's
       // per-sheet iteration
-      case "xlsx" => spark.read.format("xlsx").load(inputPath)
+      case "xlsx" => () => spark.read.format("xlsx").load(inputPath)
       case f => throw new IllegalArgumentException(s"unsupported format: $f")
     }
-    val staged = Pipeline.run(raw)                       // R8–R11
-    val limited = if (cfg.testMode) Pipeline.testMode(staged, cfg.chunkSize) else staged
-    val keys = if (cfg.sortKeys.nonEmpty) cfg.sortKeys
-      else limited.columns.headOption.toSeq
-    val rows = cfg.outputMode match {
-      case "chunks" =>                                   // R13/R28
-        Sinks.jsonChunks(limited, outputDir)
-        limited.count()
-      case "merge" =>                                    // R14/R15
-        val path = s"$outputDir/output.json"
+    val write: DataFrame => Metrics.WriteStats = cfg.outputMode match {
+      case "chunks" => df =>                             // R13/R28
+        Metrics.collectWriteStats(spark)(Sinks.jsonChunks(df, outputDir))._2
+      case "merge" => df =>                              // R14/R15
+        val keys = if (cfg.sortKeys.nonEmpty) cfg.sortKeys else df.columns.headOption.toSeq
         new java.io.File(outputDir).mkdirs()
-        Sinks.jsonArrayFile(limited, path, keys, indent = !cfg.minify)
-        limited.count()
+        Sinks.jsonArrayFile(df, s"$outputDir/output.json", keys, indent = !cfg.minify)
       case m => throw new IllegalArgumentException(s"unsupported output mode: $m")
     }
-    val sizes = Sinks.sizeStats(outputDir)
-    Stats(rows, sizes.size, sizes.values.sum)
+    // R1/R4 validation: the read resolves its schema eagerly, so an
+    // unreadable input fails here, before anything is written
+    val raw = try read() catch {
+      case e: Exception =>
+        throw new IllegalArgumentException(s"input failed validation: $inputPath", e)
+    }
+    val staged = Pipeline.run(raw)                       // R8–R11
+    val written = write(
+      if (cfg.testMode) Pipeline.testMode(staged, cfg.chunkSize) else staged)
+    Stats(written.rows, written.files.toInt, written.bytes)
   }
 }

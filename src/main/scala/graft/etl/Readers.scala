@@ -52,7 +52,9 @@ object Readers {
   /** Validate-by-analysis: the reference's 0-row probe parse
     * (`validate()`, unified_code.py:168–176, 209–217) maps to schema
     * resolution at plan time — returns false instead of raising,
-    * like the reference. */
+    * like the reference. It remains the public 0-row probe (pinned by
+    * `EtlSpec`) but is off the convert path: `Converter.convert` folds
+    * validation into the schema resolution of its one real read. */
   def validate(spark: SparkSession, path: String, format: String): Boolean =
     try {
       format match {

@@ -3,7 +3,6 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import scala.jdk.CollectionConverters._
 
 /** Faithful sink surface for the reference's JSON outputs
   * (waldfalke/catme-etl R13–R15, R28;
@@ -51,19 +50,27 @@ object Sinks {
     * (indent=4, like json.dump(..., indent=4), unified_code.py:349)
     * or minified (separators=(',',':'), unified_code.py:377); UTF-8
     * passthrough (ensure_ascii=False). Driver-side wrap — small
-    * results only (the driver never holds big data otherwise). */
+    * results only (the driver never holds big data otherwise).
+    *
+    * The rows are collected to the driver anyway, so the sort runs in
+    * one partition (same keys and null ordering as `orderBy`) rather
+    * than range-partitioned, which would cost a bounds-sampling job.
+    * Returns what was written: the rows in the array, one file and
+    * its bytes (R15 size stats). */
   def jsonArrayFile(df: DataFrame, path: String, sortKeys: Seq[String],
-      indent: Boolean = false): Unit = {
-    val rows = df.orderBy(sortKeys.map(col): _*)
+      indent: Boolean = false): Metrics.WriteStats = {
+    val rows = df.repartition(1).sortWithinPartitions(sortKeys.map(col): _*)
       .select(to_json(struct(df.columns.toIndexedSeq.map(col): _*),
         Map("ignoreNullFields" -> "false")).as("j"))
       .collect().map(_.getString(0))
     val body =
       if (!indent) rows.mkString("[", ",", "]")
       else rows.map(reindent).mkString("[\n", ",\n", "\n]")
-    Files.write(Paths.get(path), body.getBytes("UTF-8"),
+    val bytes = body.getBytes("UTF-8")
+    Files.write(Paths.get(path), bytes,
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
       StandardOpenOption.WRITE)
+    Metrics.WriteStats(rows.length, 1, bytes.length)
   }
 
   /** Pretty-print one compact JSON object at indent level 1 (4 spaces),
@@ -89,15 +96,5 @@ object Sinks {
       parts.map(p => "        " + p.replaceFirst(":", ": "))
         .mkString("    {\n", ",\n", "\n    }")
     }
-  }
-
-  /** R15 size stats: bytes written per sink directory (the reference
-    * reports original/optimized MB, unified_code.py:383–388). */
-  def sizeStats(dir: String): Map[String, Long] = {
-    val p = Paths.get(dir)
-    if (!Files.exists(p)) Map.empty
-    else Files.list(p).iterator().asScala
-      .filter(f => Files.isRegularFile(f))
-      .map(f => f.getFileName.toString -> Files.size(f)).toMap
   }
 }

@@ -38,6 +38,18 @@ class OpsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Converter.convert(spark, "/nonexistent/x.csv", "/tmp/unused")
     }
+    // a bad Config fails before the input is touched: on a missing input
+    // the error names the Config, not the read
+    val mode = intercept[IllegalArgumentException] {
+      Converter.convert(spark, "/nonexistent/x.csv", "/tmp/unused",
+        Converter.Config(outputMode = "zip"))
+    }
+    assert(mode.getMessage == "unsupported output mode: zip")
+    val format = intercept[IllegalArgumentException] {
+      Converter.convert(spark, "/nonexistent/x.csv", "/tmp/unused",
+        Converter.Config(format = "dbf"))
+    }
+    assert(format.getMessage == "unsupported format: dbf")
   }
 
   test("Metrics.collectWriteStats reports rows/files/bytes of a sink job") {
