@@ -104,8 +104,6 @@ object Bench {
     // the memo builds are real catalog work (they'd run inside queries
     // if not shared), so excluding them would flatter the headline
     // number (VERDICT r3 "what's wrong" #1).
-    def safeWarm(f: => Seq[(String, Double)]): Seq[(String, Double)] =
-      try f catch { case _: Throwable => Seq.empty }
     // SPARK_GRAFT_BENCH_ONLY=q77_lm_quality,q83_token_windows times a
     // subset in an otherwise-identical session — for separating a
     // query's own cost from cross-query cache/GC interference
@@ -114,6 +112,19 @@ object Bench {
     // gets -1 in `queries` and a message in `errors`, and the run exits
     // non-zero (VERDICT r5 "what's wrong" #3)
     val errors = scala.collection.mutable.ListBuffer.empty[(String, String)]
+    // a warm build that throws contributes no timing, and its failure
+    // is an ERROR under a `warm:<build>` key (the run exits non-zero):
+    // dropping it silently would hide a broken store or memo build.
+    // Builds run on concurrent warm threads, hence the lock; a retried
+    // warm phase that fails the same build again adds no duplicate key.
+    def safeWarm(build: String)(f: => Seq[(String, Double)]): Seq[(String, Double)] =
+      try f catch { case e: Throwable =>
+        errors.synchronized {
+          if (!errors.exists(_._1 == s"warm:$build"))
+            errors += ((s"warm:$build", s"${e.getClass.getName}: ${e.getMessage}"))
+        }
+        Seq.empty
+      }
     // calibration sentinel (VERDICT r5 "next" #6): time the same fixed
     // probe before and after the sweep. If the host was contended during
     // the run the two numbers diverge, and the bench self-identifies as
@@ -239,9 +250,9 @@ object Bench {
       // for CPU; fixture content, fold order and every committed
       // timeline are bit-unchanged — only the schedule interleaves.
       val (earlyFuts, earlyPool) = launch(
-        ops.Selection.warmStorePartsEarly(spark, sfDir)
-          .map(p => "store" -> (() => safeWarm(p()))) :+
-          ("store" -> (() => safeWarm(ops.Dedup.warmStores(spark, sfDir)))))
+        ops.Selection.warmStorePartsEarly(spark, sfDir).zipWithIndex
+          .map { case (p, i) => "store" -> (() => safeWarm(s"selection.stores_early.$i")(p())) } :+
+          ("store" -> (() => safeWarm("dedup.stores")(ops.Dedup.warmStores(spark, sfDir)))))
       // phase 1, SEQUENTIAL: the memoized FRAME builds every store
       // fixture (and half the catalog) shares — tokenization, band
       // keys, norms, centroids. Concurrency here would contend on the
@@ -252,9 +263,9 @@ object Bench {
       // coded sets — consumed by the sweep, not by any store build)
       // are built on the main thread (r16).
       val warmSeqA =
-        safeWarm(ops.Similarity.warm(spark, sfDir)) ++
-          safeWarm(ops.TextOps.warm(spark, sfDir)) ++
-          safeWarm(ops.Selection.warm(spark, sfDir))
+        safeWarm("similarity")(ops.Similarity.warm(spark, sfDir)) ++
+          safeWarm("textops")(ops.TextOps.warm(spark, sfDir)) ++
+          safeWarm("selection")(ops.Selection.warm(spark, sfDir))
       // phase 2, ONE merged CONCURRENT group (r16; previously two
       // serialized groups — stores, then the unified pair — whose
       // walls ADDED even though every build is an independent root):
@@ -267,13 +278,13 @@ object Bench {
       // from per-entry compare and judges the wall lines).
       val lateStart = System.nanoTime()
       val (lateFuts, latePool) = launch(Seq(
-        "store" -> (() => safeWarm(ops.Similarity.warmStores(spark, sfDir))),
-        "store" -> (() => safeWarm(ops.TextOps.warmStores(spark, sfDir)))) ++
-        ops.Selection.warmStorePartsLate(spark, sfDir)
-          .map(p => "store" -> (() => safeWarm(p()))) ++ Seq(
-        "unified" -> (() => safeWarm(ops.Similarity.warmUnified(spark, sfDir))),
-        "unified" -> (() => safeWarm(ops.Selection.warmUnified(spark, sfDir)))))
-      val warmSeq = warmSeqA ++ safeWarm(ops.Dedup.warm(spark, sfDir))
+        "store" -> (() => safeWarm("similarity.stores")(ops.Similarity.warmStores(spark, sfDir))),
+        "store" -> (() => safeWarm("textops.stores")(ops.TextOps.warmStores(spark, sfDir)))) ++
+        ops.Selection.warmStorePartsLate(spark, sfDir).zipWithIndex
+          .map { case (p, i) => "store" -> (() => safeWarm(s"selection.stores_late.$i")(p())) } ++ Seq(
+        "unified" -> (() => safeWarm("similarity.unified")(ops.Similarity.warmUnified(spark, sfDir))),
+        "unified" -> (() => safeWarm("selection.unified")(ops.Selection.warmUnified(spark, sfDir)))))
+      val warmSeq = warmSeqA ++ safeWarm("dedup")(ops.Dedup.warm(spark, sfDir))
       val early = earlyFuts.map(Await.result(_, Duration.Inf))
       earlyPool.shutdown()
       val late = lateFuts.map(Await.result(_, Duration.Inf))

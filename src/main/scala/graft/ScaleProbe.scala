@@ -18,7 +18,8 @@ object ScaleProbe {
     val src = "/root/testdata/sf0.1"
     val copies = sys.env.getOrElse("SPARK_GRAFT_PROBE_COPIES", "10").toInt
     val dst = s"/tmp/sfprobe_x$copies"
-    val spark = SparkSession.builder().master("local[32]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.warehouse.dir", s"$dst/warehouse")
       .config("spark.sql.shuffle.partitions", if (copies > 10) "128" else "64")
       .config("spark.sql.session.timeZone", "UTC")

@@ -25,7 +25,8 @@ object StreamSoak {
     val copies = sys.env.getOrElse("SPARK_GRAFT_SOAK_COPIES", "10").toInt
     val src = "/root/testdata/sf0.1"
     val dst = s"/tmp/stream_soak_x$copies"
-    val spark = SparkSession.builder().master("local[32]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

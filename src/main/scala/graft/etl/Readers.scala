@@ -13,10 +13,10 @@ import org.apache.spark.sql.types.StructType
   * `spark.sql.files.maxPartitionBytes` and each byte range is read
   * once, in parallel — the correct version of "chunking".
   *
-  * Excel itself is out of scope offline (no POI jar in /opt/spark/jars;
-  * SURVEY.md §7.5): the multi-sheet + header-preserving semantics are
-  * represented by the CSV path; a DSv2 TableProvider is the extension
-  * point if a jar appears.
+  * Excel workbooks are read by [[graft.sources.XlsxSource]], a DSv2
+  * `xlsx` source built on JDK zip + StAX (no POI jar is needed);
+  * [[Converter]] dispatches `format = "xlsx"` to it, and the
+  * multi-sheet + header-preserving semantics hold on both paths.
   */
 object Readers {
 

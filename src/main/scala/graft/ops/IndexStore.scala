@@ -13,15 +13,28 @@ import graft.Core._
   * labels are `Core.memo`-shared; but the 100 TB deployment story
   * (SCALE.md, q71/q81) is "index the corpus ONCE per snapshot, then
   * screen each day's batch against the STORED index in O(batch)".
-  * This object is that store, three channel families under one
-  * contract:
+  * This object is that store, six channel families under one
+  * contract. Each family's channels are staged in exactly one place,
+  * its staging function, which every write, append and unified fold
+  * calls:
   *
-  *  - dedup: `band_keys` (partitioned by band), `fingerprints`,
-  *    `sim_blocks` (partitioned by simhash block), an optional
-  *    broadcastable `bloom` blob, and `cluster_labels`.
-  *  - text: `postings` (term-range-partitioned, term-sorted, dl
-  *    denormalized), `doc_lens`, and a 1-row `stats` channel.
-  *  - vector: `centroids` and cid-partitioned `cells`.
+  *  - dedup ([[stageDedup]]): `band_keys` (partitioned by band),
+  *    `fingerprints`, `sim_blocks` (partitioned by simhash block) and
+  *    an optional broadcastable `bloom` blob; `cluster_labels` rides
+  *    beside it ([[writeClusters]], [[append]]).
+  *  - census ([[stageCensus]]): the governance `mix_census`.
+  *  - text ([[writeTextInto]]): `postings` (term-range-partitioned,
+  *    term-sorted, dl denormalized), `doc_lens`, and a 1-row `stats`.
+  *  - vector ([[stageVectors]]): `centroids`, cid-partitioned `cells`
+  *    and a 1-row `vec_stats`.
+  *  - media ([[stageMedia]]): block-partitioned `media_sim_blocks` and
+  *    a 1-row `media_stats`.
+  *  - projected ([[stageProjections]]): `proj_units`, `exact_vecs` and
+  *    a 1-row `proj_stats`.
+  *
+  * Every mutation is one [[transact]]ion whose manifest follows one
+  * merge rule: a full write commits `prior -- familyChannels ++ fresh`,
+  * an append extends each channel's path list ([[appendManifest]]).
   *
   * == Snapshot layout (format_version 1) ==
   *
@@ -132,10 +145,12 @@ object IndexStore {
     * the injected exception type reaches the caller unchanged). The
     * deterministic refusals all fire before staging starts (the
     * hoisted cheap-refusal discipline), so first-to-complete
-    * precedence here only ever races genuine I/O faults. */
-  private def stageConcurrently(blocks: (() => Unit)*): Unit = {
+    * precedence here only ever races genuine I/O faults.
+    *
+    * Returns the union of the blocks' staged channel entries. */
+  private def stageConcurrently(
+      blocks: (() => Map[String, Channel])*): Map[String, Channel] = {
     import java.util.concurrent._
-    if (blocks.isEmpty) return
     val seq = new java.util.concurrent.atomic.AtomicInteger()
     val pool = Executors.newFixedThreadPool(blocks.size,
       (r: Runnable) => {
@@ -143,9 +158,9 @@ object IndexStore {
         t.setDaemon(true); t
       })
     try {
-      val ecs = new ExecutorCompletionService[Unit](pool)
-      val futs = blocks.map(b =>
-        ecs.submit(new Callable[Unit] { def call(): Unit = b() }))
+      val ecs = new ExecutorCompletionService[Map[String, Channel]](pool)
+      val futs = blocks.map(b => ecs.submit(
+        new Callable[Map[String, Channel]] { def call() = b() }))
       var done = 0
       while (done < blocks.size) {
         try { ecs.take().get(); done += 1 } catch {
@@ -169,6 +184,7 @@ object IndexStore {
             throw e.getCause
         }
       }
+      futs.map(_.get()).reduce(_ ++ _)
     } finally pool.shutdown()
   }
 
@@ -493,8 +509,49 @@ object IndexStore {
       (f.isFile && f.getName.startsWith("part-")) ||
         (f.isDirectory && hasData(f.getPath))))
 
-  private def relIfData(root: String, rel: String): Seq[String] =
-    if (hasData(s"$root/$rel")) Seq(rel) else Seq.empty
+  /** The entry of the parquet channel `name` staged at `snap/name`, or
+    * none when the staged dir holds no data file (see [[hasData]]). */
+  private def staged(root: String, snap: String, name: String,
+      partitionBy: String = "", sort: String = ""): Map[String, Channel] =
+    if (hasData(s"$root/$snap/$name"))
+      Map(name -> Channel(Seq(s"$snap/$name"), partitionBy, sort))
+    else Map.empty
+
+  /** One snapshot transaction: open a staging dir, let `stage` write
+    * into it and return the new manifest, then publish that manifest
+    * against the caller's optimistic `base`. */
+  private def transact(root: String, base: Option[String])(
+      stage: String => Map[String, Channel]): Unit = {
+    val snap = beginSnap(root)
+    commitSnap(root, snap, stage(snap), base)
+  }
+
+  /** The channels of each family a full write replaces. */
+  private val DedupChannels = Seq("band_keys", "fingerprints", "sim_blocks", "bloom")
+  private val TextChannels = Seq("postings", "doc_lens", "stats")
+  private val VectorChannels = Seq("centroids", "cells", "vec_stats")
+  private val MediaChannels = Seq("media_sim_blocks", "media_stats")
+  private val ProjChannels = Seq("proj_units", "exact_vecs", "proj_stats")
+
+  /** The 1-row census channels, each merged with exact arithmetic at
+    * staging time. */
+  private val CensusChannels = Set("stats", "vec_stats", "proj_stats", "media_stats")
+
+  /** The manifest-merge rule of an append: a staged channel's fresh
+    * paths extend its prior path list (copy-free — readers union the
+    * list), the census channels and the re-aggregated `bloom` are
+    * replaced, and every unstaged channel is carried forward. A
+    * channel the prior lacks is created: a corpus whose docs produced
+    * no rows for a channel commits none, and the first append that
+    * does must add it. (A full write commits
+    * `prior -- familyChannels ++ fresh` instead.) */
+  private def appendManifest(prior: Map[String, Channel],
+      fresh: Map[String, Channel]): Map[String, Channel] =
+    prior ++ fresh.map { case (name, ch) =>
+      name -> prior.get(name)
+        .filterNot(_ => CensusChannels(name) || name == "bloom")
+        .fold(ch)(p => p.copy(paths = p.paths ++ ch.paths))
+    }
 
   // ---------------------------------------------------------------
   // dedup channel family
@@ -600,8 +657,48 @@ object IndexStore {
       }
     }
 
-  private val dedupChannels =
-    Seq("band_keys", "fingerprints", "sim_blocks", "bloom", "mix_census")
+  /** Stage the dedup family of `docs` into `snap`, the three channels
+    * concurrently: `band_keys` (partitioned by band), `fingerprints`,
+    * and `sim_blocks` — the 60-bit simhash's pigeonhole block rows,
+    * partitioned by block so a screen's (b, bv) equi-join prunes to one
+    * block partition per probe, catching term-DISTRIBUTION twins
+    * (q128's family) that shingle-set banding can miss. `bloom` builds
+    * the blob from the fingerprint frame once its channel has landed
+    * (same thread) and returns its rel path, or None to commit no blob:
+    * a write aggregates it, an append OR-merges it into the stored one. */
+  private def stageDedup(s: SparkSession, docs: DataFrame, root: String,
+      snap: String, bloom: DataFrame => Option[String]): Map[String, Channel] =
+    stageConcurrently(
+      () => {
+        Dedup.toBandRowsPublic(s, docs)
+          .write.mode(SaveMode.Overwrite).partitionBy("band")
+          .parquet(s"$root/$snap/band_keys")
+        maybeCrash("band_keys")
+        staged(root, snap, "band_keys", "band")
+      },
+      () => {
+        val fps = fingerprints(docs)
+        fps.write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/fingerprints")
+        maybeCrash("fingerprints")
+        staged(root, snap, "fingerprints") ++
+          bloom(fps).map(p => "bloom" -> Channel(Seq(p), "", ""))
+      },
+      () => {
+        Dedup.simBlocks(Dedup.simhash60(docs))
+          .write.mode(SaveMode.Overwrite).partitionBy("b")
+          .parquet(s"$root/$snap/sim_blocks")
+        maybeCrash("sim_blocks")
+        staged(root, snap, "sim_blocks", "b")
+      })
+
+  /** Stage a governance census frame ([[censusOf]]) as `snap`'s
+    * `mix_census`. */
+  private def stageCensus(root: String, snap: String,
+      census: DataFrame): Map[String, Channel] = {
+    census.write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/mix_census")
+    maybeCrash("mix_census")
+    staged(root, snap, "mix_census")
+  }
 
   /** The governance census of a batch — Selection.censusBins (source
     * × feature × bin counts over all FOUR marginals, n_chars /
@@ -684,58 +781,20 @@ object IndexStore {
     // deterministic refusal hoisted ahead of concurrent staging (the
     // writeUnified discipline): the census COLUMN check is schema-only
     // and must not race the other channels' staging threads
-    if (governed) censusRequired("write", docs)
+    val census = if (governed) Some(censusRequired("write", docs)) else None
     val (base, prior) = baseForWrite(out)
-    val snap = beginSnap(out)
-    // the four channel families derive independently from `docs`, and
-    // each write is a small job paying mostly scheduler latency, not
-    // CPU (guide §2.6 / SCALE.md "commit-latency-bound") — stage them
-    // concurrently like writeUnified; the commit stays single + last.
-    // Only the bloom chains after its own fingerprints write (one
-    // thread, same block).
-    var censusRel: Option[(String, Channel)] = None
-    var bloomRel: Option[String] = None
-    stageConcurrently(
-      () => {
-        Dedup.toBandRowsPublic(s, docs)
-          .write.mode(SaveMode.Overwrite).partitionBy("band")
-          .parquet(s"$out/$snap/band_keys")
-        maybeCrash("band_keys")
-      },
-      () => {
-        val fps = fingerprints(docs)
-        fps.write.mode(SaveMode.Overwrite).parquet(s"$out/$snap/fingerprints")
-        maybeCrash("fingerprints")
-        bloomRel = writeBloomInto(s, fps, out, snap)
-      },
-      // simhash channel: the 60-bit fingerprint's pigeonhole block rows,
-      // partitioned by block so a screen's (b, bv) equi-join prunes to
-      // one block partition per probe — catches term-DISTRIBUTION twins
-      // (q128's family) that shingle-set banding can miss
-      () => {
-        Dedup.simBlocks(Dedup.simhash60(docs))
-          .write.mode(SaveMode.Overwrite).partitionBy("b")
-          .parquet(s"$out/$snap/sim_blocks")
-        maybeCrash("sim_blocks")
-      },
-      // a governed write initializes the census; every later fold must
-      // extend it (the append refuses column-less batches rather than
-      // silently holing the governance timeline)
-      () => censusRel = if (governed) Some {
-        val c = censusRequired("write", docs)
-        c.write.mode(SaveMode.Overwrite).parquet(s"$out/$snap/mix_census")
-        maybeCrash("mix_census")
-        "mix_census" -> Channel(relIfData(out, s"$snap/mix_census"), "", "")
-      } else None)
-    // data-less parquet dirs (an empty corpus write) are not committed
-    // — a later read of a part-file-less path cannot infer a schema
-    commitSnap(out, snap, prior -- dedupChannels ++ (Map(
-      "band_keys" -> Channel(relIfData(out, s"$snap/band_keys"), "band", ""),
-      "fingerprints" -> Channel(relIfData(out, s"$snap/fingerprints"), "", ""),
-      "sim_blocks" -> Channel(relIfData(out, s"$snap/sim_blocks"), "b", "")) ++
-      censusRel)
-      .filter(_._2.paths.nonEmpty) ++
-      bloomRel.map(p => "bloom" -> Channel(Seq(p), "", "")), base)
+    // the dedup channels and the census derive independently from
+    // `docs`, and each write is a small job paying mostly scheduler
+    // latency, not CPU (guide §2.6 / SCALE.md "commit-latency-bound") —
+    // stage them concurrently like writeUnified; the commit stays
+    // single + last. A governed write initializes the census; every
+    // later fold must extend it (the append refuses column-less batches
+    // rather than silently holing the governance timeline).
+    transact(out, base) { snap =>
+      prior -- DedupChannels - "mix_census" ++ stageConcurrently(
+        () => stageDedup(s, docs, out, snap, writeBloomInto(s, _, out, snap)),
+        () => census.map(stageCensus(out, snap, _)).getOrElse(Map.empty))
+    }
   }
 
   /** q71's decisions for `batch`, from the stored index only:
@@ -840,16 +899,15 @@ object IndexStore {
     require(!docs.isEmpty,
       "writeClusters: empty docs frame — see write()")
     val (base, prior) = baseForWrite(out)
-    val snap = beginSnap(out)
-    val labels = Dedup.clusterLabelsFor(s, docs)
-    try labels.write.mode(SaveMode.Overwrite).parquet(s"$out/$snap/cluster_labels")
-    // the CC run's final-round checkpoint is only needed until the
-    // labels land in parquet
-    finally releaseCheckpoint(labels)
-    maybeCrash("cluster_labels")
-    commitSnap(out, snap,
-      prior + ("cluster_labels" -> Channel(Seq(s"$snap/cluster_labels"), "", "")),
-      base)
+    transact(out, base) { snap =>
+      val labels = Dedup.clusterLabelsFor(s, docs)
+      try labels.write.mode(SaveMode.Overwrite).parquet(s"$out/$snap/cluster_labels")
+      // the CC run's final-round checkpoint is only needed until the
+      // labels land in parquet
+      finally releaseCheckpoint(labels)
+      maybeCrash("cluster_labels")
+      prior + ("cluster_labels" -> Channel(Seq(s"$snap/cluster_labels"), "", ""))
+    }
   }
 
   /** Merge an incoming batch into the persisted clustering WITHOUT
@@ -1016,7 +1074,6 @@ object IndexStore {
       // race) must not strand blocks across retries, and after a
       // successful commit the parquet delta holds the rows
       try {
-      val snap = beginSnap(indexDir)
       // governed stores extend the census every fold (format-guarded
       // at the top of appendFrom, before any staging); the batch's bin
       // counts are additive, so readers just sum across the path list.
@@ -1028,64 +1085,25 @@ object IndexStore {
       // the channel deltas derive independently from `batch`; each is
       // a small job paying mostly scheduler latency (guide §2.6 /
       // SCALE.md "commit-latency-bound") — stage concurrently like
-      // writeUnified. The bloom merge chains after its own
-      // fingerprints write (its rebuild arm reads the staged path).
-      var bloomRel: Option[String] = None
-      stageConcurrently(
-        () => {
-          Dedup.toBandRowsPublic(s, batch)
-            .write.mode(SaveMode.Overwrite).partitionBy("band")
-            .parquet(s"$indexDir/$snap/band_keys")
-          maybeCrash("band_keys")
-        },
-        () => {
-          fingerprints(batch)
-            .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$snap/fingerprints")
-          maybeCrash("fingerprints")
-          val fpPaths = prior.get("fingerprints").map(_.paths).getOrElse(Seq.empty) ++
-            relIfData(indexDir, s"$snap/fingerprints")
-          def mergedFps() = s.read.parquet(fpPaths.map(p => s"$indexDir/$p"): _*)
-            .select(col("fp"))
-          bloomRel = mergeBloomInto(s, indexDir, prior, fingerprints(batch),
-            batchN, () => mergedFps(), snap)
-        },
-        () => {
-          Dedup.simBlocks(Dedup.simhash60(batch))
-            .write.mode(SaveMode.Overwrite).partitionBy("b")
-            .parquet(s"$indexDir/$snap/sim_blocks")
-          maybeCrash("sim_blocks")
-        },
-        () => {
-          labelDelta.foreach(_.write.mode(SaveMode.Overwrite)
-            .parquet(s"$indexDir/$snap/cluster_labels"))
-          maybeCrash("cluster_labels")
-        },
-        () => {
-          census.foreach(_.write.mode(SaveMode.Overwrite)
-            .parquet(s"$indexDir/$snap/mix_census"))
-          maybeCrash("mix_census")
-        })
-      // prior.get, not prior(): a corpus whose docs produced no band /
-      // simhash rows has those channels dropped at write, and the
-      // first append that DOES produce them must create the entries
-      def appended(name: String, rel: String, partBy: String) = {
-        val fresh = relIfData(indexDir, rel)
-        name -> prior.get(name)
-          .map(ch => ch.copy(paths = ch.paths ++ fresh))
-          .getOrElse(Channel(fresh, partBy, ""))
+      // writeUnified. The bloom is replaced (or dropped past the gate):
+      // its merge chains after its own fingerprints write, and its
+      // rebuild arm reads the staged path.
+      transact(indexDir, base) { snap =>
+        val mergedFps = () => s.read.parquet(
+          (prior.get("fingerprints").map(_.paths).getOrElse(Seq.empty) ++
+            Seq(s"$snap/fingerprints").filter(p => hasData(s"$indexDir/$p")))
+            .map(p => s"$indexDir/$p"): _*).select(col("fp"))
+        appendManifest(prior - "bloom", stageConcurrently(
+          () => stageDedup(s, batch, indexDir, snap, fps => mergeBloomInto(
+            s, indexDir, prior, fps, batchN, mergedFps, snap)),
+          () => labelDelta.map { d =>
+            d.write.mode(SaveMode.Overwrite)
+              .parquet(s"$indexDir/$snap/cluster_labels")
+            maybeCrash("cluster_labels")
+            staged(indexDir, snap, "cluster_labels")
+          }.getOrElse(Map.empty),
+          () => census.map(stageCensus(indexDir, snap, _)).getOrElse(Map.empty)))
       }
-      commitSnap(indexDir, snap, prior - "bloom" ++ Seq(
-        appended("band_keys", s"$snap/band_keys", "band"),
-        appended("fingerprints", s"$snap/fingerprints", ""),
-        appended("sim_blocks", s"$snap/sim_blocks", "b"))
-        .filter(_._2.paths.nonEmpty).toMap ++
-        labelDelta.map(_ => appended("cluster_labels",
-          s"$snap/cluster_labels", "")._2)
-          .map("cluster_labels" -> _) ++
-        census.map(_ => appended("mix_census",
-          s"$snap/mix_census", "")._2)
-          .map("mix_census" -> _) ++
-        bloomRel.map(p => "bloom" -> Channel(Seq(p), "", "")), base)
       } finally labelDelta.foreach(releaseCheckpoint)
     }
   }
@@ -1398,39 +1416,44 @@ object IndexStore {
         "through an ungated fold; re-baselining now would launder that " +
         "drift into the new reference. Rebuild or re-fold the store " +
         "with the gate instead")
-    val snap = beginSnap(root)
-    stored.filter(col("source") =!= anchor)
-      .unionByName(Selection.censusBins(newAnchorDocs))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/mix_census")
-    maybeCrash("mix_census")
-    commitSnap(root, snap, prior + ("mix_census" ->
-      Channel(relIfData(root, s"$snap/mix_census"), "", "")), base)
+    transact(root, base) { snap =>
+      prior - "mix_census" ++ stageCensus(root, snap,
+        stored.filter(col("source") =!= anchor)
+          .unionByName(Selection.censusBins(newAnchorDocs)))
+    }
   }
 
   // ---------------------------------------------------------------
   // media channel family
   // ---------------------------------------------------------------
 
-  /** Stage the media family's 1-row census (`media_stats`:
-    * n_payloads, n_blocks) into `snap` — the stats/vec_stats pattern
-    * (VERDICT r14 next #5): doc/media coverage divergence (the q165
-    * lockstep) was invisible to [[describeStore]]'s facts column
-    * without running the full q165 recompute; now it is a 1-row read
-    * in every describe/At/Timeline row. n_payloads counts the stored
-    * FINGERPRINT rows (sub-window payloads never land, matching the
-    * channel's own semantics); n_blocks the physical block rows —
-    * exactly 4 per fingerprint by the pigeonhole construction, so the
-    * 4:1 ratio is the integrity invariant a channel/census mismatch
-    * would expose. Merged per append with exact long arithmetic,
-    * inside the SAME commit as the media_sim_blocks delta. */
-  private def writeMediaStats(s: SparkSession, root: String, snap: String,
-      nPayloads: Long, nBlocks: Long): Map[String, Channel] = {
+  /** Stage the media family of fingerprinted payloads `printable` into
+    * `snap`: block-partitioned `media_sim_blocks` and the 1-row
+    * `media_stats` census (n_payloads, n_blocks), extended from the
+    * prior store's counts `prior` with exact long arithmetic — the
+    * stats/vec_stats pattern (VERDICT r14 next #5): doc/media coverage
+    * divergence (the q165 lockstep) was invisible to
+    * [[describeStore]]'s facts column without running the full q165
+    * recompute; now it is a 1-row read in every describe/At/Timeline
+    * row. n_payloads counts the stored FINGERPRINT rows (sub-window
+    * payloads never land, matching the channel's own semantics);
+    * n_blocks the physical block rows — exactly 4 per fingerprint by
+    * the pigeonhole construction, so the 4:1 ratio is the integrity
+    * invariant a channel/census mismatch would expose. */
+  private def stageMedia(s: SparkSession, root: String, snap: String,
+      printable: DataFrame, prior: (Long, Long)): Map[String, Channel] = {
     import s.implicits._
-    Seq((nPayloads, nBlocks)).toDF("n_payloads", "n_blocks")
+    val batchN = printable.count()
+    Dedup.simBlocks(printable)
+      .write.mode(SaveMode.Overwrite).partitionBy("b")
+      .parquet(s"$root/$snap/media_sim_blocks")
+    maybeCrash("media_sim_blocks")
+    Seq((prior._1 + batchN, prior._2 + 4 * batchN)).toDF("n_payloads", "n_blocks")
       .coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(s"$root/$snap/media_stats")
     maybeCrash("media_stats")
-    Map("media_stats" -> Channel(Seq(s"$snap/media_stats"), "", ""))
+    staged(root, snap, "media_sim_blocks", "b") +
+      ("media_stats" -> Channel(Seq(s"$snap/media_stats"), "", ""))
   }
 
   /** The stored media census, BACKFILLED once for a pre-media_stats
@@ -1468,16 +1491,9 @@ object IndexStore {
           "payload shorter than one byte-shingle window) — a channel-less " +
           "store would wedge every later append/screen; initialize with " +
           "at least one fingerprintable payload")
-      val snap = beginSnap(out)
-      val batchN = printable.count()
-      Dedup.simBlocks(printable)
-        .write.mode(SaveMode.Overwrite).partitionBy("b")
-        .parquet(s"$out/$snap/media_sim_blocks")
-      maybeCrash("media_sim_blocks")
-      commitSnap(out, snap, (prior + ("media_sim_blocks" ->
-        Channel(relIfData(out, s"$snap/media_sim_blocks"), "b", "")))
-        .filter(_._2.paths.nonEmpty) ++
-        writeMediaStats(s, out, snap, batchN, 4 * batchN), base)
+      transact(out, base) { snap =>
+        prior -- MediaChannels ++ stageMedia(s, out, snap, printable, (0L, 0L))
+      }
     } finally releaseCheckpoint(printable)
   }
 
@@ -1495,20 +1511,11 @@ object IndexStore {
     try {
       if (appendGuard("appendMedia", printable, "doc_id",
           channelFrom(s, indexDir, prior, "media_sim_blocks"),
-          fingerprint = Some("sim")).isDefined) {
-        val snap = beginSnap(indexDir)
-        val (pn, pb) = mediaStatsOf(s, indexDir, prior)
-        val batchN = printable.count()
-        Dedup.simBlocks(printable)
-          .write.mode(SaveMode.Overwrite).partitionBy("b")
-          .parquet(s"$indexDir/$snap/media_sim_blocks")
-        maybeCrash("media_sim_blocks")
-        commitSnap(indexDir, snap, prior + ("media_sim_blocks" ->
-          prior("media_sim_blocks").copy(paths = prior("media_sim_blocks").paths ++
-            relIfData(indexDir, s"$snap/media_sim_blocks"))) ++
-          writeMediaStats(s, indexDir, snap, pn + batchN, pb + 4 * batchN),
-          base)
-      }
+          fingerprint = Some("sim")).isDefined)
+        transact(indexDir, base) { snap =>
+          appendManifest(prior, stageMedia(s, indexDir, snap, printable,
+            mediaStatsOf(s, indexDir, prior)))
+        }
     } finally releaseCheckpoint(printable)
   }
 
@@ -1574,16 +1581,9 @@ object IndexStore {
   def writeText(s: SparkSession, docs: DataFrame, out: String,
       preTok: Option[DataFrame] = None): Unit = {
     val (base, prior) = baseForWrite(out)
-    val snap = beginSnap(out)
-    val chs = writeTextInto(s, docs, out, snap, None, preTok)
-    // an EMPTY doc frame (a streaming bootstrap's first micro-batch
-    // can be empty) must not commit part-file-less parquet paths — a
-    // later read of such a path cannot infer a schema and the store
-    // would be permanently wedged; the stats row (n=0) still commits
-    commitSnap(out, snap, prior -- Seq("postings", "doc_lens", "stats") ++
-      chs.filter { case (n, c) =>
-        n == "stats" || c.paths.exists(p => hasData(s"$out/$p")) },
-      base)
+    transact(out, base) { snap =>
+      prior -- TextChannels ++ writeTextInto(s, docs, out, snap, None, preTok)
+    }
   }
 
   /** Disjointness guard shared by the append families. Returns true
@@ -1695,28 +1695,22 @@ object IndexStore {
     else if (appendGuard("appendText", batch, "doc_id",
         channelFrom(s, indexDir, prior, "doc_lens")).isDefined) {
       val st = channelFrom(s, indexDir, prior, "stats").head()
-      val snap = beginSnap(indexDir)
-      val chs = writeTextInto(s, batch, indexDir, snap,
-        Some((st.getAs[Long]("n_docs"), st.getAs[Long]("sum_dl"))), preTok)
-      // prior.get, not prior(): a degenerate bootstrap (all-letterless
-      // opening batch) commits doc_lens+stats but drops the data-less
-      // postings channel, and the first real append must CREATE it
-      // rather than crash on the missing key
-      def appended(name: String) = {
-        val fresh = chs(name).paths.flatMap(relIfData(indexDir, _))
-        name -> prior.get(name)
-          .map(ch => ch.copy(paths = ch.paths ++ fresh))
-          .getOrElse(chs(name).copy(paths = fresh))
+      // a degenerate bootstrap (all-letterless opening batch) commits
+      // doc_lens+stats but no data-less postings channel, and the first
+      // real append creates it (the appendManifest rule)
+      transact(indexDir, base) { snap =>
+        appendManifest(prior, writeTextInto(s, batch, indexDir, snap,
+          Some((st.getAs[Long]("n_docs"), st.getAs[Long]("sum_dl"))), preTok))
       }
-      commitSnap(indexDir, snap,
-        prior ++ Seq(appended("postings"), appended("doc_lens"))
-          .filter(_._2.paths.nonEmpty).toMap +
-          ("stats" -> chs("stats")), base)
     }
   }
 
   /** Stage the three text channels of one doc frame into `snap`;
-    * returns their (single-path) channel entries. One tokenization
+    * returns their (single-path) channel entries, minus a data-less
+    * `postings`/`doc_lens` dir — an EMPTY doc frame (a streaming
+    * bootstrap's first micro-batch can be empty) must not commit
+    * part-file-less parquet paths, which a later read cannot infer a
+    * schema from; the stats row (n=0) still commits. One tokenization
     * pass feeds all three (the postings plan re-tokenizes the corpus
     * per consumer otherwise — a measured double scan at store-write
     * time). `doc_lens` is ID-COMPLETE over the input docs (a
@@ -1784,6 +1778,7 @@ object IndexStore {
             .sortWithinPartitions(col("term"), col("doc_id"))
             .write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/postings")
           maybeCrash("postings")
+          staged(root, snap, "postings", sort = "term,doc_id")
         },
         () => {
           docLens.write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/doc_lens")
@@ -1802,11 +1797,9 @@ object IndexStore {
           import s.implicits._
           Seq((n, sd)).toDF("n_docs", "sum_dl")
             .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/stats")
+          staged(root, snap, "doc_lens") +
+            ("stats" -> Channel(Seq(s"$snap/stats"), "", ""))
         })
-      Map(
-        "postings" -> Channel(Seq(s"$snap/postings"), "", "term,doc_id"),
-        "doc_lens" -> Channel(Seq(s"$snap/doc_lens"), "", ""),
-        "stats" -> Channel(Seq(s"$snap/stats"), "", ""))
     } finally {
       // BLOCKING unpersist: the async default returns while tens of GB
       // of cached posting blocks still drain, and that churn taxed the
@@ -1959,44 +1952,59 @@ object IndexStore {
         "store would wedge every later append/lookup; train and write a " +
         "non-empty model")
     val (base, prior) = baseForWrite(out)
-    val snap = beginSnap(out)
-    // the three independent pieces (tiny centroids table, the heavy
-    // cid-partitioned cells staging, the counts feeding the 1-row
-    // census) overlap on the scheduler (r16 staging discipline)
-    var statsChs: Map[String, Channel] = null
-    stageConcurrently(
-      () => {
-        centroids.write.mode(SaveMode.Overwrite).parquet(s"$out/$snap/centroids")
-        maybeCrash("centroids")
-      },
-      () => {
-        stageCells(assignCells(vectors, centroids), s"$out/$snap/cells")
-        maybeCrash("cells")
-      },
-      () => {
-        val n = vectors.count()
-        statsChs = writeVecStats(s, out, snap, n, centroids.count(), n)
-      })
-    commitSnap(out, snap, prior -- Seq("centroids", "cells", "vec_stats") ++ (Map(
-      "centroids" -> Channel(relIfData(out, s"$snap/centroids"), "", ""),
-      "cells" -> Channel(relIfData(out, s"$snap/cells"), "cid", ""))
-      .filter(_._2.paths.nonEmpty)) ++ statsChs, base)
+    transact(out, base) { snap =>
+      prior -- VectorChannels ++ stageVectors(s, out, snap, vectors, centroids, None)
+    }
   }
 
-  /** Stage the vector family's 1-row census (`vec_stats`: n_vecs, k,
-    * n_at_train) into `snap` — the stored state [[retrainIfDrifted]]'s
-    * growth check reads (the text family's `stats` pattern): n_vecs is
-    * merge-updated per append with exact long arithmetic; k and
-    * n_at_train are fixed by the last train, so "has the corpus
-    * outgrown the model" is a 1-row read, never a corpus count at
-    * gate time. */
-  private def writeVecStats(s: SparkSession, root: String, snap: String,
-      nVecs: Long, k: Long, nAtTrain: Long): Map[String, Channel] = {
-    import s.implicits._
-    Seq((nVecs, k, nAtTrain)).toDF("n_vecs", "k", "n_at_train")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/vec_stats")
-    Map("vec_stats" -> Channel(Seq(s"$snap/vec_stats"), "", ""))
-  }
+  /** Stage the vector family into `snap`, its three pieces overlapping
+    * on the scheduler (r16 staging discipline):
+    *
+    *  - `centroids`: the model `cents`, staged by a full write
+    *    (`fold = None`); a fold (`fold = Some((prior, batchN))`)
+    *    assigns under the stored model and leaves its channel alone.
+    *  - `cells`: `vectors` assigned under `cents`, cid-partitioned.
+    *  - `vec_stats`: the 1-row census (n_vecs, k, n_at_train) — the
+    *    stored state [[retrainIfDrifted]]'s growth check reads (the
+    *    text family's `stats` pattern). A full write counts it; a fold
+    *    adds its `batchN` new ids to the prior n_vecs with exact long
+    *    arithmetic (a pre-vec_stats store backfills its census once,
+    *    from the channels the transaction already resolved). k and
+    *    n_at_train are fixed by the last train, so "has the corpus
+    *    outgrown the model" is a 1-row read, never a corpus count at
+    *    gate time. */
+  private def stageVectors(s: SparkSession, root: String, snap: String,
+      vectors: DataFrame, cents: DataFrame,
+      fold: Option[(Map[String, Channel], Long)]): Map[String, Channel] =
+    stageConcurrently(
+      () => if (fold.isDefined) Map.empty else {
+        cents.write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/centroids")
+        maybeCrash("centroids")
+        staged(root, snap, "centroids")
+      },
+      () => {
+        stageCells(assignCells(vectors, cents), s"$root/$snap/cells")
+        maybeCrash("cells")
+        staged(root, snap, "cells", "cid")
+      },
+      () => {
+        import s.implicits._
+        val (n, k, nAtTrain) = fold match {
+          case None =>
+            val n = vectors.count()
+            (n, cents.count(), n)
+          case Some((prior, batchN)) if prior.contains("vec_stats") =>
+            val st = channelFrom(s, root, prior, "vec_stats").head()
+            (st.getAs[Long]("n_vecs") + batchN, st.getAs[Long]("k"),
+              st.getAs[Long]("n_at_train"))
+          case Some((prior, batchN)) =>
+            val n0 = channelFrom(s, root, prior, "cells").count()
+            (n0 + batchN, channelFrom(s, root, prior, "centroids").count(), n0)
+        }
+        Seq((n, k, nAtTrain)).toDF("n_vecs", "k", "n_at_train")
+          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/vec_stats")
+        Map("vec_stats" -> Channel(Seq(s"$snap/vec_stats"), "", ""))
+      })
 
   /** O(batch) append: assign under the stored centroids, stage into
     * the same cid-partitioned layout. Batch vec_ids must be disjoint
@@ -2041,39 +2049,17 @@ object IndexStore {
     appendGuard("appendVectors", batch, "vec_id",
         channelFrom(s, indexDir, prior, "cells")).foreach { batchN =>
       val cents = channelFrom(s, indexDir, prior, "centroids")
-      val snap = beginSnap(indexDir)
-      // cells delta, projected deltas and the 1-row census read are
+      // the vector family's deltas and the projected deltas are
       // independent (each reads only the caller-held `prior` capture
-      // and writes only its own staging subdirectory) — overlap them
+      // and writes only its own staging subdirectories) — overlap them
       // (r16 staging discipline); the commit stays single and last
-      var statsTriple: (Long, Long, Long) = null
-      var projChs: Option[Map[String, Channel]] = None
-      stageConcurrently(
-        () => {
-          stageCells(assignCells(batch, cents), s"$indexDir/$snap/cells")
-          maybeCrash("cells")
-        },
-        // vec_stats merge: exact long arithmetic over the guard's count
-        // (a pre-vec_stats store backfills its census once, from the
-        // channels this transaction already resolved)
-        () => statsTriple = prior.get("vec_stats") match {
-          case Some(_) =>
-            val st = channelFrom(s, indexDir, prior, "vec_stats").head()
-            (st.getAs[Long]("n_vecs"), st.getAs[Long]("k"),
-              st.getAs[Long]("n_at_train"))
-          case None =>
-            val n0 = channelFrom(s, indexDir, prior, "cells").count()
-            (n0, channelFrom(s, indexDir, prior, "centroids").count(), n0)
-        },
-        () => projChs = raw.map(r =>
-          appendProjectionsInto(s, indexDir, "appendVectors", prior, snap,
-            batch, r)))
-      val (pn, pk, pt) = statsTriple
-      commitSnap(indexDir, snap, prior + ("cells" ->
-        prior("cells").copy(paths =
-          prior("cells").paths ++ relIfData(indexDir, s"$snap/cells"))) ++
-        writeVecStats(s, indexDir, snap, pn + batchN, pk, pt) ++
-        projChs.getOrElse(Map.empty), base)
+      transact(indexDir, base) { snap =>
+        appendManifest(prior, stageConcurrently(
+          () => stageVectors(s, indexDir, snap, batch, cents,
+            Some((prior, batchN))),
+          () => raw.map(appendProjectionsInto(s, indexDir, "appendVectors",
+            prior, snap, batch, _)).getOrElse(Map.empty)))
+      }
     }
   }
 
@@ -2086,7 +2072,7 @@ object IndexStore {
     * [[projectedAnnFromStore]] identity gate, applied at write time —
     * extending a foreign derivation would mix two coarse geometries in
     * one channel), project with the stored (k), and return the
-    * appended channel entries + merged proj_stats. */
+    * staged channel entries + merged proj_stats. */
   private def appendProjectionsInto(s: SparkSession, indexDir: String,
       op: String, prior: Map[String, Channel], snap: String,
       batch: DataFrame, raw: DataFrame): Map[String, Channel] = {
@@ -2117,16 +2103,7 @@ object IndexStore {
     require(bk == pk && bd == pd,
       s"$op: batch projects to (k=$bk, d=$bd) but the store's " +
         s"identity is (k=$pk, d=$pd) — embedding width changed mid-corpus")
-    units.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$snap/proj_units")
-    maybeCrash("proj_units")
-    fine.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$snap/exact_vecs")
-    maybeCrash("exact_vecs")
-    def appended(name: String) = {
-      val fresh = relIfData(indexDir, s"$snap/$name")
-      name -> prior(name).copy(paths = prior(name).paths ++ fresh)
-    }
-    Map(appended("proj_units"), appended("exact_vecs")) ++
-      writeProjStats(s, indexDir, snap, pk, pd, pn + fineN)
+    stageProjections(s, indexDir, snap, units, Some(fine), pk, pd, pn + fineN)
   }
 
   /** Refresh the store's IVF model from its own cells — the
@@ -2158,18 +2135,8 @@ object IndexStore {
       // lloydTrain returns an already-checkpointed model frame — no
       // second checkpoint here, just ownership of the release
       val cents = Similarity.lloydTrain(stored.select(col("vec_id"), col("unit")))
-      try {
-        val snap = beginSnap(indexDir)
-        cents.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$snap/centroids")
-        maybeCrash("centroids")
-        stageCells(assignCells(stored, cents), s"$indexDir/$snap/cells")
-        maybeCrash("cells")
-        commitSnap(indexDir, snap, prior -- Seq("centroids", "cells", "vec_stats") ++ Map(
-          "centroids" -> Channel(Seq(s"$snap/centroids"), "", ""),
-          "cells" -> Channel(Seq(s"$snap/cells"), "cid", "")) ++ locally {
-            val n = stored.count()
-            writeVecStats(s, indexDir, snap, n, cents.count(), n)
-          }, base)
+      try transact(indexDir, base) { snap =>
+        prior -- VectorChannels ++ stageVectors(s, indexDir, snap, stored, cents, None)
       } finally releaseCheckpoint(cents)
     } finally releaseCheckpoint(stored)
   }
@@ -2228,8 +2195,7 @@ object IndexStore {
     * results). */
   def compact(s: SparkSession, root: String): Unit = {
     val (base, prior) = baseRequired(root)
-    val snap = beginSnap(root)
-    commitSnap(root, snap, rewriteChannelsInto(s, root, prior, root, snap), base)
+    transact(root, base)(rewriteChannelsInto(s, root, prior, root, _))
   }
 
   /** Rewrite every channel of manifest `m` (resolved against
@@ -2301,9 +2267,7 @@ object IndexStore {
     require(currentSnapOpt(dest).isEmpty,
       s"cloneStoreAt: $dest is already an index store — a publish " +
         "target is born, not replaced; clone into a fresh root")
-    val destSnap = beginSnap(dest)
-    commitSnap(dest, destSnap,
-      rewriteChannelsInto(s, root, m, dest, destSnap), None)
+    transact(dest, None)(rewriteChannelsInto(s, root, m, dest, _))
   }
 
   /** Delete snapshot directories unreachable from the last `retain`
@@ -2527,9 +2491,12 @@ object IndexStore {
     * without it. The checkpoint materializes the assignment once
     * (MEMORY_AND_DISK, spilling for corpus-sized bootstraps — the same
     * order of I/O as the exchange it feeds), and is released on every
-    * exit. */
+    * exit. It is LAZY: the sampling pass materializes it, so no job
+    * runs before `a` is owned by the `finally` — an eager checkpoint
+    * interrupted mid-job by a failing sibling staging block (see
+    * [[stageConcurrently]]) would persist blocks nothing releases. */
   private def stageCells(assigned: DataFrame, dest: String): Unit = {
-    val a = assigned.localCheckpoint()
+    val a = assigned.localCheckpoint(eager = false)
     try a.repartitionByRange(col("cid"), col("vec_id"))
       .write.mode(SaveMode.Overwrite).partitionBy("cid")
       .parquet(dest)
@@ -2650,10 +2617,9 @@ object IndexStore {
       if (f.isFile) { if (!f.getName.startsWith("_") &&
         !f.getName.startsWith(".") && !f.getName.endsWith(".crc")) 1L else 0L }
       else Option(f.listFiles()).getOrElse(Array.empty).map(dataFiles).sum
-    val censusChannels = Set("stats", "vec_stats", "proj_stats", "media_stats")
     m.toSeq.sortBy(_._1).map { case (name, ch) =>
       val files = ch.paths.map(p => new java.io.File(s"$root/$p"))
-      val facts = if (censusChannels(name)) {
+      val facts = if (CensusChannels(name)) {
         val r = channelFrom(s, root, m, name).head()
         r.schema.fieldNames.map(f => s"$f=${r.getAs[Any](f)}").mkString(" ")
       } else ""
@@ -2734,11 +2700,11 @@ object IndexStore {
     // concurrent staging like the rest (ADVICE r15): under
     // first-failure-to-complete semantics a require left inside a
     // staged block makes refusal precedence a thread race. The census
-    // COLUMN check is free (schema-only — censusRequired itself runs
-    // again inside the census block on the same frame); the media
-    // fingerprintability check computes the checkpointed fingerprints
-    // the staging block then reuses, so the hoist costs nothing extra.
-    if (governed) censusRequired("writeUnified", docs)
+    // COLUMN check is free (schema-only; the census block stages the
+    // frame it returns); the media fingerprintability check computes
+    // the checkpointed fingerprints the staging block then reuses, so
+    // the hoist costs nothing extra.
+    val census = if (governed) Some(censusRequired("writeUnified", docs)) else None
     val mediaPrintable = payloads.map { p =>
       val printable = Dedup.simhash60Bytes(p).localCheckpoint()
       require(!printable.isEmpty,
@@ -2751,69 +2717,10 @@ object IndexStore {
     }
     try {
     val (base, prior) = baseForWrite(out)
-    val snap = beginSnap(out)
     // the independent channel families stage CONCURRENTLY into their
     // own subdirectories of the one snapshot (VERDICT r13 next #4 —
-    // see [[stageConcurrently]]); the commit below stays single + last
-    var tchs: Map[String, Channel] = null
-    var censusRel: Option[(String, Channel)] = None
-    var projChs: Option[Map[String, Channel]] = None
-    var mediaChs: Option[Map[String, Channel]] = None
-    var n = 0L
-    stageConcurrently(
-      () => tchs = writeTextInto(s, docs, out, snap, None, preTok),
-      () => {
-        centroids.write.mode(SaveMode.Overwrite)
-          .parquet(s"$out/$snap/centroids")
-        maybeCrash("centroids")
-      },
-      () => {
-        stageCells(assignCells(vectors, centroids), s"$out/$snap/cells")
-        maybeCrash("cells")
-      },
-      () => censusRel = if (governed) Some {
-        val c = censusRequired("writeUnified", docs)
-        c.write.mode(SaveMode.Overwrite).parquet(s"$out/$snap/mix_census")
-        maybeCrash("mix_census")
-        "mix_census" -> Channel(relIfData(out, s"$snap/mix_census"), "", "")
-      } else None,
-      // optional projected-channel bootstrap: the serving pair lands in
-      // the SAME commit as the families it must cover, so no version
-      // ever exists where the IVF arm serves and the projected arm is
-      // absent-then-backfilled (and the version axis the q157 oracle
-      // replays stays the ingest timeline, not a channel-add commit)
-      () => projChs = proj.map { case (units, fineVecs) =>
-        val (k, d, fineN) = projIdentity.get
-        units.select(col("vec_id"), col("label"), col("punit"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$out/$snap/proj_units")
-        maybeCrash("proj_units")
-        fineVecs.select(col("vec_id"), col("embd"), col("nsq"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$out/$snap/exact_vecs")
-        maybeCrash("exact_vecs")
-        Map(
-          "proj_units" -> Channel(relIfData(out, s"$snap/proj_units"), "", ""),
-          "exact_vecs" -> Channel(relIfData(out, s"$snap/exact_vecs"), "", ""))
-          .filter(_._2.paths.nonEmpty) ++
-          writeProjStats(s, out, snap, k, d, fineN)
-      },
-      // media-family bootstrap: the payload fingerprints land in the SAME
-      // commit as the text and vector families (the [[writeMedia]]
-      // staging, unified id space); the all-unfingerprintable refusal
-      // fired at the top with the other deterministic refusals, and
-      // this block reuses its checkpointed fingerprints
-      () => mediaChs = mediaPrintable.map { printable =>
-        val batchN = printable.count()
-        Dedup.simBlocks(printable)
-          .write.mode(SaveMode.Overwrite).partitionBy("b")
-          .parquet(s"$out/$snap/media_sim_blocks")
-        maybeCrash("media_sim_blocks")
-        Map("media_sim_blocks" ->
-          Channel(relIfData(out, s"$snap/media_sim_blocks"), "b", ""))
-          .filter(_._2.paths.nonEmpty) ++
-          writeMediaStats(s, out, snap, batchN, 4 * batchN)
-      },
-      () => n = vectors.count())
-    // the proj-family channels are ALWAYS dropped from the prior on a
+    // see [[stageConcurrently]]); the commit stays single + last.
+    // The proj-family channels are ALWAYS dropped from the prior on a
     // full rewrite, proj passed or not (ADVICE r11): they describe the
     // corpus being replaced, and carrying them forward under proj=None
     // would let the count-based coverage gate pass by coincidence
@@ -2822,22 +2729,28 @@ object IndexStore {
     // with no projected route — loud at read time (projectedAnnFromStore
     // refuses a proj_stats-less store by name); re-run writeProjections
     // or pass proj to restore it.
-    commitSnap(out, snap,
-      prior -- Seq("postings", "doc_lens", "stats",
-        "centroids", "cells", "vec_stats", "mix_census",
-        "proj_units", "exact_vecs", "proj_stats",
-        "media_sim_blocks", "media_stats") ++
-        tchs.filter { case (nm, c) =>
-          nm == "stats" || c.paths.exists(p => hasData(s"$out/$p")) } ++
-        Map(
-          "centroids" -> Channel(relIfData(out, s"$snap/centroids"), "", ""),
-          "cells" -> Channel(relIfData(out, s"$snap/cells"), "cid", ""))
-          .filter(_._2.paths.nonEmpty) ++
-        censusRel.filter(_._2.paths.nonEmpty) ++
-        writeVecStats(s, out, snap, n, centroids.count(), n) ++
-        projChs.getOrElse(Map.empty) ++
-        mediaChs.getOrElse(Map.empty),
-      base)
+    transact(out, base) { snap =>
+      prior -- TextChannels -- VectorChannels - "mix_census" --
+        ProjChannels -- MediaChannels ++ stageConcurrently(
+        () => writeTextInto(s, docs, out, snap, None, preTok),
+        () => stageVectors(s, out, snap, vectors, centroids, None),
+        () => census.map(stageCensus(out, snap, _)).getOrElse(Map.empty),
+        // optional projected-channel bootstrap: the serving pair lands in
+        // the SAME commit as the families it must cover, so no version
+        // ever exists where the IVF arm serves and the projected arm is
+        // absent-then-backfilled (and the version axis the q157 oracle
+        // replays stays the ingest timeline, not a channel-add commit)
+        () => proj.zip(projIdentity).map { case ((units, fineVecs), (k, d, fineN)) =>
+          stageProjections(s, out, snap, units, Some(fineVecs), k, d, fineN)
+        }.getOrElse(Map.empty),
+        // media-family bootstrap: the payload fingerprints land in the SAME
+        // commit as the text and vector families (unified id space); the
+        // all-unfingerprintable refusal fired at the top with the other
+        // deterministic refusals, and this block reuses its checkpointed
+        // fingerprints
+        () => mediaPrintable.map(stageMedia(s, out, snap, _, (0L, 0L)))
+          .getOrElse(Map.empty))
+    }
     } finally mediaPrintable.foreach(releaseCheckpoint)
   }
 
@@ -2987,96 +2900,53 @@ object IndexStore {
         "payloads alone")
     if (textGo.isEmpty && vecGo.isEmpty && mediaGo.isEmpty)
       return // exact replay of every family: skip
-    val snap = beginSnap(root)
+    // a governed unified store extends its census on every DOCS-side
+    // fold (same additive-delta contract as the dedup family's append);
+    // a vectors-only catch-up leaves the doc-mix timeline untouched
+    // (format-guarded at the top of appendUnifiedFrom, before staging).
+    // The frame (and its schema refusal) is built BEFORE the staging
+    // threads launch — the hoisted cheap-refusal discipline.
+    // `preCensus` (VERDICT r14 next #2): the GATED path already paid
+    // this batch's census explode for its verdict — the fold writes
+    // that checkpointed ~O(sources × 71)-row bins frame instead of
+    // exploding the batch a second time (bins are per-source
+    // additive, so gate-bins-minus-held ≡ censusBins(admitted)
+    // bit-identically; the unified fold does not screen, which is
+    // what makes the reuse safe — the dedup family's screen makes
+    // kept ≠ admitted, so IT still censuses its own kept frame)
+    val census =
+      if (prior.contains("mix_census") && textGo.isDefined)
+        Some(preCensus.getOrElse(censusRequired("appendUnified", docs)))
+      else None
     // the family deltas stage CONCURRENTLY into the one snapshot
     // (VERDICT r13 next #4 — see [[stageConcurrently]]); every block
     // reads only the caller-held `prior` capture and writes only its
-    // own subdirectory, and the pair-atomic commit below stays last
-    var tchs: Option[Map[String, Channel]] = None
-    var census: Option[DataFrame] = None
-    var vchs: Option[Map[String, Channel]] = None
-    var projChs: Option[Map[String, Channel]] = None
-    var mediaChs: Option[Map[String, Channel]] = None
-    stageConcurrently(
-      () => tchs = textGo.map { _ =>
-        val st = channelFrom(s, root, prior, "stats").head()
-        writeTextInto(s, docs, root, snap,
-          Some((st.getAs[Long]("n_docs"), st.getAs[Long]("sum_dl"))), preTok)
-      },
-      // a governed unified store extends its census on every DOCS-side
-      // fold (same additive-delta contract as the dedup family's append);
-      // a vectors-only catch-up leaves the doc-mix timeline untouched
-      // (format-guarded at the top of appendUnifiedFrom, before staging).
-      // `preCensus` (VERDICT r14 next #2): the GATED path already paid
-      // this batch's census explode for its verdict — the fold writes
-      // that checkpointed ~O(sources × 71)-row bins frame instead of
-      // exploding the batch a second time (bins are per-source
-      // additive, so gate-bins-minus-held ≡ censusBins(admitted)
-      // bit-identically; the unified fold does not screen, which is
-      // what makes the reuse safe — the dedup family's screen makes
-      // kept ≠ admitted, so IT still censuses its own kept frame)
-      () => census =
-        if (prior.contains("mix_census") && textGo.isDefined) Some {
-          val c = preCensus.getOrElse(censusRequired("appendUnified", docs))
-          c.write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/mix_census")
-          maybeCrash("mix_census")
-          c
-        } else None,
-      () => vchs = vecGo.map { batchN =>
-        val cents = channelFrom(s, root, prior, "centroids")
-        stageCells(assignCells(vectors, cents), s"$root/$snap/cells")
-        maybeCrash("cells")
-        val st = channelFrom(s, root, prior, "vec_stats").head()
-        writeVecStats(s, root, snap, st.getAs[Long]("n_vecs") + batchN,
-          st.getAs[Long]("k"), st.getAs[Long]("n_at_train")) +
-          ("cells" -> Channel(Seq(s"$snap/cells"), "cid", ""))
-      },
-      // projected-channel deltas ride the SAME pair-atomic commit (the
-      // appendVectors maintenance contract on the single-pointer store);
-      // a vector-side exact replay skips them with the cells delta —
-      // the store already covers those vectors
-      () => projChs = (vecGo, raw) match {
-        case (Some(_), Some(r)) => Some(appendProjectionsInto(
-          s, root, "appendUnified", prior, snap, vectors, r))
-        case _ => None
-      },
-      // media fingerprint blocks ride the SAME commit (third family);
-      // an exact media replay skips with the other deltas
-      () => mediaChs = mediaGo.map { _ =>
-        val (pn, pb) = mediaStatsOf(s, root, prior)
-        val batchN = mediaPrintable.get.count()
-        Dedup.simBlocks(mediaPrintable.get)
-          .write.mode(SaveMode.Overwrite).partitionBy("b")
-          .parquet(s"$root/$snap/media_sim_blocks")
-        maybeCrash("media_sim_blocks")
-        Map("media_sim_blocks" ->
-          Channel(Seq(s"$snap/media_sim_blocks"), "b", "")) ++
-          writeMediaStats(s, root, snap, pn + batchN, pb + 4 * batchN)
-      })
-    def appended(name: String, chs: Map[String, Channel]) = {
-      val fresh = chs(name).paths.flatMap(p => relIfData(root, p))
-      name -> prior.get(name)
-        .map(ch => ch.copy(paths = ch.paths ++ fresh))
-        .getOrElse(chs(name).copy(paths = fresh))
+    // own subdirectories, and the pair-atomic commit stays last
+    transact(root, base) { snap =>
+      appendManifest(prior, stageConcurrently(
+        () => textGo.map { _ =>
+          val st = channelFrom(s, root, prior, "stats").head()
+          writeTextInto(s, docs, root, snap,
+            Some((st.getAs[Long]("n_docs"), st.getAs[Long]("sum_dl"))), preTok)
+        }.getOrElse(Map.empty),
+        () => census.map(stageCensus(root, snap, _)).getOrElse(Map.empty),
+        () => vecGo.map(batchN => stageVectors(s, root, snap, vectors,
+          channelFrom(s, root, prior, "centroids"), Some((prior, batchN))))
+          .getOrElse(Map.empty),
+        // projected-channel deltas ride the SAME pair-atomic commit (the
+        // appendVectors maintenance contract on the single-pointer store);
+        // a vector-side exact replay skips them with the cells delta —
+        // the store already covers those vectors
+        () => (vecGo, raw) match {
+          case (Some(_), Some(r)) => appendProjectionsInto(
+            s, root, "appendUnified", prior, snap, vectors, r)
+          case _ => Map.empty
+        },
+        // media fingerprint blocks ride the SAME commit (third family);
+        // an exact media replay skips with the other deltas
+        () => mediaGo.map(_ => stageMedia(s, root, snap, mediaPrintable.get,
+          mediaStatsOf(s, root, prior))).getOrElse(Map.empty)))
     }
-    commitSnap(root, snap, prior ++
-      tchs.toSeq.flatMap(c =>
-        Seq(appended("postings", c), appended("doc_lens", c))
-          .filter(_._2.paths.nonEmpty) :+ ("stats" -> c("stats"))) ++
-      vchs.toSeq.flatMap(c =>
-        Seq(appended("cells", c)).filter(_._2.paths.nonEmpty) :+
-          ("vec_stats" -> c("vec_stats"))) ++
-      census.map { _ =>
-        val fresh = relIfData(root, s"$snap/mix_census")
-        "mix_census" -> prior.get("mix_census")
-          .map(ch => ch.copy(paths = ch.paths ++ fresh))
-          .getOrElse(Channel(fresh, "", ""))
-      }.filter(_._2.paths.nonEmpty) ++
-      projChs.getOrElse(Map.empty) ++
-      mediaChs.toSeq.flatMap(c =>
-        Seq(appended("media_sim_blocks", c)).filter(_._2.paths.nonEmpty) :+
-          ("media_stats" -> c("media_stats"))),
-      base)
     } finally mediaPrintable.foreach(releaseCheckpoint)
   }
 
@@ -3388,19 +3258,10 @@ object IndexStore {
         "project a non-empty corpus")
     val (base, prior) = baseForWrite(root)
     val (k, d, fineN) = projIdentityOf("writeProjections", units, fineVecs)
-    val snap = beginSnap(root)
-    units.select(col("vec_id"), col("label"), col("punit"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/proj_units")
-    maybeCrash("proj_units")
-    fineVecs.select(col("vec_id"), col("embd"), col("nsq"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/exact_vecs")
-    maybeCrash("exact_vecs")
-    commitSnap(root, snap,
-      prior -- Seq("proj_units", "exact_vecs", "proj_stats") ++ Map(
-        "proj_units" -> Channel(Seq(s"$snap/proj_units"), "", ""),
-        "exact_vecs" -> Channel(Seq(s"$snap/exact_vecs"), "", "")) ++
-        writeProjStats(s, root, snap, k, d, fineN),
-      base)
+    transact(root, base) { snap =>
+      prior -- ProjChannels ++
+        stageProjections(s, root, snap, units, Some(fineVecs), k, d, fineN)
+    }
   }
 
   /** Re-derive the projected-ANN family at a NEW coarse width — the
@@ -3457,15 +3318,10 @@ object IndexStore {
       .select(col("vec_id"), col("label"), col("embd").as("embedding"))
     val units = Similarity.projectedUnitsOf(raw, newK)
     val (k, d, fineN) = projIdentityOf("reprojectVectors", units, fine)
-    val snap = beginSnap(root)
-    units.select(col("vec_id"), col("label"), col("punit"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/proj_units")
-    maybeCrash("proj_units")
-    commitSnap(root, snap,
-      prior -- Seq("proj_units", "proj_stats") ++ Map(
-        "proj_units" -> Channel(Seq(s"$snap/proj_units"), "", "")) ++
-        writeProjStats(s, root, snap, k, d, fineN),
-      base)
+    transact(root, base) { snap =>
+      prior -- Seq("proj_units", "proj_stats") ++
+        stageProjections(s, root, snap, units, None, k, d, fineN)
+    }
   }
 
   /** The (k, d, |fineVecs|) identity facts of a projected-channel
@@ -3488,17 +3344,31 @@ object IndexStore {
     (u.getInt(0), f.getInt(0), f.getLong(2))
   }
 
-  /** Stage the projected family's 1-row identity + coverage census
-    * (`proj_stats`) into `snap` — the vec_stats staging pattern. */
-  private def writeProjStats(s: SparkSession, root: String, snap: String,
-      k: Int, d: Int, nVecs: Long): Map[String, Channel] = {
+  /** Stage the projected family into `snap`: the coarse `proj_units`,
+    * the exact `exact_vecs` when given (a re-projection keeps the
+    * stored ones), and the 1-row identity + coverage census
+    * `proj_stats` (k, d, this build's scheme and sign table, n_vecs) —
+    * the vec_stats staging pattern. */
+  private def stageProjections(s: SparkSession, root: String, snap: String,
+      units: DataFrame, fineVecs: Option[DataFrame], k: Int, d: Int,
+      nVecs: Long): Map[String, Channel] = {
     import s.implicits._
+    units.select(col("vec_id"), col("label"), col("punit"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/proj_units")
+    maybeCrash("proj_units")
+    fineVecs.foreach { f =>
+      f.select(col("vec_id"), col("embd"), col("nsq"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/exact_vecs")
+      maybeCrash("exact_vecs")
+    }
     Seq((k, d, ProjScheme, signTableFp(k, d), nVecs))
       .toDF("k", "d", "scheme", "sign_fp", "n_vecs")
       .coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(s"$root/$snap/proj_stats")
     maybeCrash("proj_stats")
-    Map("proj_stats" -> Channel(Seq(s"$snap/proj_stats"), "", ""))
+    staged(root, snap, "proj_units") ++
+      fineVecs.map(_ => staged(root, snap, "exact_vecs")).getOrElse(Map.empty) +
+      ("proj_stats" -> Channel(Seq(s"$snap/proj_stats"), "", ""))
   }
 
   /** Coarse-to-fine ANN answered from the store alone — session q155

@@ -99,29 +99,60 @@ class UnifiedStoreSpec extends SparkSpec {
   }
 
   test("a crash between the families aborts BOTH: no version ever pairs new postings with old cells") {
+    // every family is on: governed (mix_census), projected (proj_*) and
+    // media (media_*), so the fold below stages every channel kind
+    // (the fold's payloads twin the bootstrap's, so media pairs exist)
+    def boot(root: String, ids: Range, pays: DataFrame): Unit =
+      ops.IndexStore.writeUnified(spark, gdocs(ids, "src0"), vecsOf(ids),
+        cents, root, governed = true,
+        proj = Some((ops.Similarity.projectedUnitsOf(rawOf(ids), 32),
+          ops.Similarity.exactVecsOf(rawOf(ids)))),
+        payloads = Some(pays))
+    val foldPays = paysOf(6 to 11, twinBase = 6)
+    def fold(root: String): Unit =
+      ops.IndexStore.appendUnified(spark, root, gdocs(6 to 11, "src0"),
+        vecsOf(6 to 11), raw = Some(rawOf(6 to 11)),
+        payloads = Some(foldPays))
+    def proj(root: String) = ops.IndexStore.projectedAnnFromStore(spark,
+      root, rawOf(0 to 0).select($"vec_id", $"embedding"), k = 3)
+      .collect().toSeq
+    def media(root: String) =
+      ops.IndexStore.mediaPairsFromStore(spark, root).collect().toSeq
     val root = tmp("crash")
-    ops.IndexStore.writeUnified(spark, docsOf(0 to 5), vecsOf(0 to 5), cents, root)
-    val (lex0, ann0) = (lex(root), ann(root, 0))
+    boot(root, 0 to 5, paysOf(0 to 5))
+    val (lex0, ann0, proj0, media0) =
+      (lex(root), ann(root, 0), proj(root), media(root))
     val h0 = ops.IndexStore.history(root)
-    // crash after the text family is fully staged, before the vector
-    // family: if commits were per-family this is exactly the torn state
-    ops.IndexStore.crashAfterChannel = Some("doc_lens")
-    try intercept[RuntimeException] {
-      ops.IndexStore.appendUnified(spark, root, docsOf(6 to 11), vecsOf(6 to 11))
-    } finally ops.IndexStore.crashAfterChannel = None
-    assert(ops.IndexStore.history(root) == h0,
-      "crashed unified fold committed a snapshot")
-    assert(lex(root) == lex0 && ann(root, 0) == ann0,
-      "crashed unified fold changed a visible read")
-    // the retry folds BOTH families in one commit and lands the exact
-    // both-at-once state
-    ops.IndexStore.appendUnified(spark, root, docsOf(6 to 11), vecsOf(6 to 11))
+    // a crash after ANY staged channel — e.g. after the text family is
+    // fully staged but before the vector family: if commits were
+    // per-family this is exactly the torn state
+    for (ch <- Seq("postings", "doc_lens", "cells", "mix_census",
+        "proj_units", "exact_vecs", "proj_stats", "media_sim_blocks",
+        "media_stats")) {
+      ops.IndexStore.crashAfterChannel = Some(ch)
+      val e = try intercept[RuntimeException](fold(root))
+        finally ops.IndexStore.crashAfterChannel = None
+      assert(e.getMessage == s"injected crash after channel $ch",
+        s"the fold must fail at the $ch failpoint, got: ${e.getMessage}")
+      assert(ops.IndexStore.history(root) == h0,
+        s"unified fold crashed after $ch committed a snapshot")
+      assert(lex(root) == lex0 && ann(root, 0) == ann0 &&
+        proj(root) == proj0 && media(root) == media0,
+        s"unified fold crashed after $ch changed a visible read")
+    }
+    // one retry folds EVERY family in one commit and lands the exact
+    // all-at-once state
+    fold(root)
     assert(ops.IndexStore.history(root).size == h0.size + 1,
       "retry must publish exactly one new version")
     val ref = tmp("crashref")
-    ops.IndexStore.writeUnified(spark, docsOf(0 to 11), vecsOf(0 to 11), cents, ref)
+    boot(ref, 0 to 11, paysOf(0 to 5).unionByName(foldPays))
     assert(lex(root) == lex(ref), "post-retry BM25 diverged from a both-at-once build")
     assert(ann(root, 0) == ann(ref, 0), "post-retry ANN diverged from a both-at-once build")
+    assert(proj(root) == proj(ref),
+      "post-retry projected ANN diverged from an all-at-once build")
+    assert(media(root) == media(ref),
+      "post-retry media pairs diverged from an all-at-once build")
   }
 
   test("the replay contract is pairwise: exact pair replays skip, half-replayed pairs are refused") {
