@@ -38,18 +38,95 @@ object Core {
     *     every harness and DuckDB's TIMESTAMP is naive, so the cast is
     *     a relabel, not a wall-clock shift — oracle parity holds;
     *   - timestamp[us] UTC-adjusted → already TimestampType, untouched.
-    * SchemaDriftSpec pins all encodings per consuming query family. */
+    * SchemaDriftSpec pins all encodings per consuming query family.
+    *
+    * The file is read through [[readParquet]], so only the first read
+    * of a table's current files pays the footer-inference job; the
+    * `nanosAsLong` value set here is part of that memo's key. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val raw = if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$dir/$name.parquet")
+      val df = readParquet(spark, s"$dir/$name.parquet")
       if (df.schema("ts").dataType == LongType)
         df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       else df
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else readParquet(spark, s"$dir/$name.parquet")
     raw.schema.fields.filter(_.dataType == TimestampNTZType)
       .foldLeft(raw)((d, f) => d.withColumn(f.name, col(f.name).cast(TimestampType)))
   }
+
+  /** The session confs that change what parquet schema inference
+    * returns for the same files. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** Bound on [[schemas]]: a long-lived JVM that rewrites stores
+    * forever (StreamSoak) must not grow it without limit. */
+  private val MaxSchemas = 1024
+
+  /** Inferred parquet schemas, least recently used first. Holds only
+    * `StructType`s — never a session or a DataFrame. */
+  private val schemas =
+    new java.util.LinkedHashMap[String, StructType](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, StructType]): Boolean = size > MaxSchemas
+    }
+
+  /** `spark.read.parquet(path)` without the footer-inference job on a
+    * repeat read. A read without a schema launches one Spark job just
+    * to read a footer; at this repo's scale that round trip costs as
+    * much as the query work. So the first read of a path infers as
+    * usual and records `df.schema`, and later reads pass it to
+    * `spark.read.schema(...)`, which launches no job. The resulting
+    * plan is the same: partition columns keep their inferred types and
+    * their pruning.
+    *
+    * The key is the canonical path, the [[SchemaConfs]] values and a
+    * digest of every file under the path: sorted (relative name,
+    * length, mtime). Store roots are deleted and bootstrapped again
+    * under the same `snap_N` names, so the path alone would serve a
+    * stale schema; but a Spark part-file name carries its write job's
+    * UUID, so any rewrite changes the key, and a single-file table
+    * rewritten in place changes it through length and mtime. A
+    * directory's own mtime or inode could repeat after a delete and a
+    * re-create, so neither is used. A path that is not a local file,
+    * or that vanishes while it is listed, is read without the memo.
+    * Thread-safe: the staging and probe pools read concurrently, and
+    * two readers racing on one miss both infer, which costs one job. */
+  private[graft] def readParquet(s: SparkSession, path: String): DataFrame = {
+    val key = schemaKey(s, path)
+    key.flatMap(k => schemas.synchronized(Option(schemas.get(k)))) match {
+      case Some(schema) => s.read.schema(schema).parquet(path)
+      case None =>
+        val df = s.read.parquet(path)
+        key.foreach(k => schemas.synchronized(schemas.put(k, df.schema)))
+        df
+    }
+  }
+
+  private def schemaKey(s: SparkSession, path: String): Option[String] =
+    scala.util.Try {
+      val base = new java.io.File(path).getCanonicalFile.toPath
+      val files = scala.collection.mutable.ArrayBuffer.empty[String]
+      java.nio.file.Files.walkFileTree(base,
+        java.util.EnumSet.of(java.nio.file.FileVisitOption.FOLLOW_LINKS), Int.MaxValue,
+        new java.nio.file.SimpleFileVisitor[java.nio.file.Path] {
+          override def visitFile(p: java.nio.file.Path,
+              a: java.nio.file.attribute.BasicFileAttributes) = {
+            if (a.isRegularFile) files += s"${base.relativize(p)}\u0000${a.size}\u0000" +
+              a.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS)
+            java.nio.file.FileVisitResult.CONTINUE
+          }
+        })
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      (SchemaConfs.map(k => s"$k=${s.conf.getOption(k).getOrElse("")}") ++
+        files.sorted).foreach(e => md.update((e + "\n").getBytes("UTF-8")))
+      s"$base\u0000${md.digest().map("%02x".format(_)).mkString}"
+    }.toOption
 
   /** Exact order-independent sum of a money-like double column. */
   def moneySum(c: Column): Column = round(sum(c.cast(Money)).cast("double"), 2)

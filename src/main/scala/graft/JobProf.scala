@@ -45,14 +45,15 @@ object JobProf {
     for (name <- names.split(",")) {
       val fn = SparkEntry.queries(name)
       val reps = (1 to n).map { _ =>
-        // settle listener queues so rep boundaries are crisp (the bus
-        // is private — a short sleep suffices at this granularity)
-        Thread.sleep(150)
+        // the counting listener and the write-stats barrier share the
+        // listener bus's queue: once a rep's barrier returns, every job
+        // event of that rep has been counted, so rep boundaries are exact
         jobs.set(0); spanNs.set(0)
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(150)
+        val (wall, _) = etl.Metrics.collectWriteStats(spark) {
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).count()
+          (System.nanoTime() - t0) / 1e9
+        }
         (wall, jobs.get(), spanNs.get() / 1e9)
       }
       val body = reps.map { case (w, j, sp) =>

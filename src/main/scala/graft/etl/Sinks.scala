@@ -2,7 +2,8 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.UUID
 
 /** Faithful sink surface for the reference's JSON outputs
   * (waldfalke/catme-etl R13–R15, R28;
@@ -56,7 +57,9 @@ object Sinks {
     * one partition (same keys and null ordering as `orderBy`) rather
     * than range-partitioned, which would cost a bounds-sampling job.
     * Returns what was written: the rows in the array, one file and
-    * its bytes (R15 size stats). */
+    * its bytes (R15 size stats). The file is written as
+    * `<path>.<uuid>.tmp` beside the target and renamed over it
+    * atomically, so a failed run never destroys the previous output. */
   def jsonArrayFile(df: DataFrame, path: String, sortKeys: Seq[String],
       indent: Boolean = false): Metrics.WriteStats = {
     val rows = df.repartition(1).sortWithinPartitions(sortKeys.map(col): _*)
@@ -67,11 +70,23 @@ object Sinks {
       if (!indent) rows.mkString("[", ",", "]")
       else rows.map(reindent).mkString("[\n", ",\n", "\n]")
     val bytes = body.getBytes("UTF-8")
-    Files.write(Paths.get(path), bytes,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-      StandardOpenOption.WRITE)
+    // publish by rename: a crash mid-write leaves the previous good
+    // file under `path`, never a truncated array
+    val target = Paths.get(path)
+    val tmp = target.resolveSibling(s"${target.getFileName}.${UUID.randomUUID}.tmp")
+    try {
+      Files.write(tmp, bytes)
+      if (crashBeforePublish) throw new RuntimeException("injected crash before publish")
+      Files.move(tmp, target,
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
     Metrics.WriteStats(rows.length, 1, bytes.length)
   }
+
+  /** Test-only failpoint: throw after [[jsonArrayFile]] has written its
+    * temp file but before it renames it over the target. Never set
+    * outside tests. */
+  @volatile private[graft] var crashBeforePublish: Boolean = false
 
   /** Pretty-print one compact JSON object at indent level 1 (4 spaces),
     * matching python json.dump(indent=4) field layout for flat records. */

@@ -416,7 +416,14 @@ object IndexStore {
     * read would make Spark infer one base path across snapshots and
     * refuse the partition layout; per-root loads keep partition
     * columns (band / b / cid) and their pruning intact, and filters
-    * push through the union into every branch's scan. */
+    * push through the union into every branch's scan.
+    *
+    * Each path is read through [[graft.Core.readParquet]], whose schema
+    * memo is keyed by the path and a digest of its files (the key
+    * changes when a root is deleted and bootstrapped again under the
+    * same `snap_N` names). Only a path's first read pays a
+    * footer-inference job, so a warm lookup's job count does not grow
+    * with append fan-out even though the per-path union stays. */
   def channel(s: SparkSession, root: String, name: String): DataFrame =
     channelFrom(s, root, channels(root), name)
 
@@ -425,7 +432,7 @@ object IndexStore {
     val ch = m.getOrElse(name, throw new IllegalStateException(
       s"index store at $root has no '$name' channel " +
         s"(present: ${m.keys.toSeq.sorted.mkString(", ")})"))
-    val frames = ch.paths.map(p => s.read.parquet(s"$root/$p"))
+    val frames = ch.paths.map(p => readParquet(s, s"$root/$p"))
     // cluster_labels is the one LAST-WRITER-WINS channel: a rolling
     // fold appends a label DELTA (only labels the merge changed plus
     // the batch's new docs — O(batch-driven changes) rows, never the

@@ -1,12 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import graft.etl.{Converter, Metrics, Sinks}
 import graft.sources.Xlsx
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** One pass per conversion: a conversion launches only the engine work
@@ -41,21 +39,6 @@ class ConverterSpec extends SparkSpec {
       Xlsx.write(df, s"$dir/wb$w.xlsx")
     }
     dir
-  }
-
-  /** `body`'s result and the Spark jobs it launched. The job counter and
-    * the write-stats barrier share the listener bus's queue, so once the
-    * barrier's event arrives every job of `body` has been counted. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val jobs = new AtomicInteger
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      val (result, _) = Metrics.collectWriteStats(spark)(body)
-      (result, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(counter)
   }
 
   private def listing(dir: String): Seq[java.nio.file.Path] =
@@ -130,5 +113,22 @@ class ConverterSpec extends SparkSpec {
     val got = new String(Files.readAllBytes(Paths.get(path)), "UTF-8")
     assert(got == expected)
     assert(stats == Metrics.WriteStats(400, 1, Files.size(Paths.get(path))))
+  }
+
+  test("a merge that fails before publishing leaves the previous output byte-intact and no temp file") {
+    val out = tmpDir("conv-out")
+    Converter.convert(spark, xlsxInput(), out, Converter.Config(format = "xlsx"))
+    val target = Paths.get(s"$out/output.json")
+    val before = Files.readAllBytes(target)
+    Sinks.crashBeforePublish = true
+    val err = try intercept[RuntimeException](Converter.convert(spark, csvInput(), out))
+      finally Sinks.crashBeforePublish = false
+    assert(err.getMessage == "injected crash before publish")
+    assert(java.util.Arrays.equals(Files.readAllBytes(target), before))
+    assert(listing(out).map(_.getFileName.toString) == Seq("output.json"))
+    // the next run publishes its own output
+    val stats = Converter.convert(spark, csvInput(), out)
+    assert(stats.rows == 300 && stats.bytes == Files.size(target))
+    assert(listing(out).map(_.getFileName.toString) == Seq("output.json"))
   }
 }
