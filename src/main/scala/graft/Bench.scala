@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** One measured query-sweep window: per-query timings plus its own
     * calibration samples (the post-warm `first` stabilizer shots, the
@@ -83,14 +82,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // warm phase: force-build the memoized session-shared frames (LSH
     // band keys, cluster labels — a full CC run — norms, IVF centroids,
     // bigrams, token ids, quality scores, the kNN query batch) so their
@@ -641,12 +633,6 @@ object Bench {
     val shortLine = s"""{"metric":"total","value":$total,"unit":"sec","warm":$warmSec,"errors":${errors.size},"calibration":$calShort,"sf":"$sfDir"}"""
     println(shortLine)
     System.err.println(shortLine)
-    Core.clearCaches(spark)
-    spark.stop()
-    if (errors.nonEmpty) {
-      System.err.println(s"[bench] ${errors.size} queries FAILED: " +
-        errors.map(_._1).mkString(", "))
-      sys.exit(1)
-    }
+    Session.finish(spark, "bench", errors.map(_._1).toSeq)
   }
 }

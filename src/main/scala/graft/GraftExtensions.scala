@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** SparkSessionExtensions injection point (SURVEY.md §7.6): installs
   * the engine's native expressions into every session built with
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions)...
+  *   Session.local(extensions = Some(new GraftExtensions))
   *   // or: spark.sql.extensions=graft.GraftExtensions
   *
   * so SQL users get `rolling_hash`, `dot_exact`, `word_shingles`

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point mirroring the reference's `__main__` surface
   * (/root/reference/unified_code.py:481–583): flag-for-flag
   * `--format`, `--chunk-size`, `--workers`, `--csv-separator` (:482–487)
@@ -28,14 +26,7 @@ object Main {
       sys.error("--output <dir> is required"))
     val workers = opt("workers", Runtime.getRuntime.availableProcessors().toString)
 
-    val spark = SparkSession.builder()
-      .master(s"local[$workers]")
-      .appName("graft-convert")
-      .config("spark.sql.shuffle.partitions", workers)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(workers, Map("spark.app.name" -> "graft-convert"))
     try {
       val stats = etl.Converter.convert(spark, input, output,
         etl.Converter.Config(

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** N× scale probe (default 10×, sf≈1): synthesizes a larger dataset
@@ -18,15 +18,10 @@ object ScaleProbe {
     val src = "/root/testdata/sf0.1"
     val copies = sys.env.getOrElse("SPARK_GRAFT_PROBE_COPIES", "10").toInt
     val dst = s"/tmp/sfprobe_x$copies"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.warehouse.dir", s"$dst/warehouse")
-      .config("spark.sql.shuffle.partitions", if (copies > 10) "128" else "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(conf = Map(
+      "spark.sql.warehouse.dir" -> s"$dst/warehouse",
+      "spark.sql.shuffle.partitions" -> (if (copies > 10) "128" else "64")))
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     def replicate(name: String, keyCols: Seq[String], textPerturb: Boolean = false): Unit = {
       val base = Core.table(spark, src, name)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Streaming soak probe (the streaming analog of ScaleProbe): drives
@@ -25,18 +25,12 @@ object StreamSoak {
     val copies = sys.env.getOrElse("SPARK_GRAFT_SOAK_COPIES", "10").toInt
     val src = "/root/testdata/sf0.1"
     val dst = s"/tmp/stream_soak_x$copies"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .getOrCreate()
+    val spark = Session.local(conf = Map(
+      "spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"))
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     val marker = new java.io.File(s"$dst/_SOAK_DATA_READY")
     if (!marker.exists()) {

@@ -13,21 +13,21 @@ import java.util.UUID
   * - "chunks" mode (R13/R28): per-chunk files `chunk_i.json` →
   *   `df.write.json(dir)` part files. Partitioned output IS the
   *   native Spark shape; at 100 TB this is the only sane mode.
-  * - "merge" mode (R14): one JSON file. The reference concatenates
-  *   chunk files sorted lexicographically — permuting row order once
-  *   there are ≥10 chunks (`sorted(glob)`, unified_code.py:357,
-  *   SURVEY.md §4.3(2)). Here merge preserves input order by sorting
-  *   on an explicit key, never on file names.
+  * - "merge" mode (R14): one JSON array file, [[jsonArrayFile]]. The
+  *   reference concatenates chunk files sorted lexicographically —
+  *   permuting row order once there are ≥10 chunks (`sorted(glob)`,
+  *   unified_code.py:357, SURVEY.md §4.3(2)). Here merge preserves
+  *   input order by sorting on an explicit key, never on file names.
   * - minified vs pretty (R15, unified_code.py:365–388): JSON Lines is
   *   already the minified form (`separators=(',',':')` equivalent);
   *   `jsonArrayFile` writes the byte-parity single-array form with
   *   optional indent, non-ASCII passthrough (`ensure_ascii=False`,
   *   unified_code.py:350).
   *
-  * The single-file writers funnel through one task / the driver by
-  * design — they exist for format parity with the reference, flagged
-  * for small results only (the reference itself materializes the
-  * whole output in one process, unified_code.py:352–362).
+  * The merge writer funnels through one task and the driver by
+  * design — it exists for format parity with the reference, for
+  * small results only (the reference itself materializes the whole
+  * output in one process, unified_code.py:352–362).
   */
 object Sinks {
 
@@ -38,13 +38,6 @@ object Sinks {
     // (the injected `id = None`, unified_code.py:267), Spark drops
     // them by default
     df.write.mode(SaveMode.Overwrite)
-      .option("ignoreNullFields", "false").json(dir)
-
-  /** R14 "merge" mode as a single JSON-Lines file: explicit sort key
-    * (fixing §4.3(2)), coalesce(1) only at this final small sink. */
-  def jsonMerged(df: DataFrame, dir: String, sortKeys: Seq[String]): Unit =
-    df.orderBy(sortKeys.map(col): _*).coalesce(1)
-      .write.mode(SaveMode.Overwrite)
       .option("ignoreNullFields", "false").json(dir)
 
   /** R14+R15 byte-parity sink: a single JSON *array* file, pretty

@@ -28,8 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * shared-string table, per-sheet row streams with sparse cell
   * references, shared / inline / formula-cached strings, booleans and
   * raw number text. Values surface as strings (cast downstream) and
-  * every sheet carries a `sheet_name` column — the same semantics as
-  * the `sheetdir` stand-in, so the two sources are interchangeable.
+  * every sheet carries a `sheet_name` column.
   *
   * Usage: `spark.read.format("xlsx").load(fileOrDir)`; options:
   * `header` (default true: first row of the first sheet names the

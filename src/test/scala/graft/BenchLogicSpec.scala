@@ -103,13 +103,18 @@ class BenchLogicSpec extends AnyFunSuite {
     // the per-query prev side (PERF_r16's n_common: 0 was exactly a
     // prior-round artifact gap). The emit lives inside Bench.main, so
     // this pins the source — a rename trips here before it ships.
-    val src = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("src/main/scala/graft/Bench.scala"))
+    def read(f: String) = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"src/main/scala/graft/$f.scala"))
+    val src = read("Bench")
+    // the core count comes from SPARK_GRAFT_CPUS and the master derives
+    // from it, never hard-coded: Bench takes the shared session's default
+    val session = read("Session")
+    for (needle <- Seq("SPARK_GRAFT_CPUS", "master(s\"local[$cpus]\")",
+        "def local(cpus: String = envCpus"))
+      assert(session.contains(needle), s"Session.scala no longer contains `$needle`")
     for (needle <- Seq(
-        // driver contract: data dir + core count come from these envs
-        "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS",
-        // master derives from the env'd core count, never hard-coded
-        "master(s\"local[$cpus]\")",
+        // driver contract: the data dir comes from this env
+        "SPARK_GRAFT_SF_DIR", "Session.local()",
         // the one-line JSON contract the driver parses (additions-only)
         "\"\"\"{\"metric\":\"total\",\"value\":$total,\"unit\":\"sec\",\"warm\":$warmSec",
         "\"queries\":$qs", "\"warm_breakdown\":$wb",

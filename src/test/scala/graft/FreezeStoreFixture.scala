@@ -76,12 +76,7 @@ object FreezeStoreFixture {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("4")
     // bootstrap + one append: a 2-version history exercises path lists
     def build(root: String): Unit = {
       ops.IndexStore.deleteRec(new java.io.File(root))

@@ -28,18 +28,14 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .withExtensions(new GraftExtensions)   // engine functions via injection
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // a fixed local[4], never the SPARK_GRAFT_CPUS default: the job-count
+  // and plan-shape pins assume 4 shuffle partitions on any host
+  lazy val session: SparkSession = Session.local("4", Map(
+    "spark.app.name" -> "graft-tests",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-wh").toString,
+    // plan-shape specs find a FileScan by its path: keep the plan's
+    // Location uncut whatever the temp dir's length
+    "spark.sql.maxMetadataStringLength" -> Int.MaxValue.toString),
+    Some(new GraftExtensions))   // engine functions via injection
 }

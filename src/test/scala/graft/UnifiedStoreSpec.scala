@@ -20,11 +20,20 @@ class UnifiedStoreSpec extends SparkSpec {
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-uni-$tag").toString
 
+  /** Doc i's text. Postings keep `[a-z]+` runs only, so every suffix is
+    * letters: a token unique to the doc, a 3-way and a 2-way shared
+    * term, and the 2-way term repeated `i % 3` more times, so docs
+    * differ in tf and length. */
+  private def textOf(i: Int): String = {
+    val l = "abcdefghijklmnopqrstuvwxyz"
+    s"alpha token${l(i / 26 % 26)}${l(i % 26)} beta${l(i % 3)} gamma delta${l(i % 2)}" +
+      s" delta${l(i % 2)}" * (i % 3)
+  }
+
   /** Tiny synthetic corpus: docs with distinct token profiles, paired
     * with 2-d unit vectors spread over 4 axis-aligned centroids. */
-  private def docsOf(ids: Range): DataFrame = ids.map { i =>
-    (i.toLong, s"alpha token$i beta${i % 3} gamma delta${i % 2}")
-  }.toDF("doc_id", "text")
+  private def docsOf(ids: Range): DataFrame =
+    ids.map(i => (i.toLong, textOf(i))).toDF("doc_id", "text")
 
   private def vecsOf(ids: Range): DataFrame = ids.map { i =>
     val ang = (i % 8) * math.Pi / 4 + 0.1
@@ -40,7 +49,7 @@ class UnifiedStoreSpec extends SparkSpec {
     (0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)),
     (2L, Seq(-1.0, 0.0)), (3L, Seq(0.0, -1.0))).toDF("cid", "cvec")
 
-  private val terms = Seq("beta1", "delta0")
+  private val terms = Seq("betab", "deltaa")
 
   private def lex(root: String): Seq[org.apache.spark.sql.Row] =
     ops.IndexStore.bm25FromStore(spark, root, terms)
@@ -122,6 +131,7 @@ class UnifiedStoreSpec extends SparkSpec {
     boot(root, 0 to 5, paysOf(0 to 5))
     val (lex0, ann0, proj0, media0) =
       (lex(root), ann(root, 0), proj(root), media(root))
+    assert(lex0.nonEmpty, "the BM25 probe must match the bootstrap corpus")
     val h0 = ops.IndexStore.history(root)
     // a crash after ANY staged channel — e.g. after the text family is
     // fully staged but before the vector family: if commits were
@@ -147,7 +157,8 @@ class UnifiedStoreSpec extends SparkSpec {
       "retry must publish exactly one new version")
     val ref = tmp("crashref")
     boot(ref, 0 to 11, paysOf(0 to 5).unionByName(foldPays))
-    assert(lex(root) == lex(ref), "post-retry BM25 diverged from a both-at-once build")
+    assert(lex(ref).nonEmpty && lex(root) == lex(ref),
+      "post-retry BM25 diverged from a both-at-once build")
     assert(ann(root, 0) == ann(ref, 0), "post-retry ANN diverged from a both-at-once build")
     assert(proj(root) == proj(ref),
       "post-retry projected ANN diverged from an all-at-once build")
@@ -161,6 +172,7 @@ class UnifiedStoreSpec extends SparkSpec {
     ops.IndexStore.appendUnified(spark, root, docsOf(6 to 8), vecsOf(6 to 8))
     val h = ops.IndexStore.history(root)
     val (lex0, ann0) = (lex(root), ann(root, 0))
+    assert(lex0.nonEmpty, "the BM25 probe must match the folded corpus")
     // at-least-once redelivery of the SAME pair: idempotent no-op
     ops.IndexStore.appendUnified(spark, root, docsOf(6 to 8), vecsOf(6 to 8))
     assert(ops.IndexStore.history(root) == h && lex(root) == lex0 &&
@@ -183,7 +195,8 @@ class UnifiedStoreSpec extends SparkSpec {
     ops.IndexStore.appendUnified(spark, root, emptyDocs, vecsOf(6 to 11))
     val ref = tmp("onesideref")
     ops.IndexStore.writeUnified(spark, docsOf(0 to 11), vecsOf(0 to 11), cents, ref)
-    assert(lex(root) == lex(ref), "docs-then-vecs folds diverged on BM25")
+    assert(lex(ref).nonEmpty && lex(root) == lex(ref),
+      "docs-then-vecs folds diverged on BM25")
     assert(ann(root, 0) == ann(ref, 0), "docs-then-vecs folds diverged on ANN")
     // compaction is channel-generic: one rewrite collapses BOTH
     // families' append fragments without moving a number
@@ -201,7 +214,7 @@ class UnifiedStoreSpec extends SparkSpec {
       terms, vecsOf(0 to 0).select($"vec_id", $"unit"), nprobe = 2, k = 5)
     val ref = tmp("ttref")
     ops.IndexStore.writeUnified(spark, docsOf(0 to 5), vecsOf(0 to 5), cents, ref)
-    assert(l1.collect().toSeq == lex(ref),
+    assert(lex(ref).nonEmpty && l1.collect().toSeq == lex(ref),
       "version-1 BM25 must equal a store holding only fold 1")
     assert(a1.collect().toSeq == ann(ref, 0),
       "version-1 ANN must equal a store holding only fold 1")
@@ -211,10 +224,8 @@ class UnifiedStoreSpec extends SparkSpec {
     * (120/160/200 chars → bins 1/1/2; +480 shifts every doc to bin 5,
     * the bin the anchor never populates). */
   private def gdocs(ids: Range, src: String, shift: Long = 0L): DataFrame =
-    ids.map { i =>
-      (i.toLong, s"alpha token$i beta${i % 3} gamma delta${i % 2}",
-        src, 120L + (i % 3) * 40 + shift)
-    }.toDF("doc_id", "text", "source", "n_chars")
+    ids.map(i => (i.toLong, textOf(i), src, 120L + (i % 3) * 40 + shift))
+      .toDF("doc_id", "text", "source", "n_chars")
 
   test("governed unified loop: a drifting source is held out of BOTH families per-tick, and recovers") {
     val root = tmp("gov")
@@ -512,6 +523,7 @@ class UnifiedStoreSpec extends SparkSpec {
     // compaction is channel-generic: ONE rewrite collapses all three
     // families' fragments, media blocks included, without moving a pair
     val (lex0, ann0) = (lex(root), ann(root, 0))
+    assert(lex0.nonEmpty, "the BM25 probe must match the folded corpus")
     ops.IndexStore.compact(spark, root)
     assert(ops.IndexStore.mediaPairsFromStore(spark, root)
         .collect().toSeq == uniPairs &&
@@ -550,6 +562,7 @@ class UnifiedStoreSpec extends SparkSpec {
       cents, root, payloads = Some(paysOf(0 to 5)))
     val h0 = ops.IndexStore.history(root)
     val (lex0, ann0) = (lex(root), ann(root, 0))
+    assert(lex0.nonEmpty, "the BM25 probe must match the bootstrap corpus")
     val pairs0 = ops.IndexStore.mediaPairsFromStore(spark, root).collect().toSeq
     ops.IndexStore.crashAfterChannel = Some("media_sim_blocks")
     try intercept[RuntimeException] {
@@ -683,10 +696,6 @@ class UnifiedStoreSpec extends SparkSpec {
   }
 
   test("reanchorCensus is channel-generic: the UNIFIED store's hold → re-anchor → pass cycle touches only mix_census (VERDICT r14 next #1)") {
-    def gdocs(ids: Range, src: String, shift: Long) = ids.map { i =>
-      (i.toLong, s"alpha token$i beta${i % 3} gamma delta${i % 2}",
-        src, 120L + (i % 3) * 40 + shift)
-    }.toDF("doc_id", "text", "source", "n_chars")
     val root = tmp("reauni")
     ops.IndexStore.writeUnified(spark,
       gdocs(0 to 19, "src0", 0L).unionByName(gdocs(20 to 39, "srcA", 0L)),
