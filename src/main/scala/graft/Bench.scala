@@ -455,13 +455,9 @@ object Bench {
       if (retryWins) Some(preRatioFinal <= 2.5) else cleanWarmOpt1
     def jsonObj(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     val qs = jsonObj(results)
     val wb = jsonObj(warmBreakdown)
-    val errJson = errors.map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }
+    val errJson = errors.map { case (k, v) => s"${Core.jsonStr(k)}: ${Core.jsonStr(v)}" }
       .mkString("{", ",", "}")
     val queriesSec = results.map(_._2).filter(_ >= 0).sum
     val total = queriesSec + warmSec
@@ -543,7 +539,7 @@ object Bench {
       // regression hunt unable to tell a transient failure from a
       // benign skip — these stay out of the verdict `errors` map and
       // the exit code (the chosen window is the measurement)
-      val errsJ = w.errs.map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }
+      val errsJ = w.errs.map { case (k, v) => s"${Core.jsonStr(k)}: ${Core.jsonStr(v)}" }
         .mkString("{", ",", "}")
       s""""queries_discarded":${jsonObj(w.results)},"errors_discarded":$errsJ,"ratio_sweep_discarded":${r3(w.ratio)},"""
     }.getOrElse("")
@@ -621,7 +617,7 @@ object Bench {
         println(s"""{"qtb":${grp.head._1},"t":[${ts.mkString(",")}]}""")
       }
       for ((n, t) <- unnumbered)
-        println(s"""{"qtn":${jstr(n)},"t":${math.rint(t * 100).toLong}}""")
+        println(s"""{"qtn":${Core.jsonStr(n)},"t":${math.rint(t * 100).toLong}}""")
     }
     // the full line is ~3 KB and the driver's tail capture truncates its
     // head (BENCH_r02 "parsed": null) — emit a short total-only line

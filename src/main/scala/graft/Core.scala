@@ -55,6 +55,21 @@ object Core {
       .foldLeft(raw)((d, f) => d.withColumn(f.name, col(f.name).cast(TimestampType)))
   }
 
+  /** `s` as a JSON string literal (RFC 8259): the quote, the backslash
+    * and every control character are escaped, `\n`, `\r` and `\t` by
+    * name and the rest as `\u00XX`. The one escaper of every JSON line
+    * and file the program writes: bench and verify output, probe lines
+    * and store manifests. */
+  def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** The session confs that change what parquet schema inference
     * returns for the same files. */
   private val SchemaConfs = Seq(

@@ -5,9 +5,11 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The measurement main for catalog queries, with two modes.
   *
@@ -18,7 +20,8 @@ import org.apache.spark.sql.execution.FormattedMode
   *    summed span seconds. At small scale a query's wall is mostly
   *    driver round trips (~0.1–0.3 s per job), so how many jobs it
   *    dispatches, and where, is the per-query lever: each job's call
-  *    site and stage names go to stderr.
+  *    site (the description of the SQL execution that launched it)
+  *    and stage names go to stderr.
   *  - `plan <sfDir> <outDir> <suffix> [q1,q2,…]` writes each query's
   *    `explain("formatted")` physical plan to `<outDir>/<q>_<suffix>.txt`
   *    (no list: the whole catalog). Plans are captured without running
@@ -47,11 +50,25 @@ object Instrument {
     val jobs = new AtomicInteger()
     val spanNs = new AtomicLong()
     val starts = scala.collection.concurrent.TrieMap.empty[Int, Long]
+    // a job's properties carry its SQL execution id but no call site;
+    // the execution's start event carries the call site as its
+    // description, so a job is named by the execution that launched it.
+    // A job outside any execution (a schema inference) is named by its
+    // result stage, the last one created, whose name is the job's call
+    // site.
+    val execSites = scala.collection.concurrent.TrieMap.empty[String, String]
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          execSites(x.executionId.toString) = x.description
+        case _ =>
+      }
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(); starts(j.jobId) = System.nanoTime()
         val site = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?")
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .flatMap(execSites.get)
+          .getOrElse(j.stageInfos.maxBy(_.stageId).name)
         System.err.println(s"[jobs] job ${j.jobId} $site " +
           s"stages=${j.stageInfos.map(_.name.takeWhile(_ != ' ')).mkString("|")}")
       }

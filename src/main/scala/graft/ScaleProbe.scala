@@ -188,13 +188,7 @@ object ScaleProbe {
     // Env values are user-controlled free text: a double quote or
     // backslash interpolated raw would emit invalid JSON that
     // check.py --probe silently drops, so escape per RFC 8259.
-    def jstr(s: String): String = s.flatMap {
-      case '"'           => "\\\""
-      case '\\'          => "\\\\"
-      case c if c < ' '  => f"\\u${c.toInt}%04x"
-      case c             => c.toString
-    }
-    jline(s"""{"session":"start","copies":$copies,"anchor_start":$anchorStart,"pid":${ProcessHandle.current().pid()},"only":"${jstr(sys.env.getOrElse("SPARK_GRAFT_PROBE_ONLY", ""))}"}""")
+    jline(s"""{"session":"start","copies":$copies,"anchor_start":$anchorStart,"pid":${ProcessHandle.current().pid()},"only":${Core.jsonStr(sys.env.getOrElse("SPARK_GRAFT_PROBE_ONLY", ""))}}""")
     val seenLabels = scala.collection.mutable.Map.empty[String, Int]
     def bracketed(label0: String, extra: String = "")(body: => Long): Unit = {
       val k = seenLabels.getOrElse(label0, 0) + 1

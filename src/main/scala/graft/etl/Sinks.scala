@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.UUID
@@ -31,14 +32,35 @@ import java.util.UUID
   */
 object Sinks {
 
-  /** R13/R28 "chunks" mode: JSON Lines part files, overwrite like the
-    * reference's WIP cleanup (R25, unified_code.py:28–36). */
-  def jsonChunks(df: DataFrame, dir: String): Unit =
-    // keep null fields: python json.dump writes explicit nulls
-    // (the injected `id = None`, unified_code.py:267), Spark drops
-    // them by default
-    df.write.mode(SaveMode.Overwrite)
-      .option("ignoreNullFields", "false").json(dir)
+  /** R13/R28 "chunks" mode: JSON Lines part files, replacing the
+    * previous output like the reference's WIP cleanup (R25,
+    * unified_code.py:28–36). The job writes a sibling
+    * `<dir>.<uuid>.staging` dir, which is then swapped in: the old dir
+    * is moved aside, the staging dir renamed to `dir` (the old one
+    * moved back if that fails), and the old dir deleted. A failed run
+    * leaves the previous output in place and no staging dir. */
+  def jsonChunks(df: DataFrame, dir: String): Unit = {
+    val target = Paths.get(dir).toAbsolutePath
+    val id = UUID.randomUUID
+    val staging = target.resolveSibling(s"${target.getFileName}.$id.staging")
+    val old = target.resolveSibling(s"${target.getFileName}.$id.old")
+    try {
+      // keep null fields: python json.dump writes explicit nulls
+      // (the injected `id = None`, unified_code.py:267), Spark drops
+      // them by default
+      df.write.option("ignoreNullFields", "false").json(staging.toString)
+      if (crashBeforePublish) throw new RuntimeException("injected crash before publish")
+      if (Files.exists(target)) Files.move(target, old)
+      try Files.move(staging, target)
+      catch { case e: Throwable =>
+        if (Files.exists(old)) Files.move(old, target)
+        throw e
+      }
+    } finally {
+      FileUtils.deleteQuietly(staging.toFile)
+      FileUtils.deleteQuietly(old.toFile)
+    }
+  }
 
   /** R14+R15 byte-parity sink: a single JSON *array* file, pretty
     * (indent=4, like json.dump(..., indent=4), unified_code.py:349)
@@ -76,9 +98,9 @@ object Sinks {
     Metrics.WriteStats(rows.length, 1, bytes.length)
   }
 
-  /** Test-only failpoint: throw after [[jsonArrayFile]] has written its
-    * temp file but before it renames it over the target. Never set
-    * outside tests. */
+  /** Test-only failpoint: throw after [[jsonArrayFile]] or
+    * [[jsonChunks]] has written its temp file or staging dir but
+    * before it renames it over the target. Never set outside tests. */
   @volatile private[graft] var crashBeforePublish: Boolean = false
 
   /** Pretty-print one compact JSON object at indent level 1 (4 spaces),

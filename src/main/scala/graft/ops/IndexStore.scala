@@ -35,6 +35,19 @@ import graft.Core._
   * Every mutation is one [[transact]]ion whose manifest follows one
   * merge rule: a full write commits `prior -- familyChannels ++ fresh`,
   * an append extends each channel's path list ([[appendManifest]]).
+  * `cluster_labels` is staged by [[stageLabels]] (a full labelling or
+  * a fold's delta), and the 1-row census channels by [[stageRow]].
+  *
+  * The guards are written once too, and every entry point calls them:
+  * [[appendGuard]] (replay/disjointness), [[censusFormatGuard]] and
+  * [[censusRequired]] (governance), [[projPairingGuard]] (raw/proj
+  * pairing), [[orphanGate]] (source-less rows of a gated fold) and
+  * [[gateVerdict]] (the drift breaker's held sources and report).
+  * [[withCheckpoint]] is the one owner of executor-side checkpoints:
+  * it takes each checkpoint and releases it on every exit, refusals
+  * included ([[withPrintable]] builds the media fingerprints through
+  * it). Only [[screenAndFoldFrom]], which returns its checkpoint, and
+  * [[appendUnifiedGated]]'s CAS handshake release their own.
   *
   * == Snapshot layout (format_version 1) ==
   *
@@ -149,40 +162,48 @@ object IndexStore {
     *
     * Returns the union of the blocks' staged channel entries. */
   private def stageConcurrently(
-      blocks: (() => Map[String, Channel])*): Map[String, Channel] = {
+      blocks: (() => Map[String, Channel])*): Map[String, Channel] =
+    stageBlocks(blocks, interrupt = true)
+
+  /** [[stageConcurrently]]; with `interrupt = false` a failure (or an
+    * interrupt of the caller) lets the blocks still running finish
+    * instead of interrupting them. For blocks that read frames the
+    * caller cached: an interrupted query can leave an adaptive query
+    * stage running that rebuilds the cache after the caller released
+    * it, stranding its blocks. */
+  private def stageBlocks(blocks: Seq[() => Map[String, Channel]],
+      interrupt: Boolean): Map[String, Channel] = {
     import java.util.concurrent._
-    val seq = new java.util.concurrent.atomic.AtomicInteger()
-    val pool = Executors.newFixedThreadPool(blocks.size,
-      (r: Runnable) => {
-        val t = new Thread(r, s"graft-stage-${seq.incrementAndGet()}")
-        t.setDaemon(true); t
-      })
+    val pool = daemonPool(blocks.size, "graft-stage")
     try {
       val ecs = new ExecutorCompletionService[Map[String, Channel]](pool)
       val futs = blocks.map(b => ecs.submit(
         new Callable[Map[String, Channel]] { def call() = b() }))
-      var done = 0
-      while (done < blocks.size) {
-        try { ecs.take().get(); done += 1 } catch {
-          case e: ExecutionException =>
-            futs.foreach(_.cancel(true))
-            pool.shutdownNow()
-            // bounded grace for interrupted stragglers: Spark actions
-            // abort on interrupt within seconds; a writer that ignores
-            // even this no longer wedges the fold — its output is
-            // uncommitted staging garbage. A straggler that outlives
-            // even the grace is SURFACED (ADVICE r15): the caller is
-            // about to unwind while a daemon thread may still write
-            // staging files — harmless to committed state (nothing
-            // references the staging dir), but an operator diagnosing
-            // the original fault should see the wedge, not infer it.
-            if (!pool.awaitTermination(120, TimeUnit.SECONDS))
-              System.err.println("[graft] stageConcurrently: a staging " +
-                "writer ignored interrupt for 120 s and may still be " +
-                "writing into the uncommitted staging dir; propagating " +
-                s"the original failure anyway: ${e.getCause}")
-            throw e.getCause
-        }
+      try for (_ <- blocks) ecs.take().get()
+      catch { case e @ (_: ExecutionException | _: InterruptedException) =>
+        // a failed block, or this thread interrupted because it is
+        // itself a block of a failing outer staging (a family that
+        // stages its channels concurrently): stop every block and wait
+        // for them, so their releases (checkpoints, cached frames)
+        // finish before the caller unwinds
+        if (interrupt) { futs.foreach(_.cancel(true)); pool.shutdownNow() }
+        else pool.shutdown()
+        val cause = e match { case x: ExecutionException => x.getCause; case x => x }
+        // bounded grace for interrupted stragglers: Spark actions
+        // abort on interrupt within seconds; a writer that ignores
+        // even this no longer wedges the fold — its output is
+        // uncommitted staging garbage. A straggler that outlives
+        // even the grace is SURFACED (ADVICE r15): the caller is
+        // about to unwind while a daemon thread may still write
+        // staging files — harmless to committed state (nothing
+        // references the staging dir), but an operator diagnosing
+        // the original fault should see the wedge, not infer it.
+        if (!uninterruptibly(pool.awaitTermination(120, TimeUnit.SECONDS)))
+          System.err.println("[graft] stageConcurrently: a staging " +
+            "writer did not stop within 120 s and may still be " +
+            "writing into the uncommitted staging dir; propagating " +
+            s"the original failure anyway: $cause")
+        throw cause
       }
       futs.map(_.get()).reduce(_ ++ _)
     } finally pool.shutdown()
@@ -217,12 +238,7 @@ object IndexStore {
     import java.util.concurrent._
     if (blocks.sizeIs <= 1) blocks.map(_()).toSeq
     else {
-      val seq = new java.util.concurrent.atomic.AtomicInteger()
-      val pool = Executors.newFixedThreadPool(blocks.size,
-        (r: Runnable) => {
-          val t = new Thread(r, s"graft-probe-${seq.incrementAndGet()}")
-          t.setDaemon(true); t
-        })
+      val pool = daemonPool(blocks.size, "graft-probe")
       try {
         val futs = blocks.map(b =>
           pool.submit(new Callable[A] { def call(): A = b() }))
@@ -231,6 +247,34 @@ object IndexStore {
           catch { case e: ExecutionException => throw e.getCause }).toSeq
       } finally pool.shutdownNow()
     }
+  }
+
+  /** A fixed pool of `n` daemon threads named `<name>-<i>`: the
+    * dedicated pool [[stageConcurrently]] and [[probeConcurrently]]
+    * each run their blocks on. */
+  private def daemonPool(n: Int, name: String) = {
+    val seq = new java.util.concurrent.atomic.AtomicInteger()
+    java.util.concurrent.Executors.newFixedThreadPool(n, (r: Runnable) => {
+      val t = new Thread(r, s"$name-${seq.incrementAndGet()}")
+      t.setDaemon(true); t
+    })
+  }
+
+  /** `body`, run again until an interrupt no longer cuts it short;
+    * the interrupt is kept for the caller. A staging thread that a
+    * failing sibling interrupted must still release what it holds, and
+    * wait for its own blocks: Spark's unpersist waits on an RPC that
+    * throws on the interrupt flag before the RDD is dropped, and
+    * awaitTermination throws on it at once. `body` must be safe to run
+    * again after an interrupt. */
+  private def uninterruptibly[T](body: => T): T = {
+    var interrupted = Thread.interrupted()
+    try {
+      var r: Option[T] = None
+      while (r.isEmpty)
+        try r = Some(body) catch { case _: InterruptedException => interrupted = true }
+      r.get
+    } finally if (interrupted) Thread.currentThread().interrupt()
   }
 
   private def pointer(root: String) = Paths.get(root, "_current")
@@ -244,11 +288,8 @@ object IndexStore {
     name.stripPrefix("snap_").toInt
 
   private def manifestJson(channels: Map[String, Channel]): String = {
-    def esc(x: String) = x.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString
-    }
     val chs = channels.toSeq.sortBy(_._1).map { case (n, c) =>
-      s"""    "${esc(n)}": {"paths": [${c.paths.map(p => "\"" + esc(p) + "\"").mkString(", ")}], "partition_by": "${esc(c.partitionBy)}", "sort": "${esc(c.sort)}"}"""
+      s"""    ${jsonStr(n)}: {"paths": [${c.paths.map(jsonStr).mkString(", ")}], "partition_by": ${jsonStr(c.partitionBy)}, "sort": ${jsonStr(c.sort)}}"""
     }.mkString(",\n")
     s"""{\n  "format_version": $FormatVersion,\n  "channels": {\n$chs\n  }\n}\n"""
   }
@@ -283,13 +324,8 @@ object IndexStore {
 
   /** The live snapshot's channel map; fails loudly on anything that is
     * not a committed format-v1 store. */
-  private def channels(root: String): Map[String, Channel] = {
-    val cur = currentSnapOpt(root).getOrElse(throw new IllegalStateException(
-      s"$root is not an index store: no _current snapshot pointer " +
-        "(pre-snapshot flat layouts and foreign directories are refused, " +
-        "never misread)"))
-    parseManifest(root, cur)
-  }
+  private def channels(root: String): Map[String, Channel] =
+    parseManifest(root, liveSnap(root))
 
   /** (base snapshot, channel map) for a WRITER's transaction — the
     * pointer is read ONCE and the pair is the transaction's optimistic
@@ -303,12 +339,16 @@ object IndexStore {
   /** Like [[baseForWrite]] but the store must already exist (append
     * transactions). */
   private def baseRequired(root: String): (Option[String], Map[String, Channel]) = {
-    val cur = currentSnapOpt(root).getOrElse(throw new IllegalStateException(
+    val cur = liveSnap(root)
+    (Some(cur), parseManifest(root, cur))
+  }
+
+  /** The live snapshot's name; refuses a directory with no pointer. */
+  private def liveSnap(root: String): String =
+    currentSnapOpt(root).getOrElse(throw new IllegalStateException(
       s"$root is not an index store: no _current snapshot pointer " +
         "(pre-snapshot flat layouts and foreign directories are refused, " +
         "never misread)"))
-    (Some(cur), parseManifest(root, cur))
-  }
 
   private[graft] def deleteRec(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
@@ -464,9 +504,7 @@ object IndexStore {
     * crash-before-manifest leaves no manifest, crash-after-manifest
     * leaves its index past the never-flipped pointer). */
   def history(root: String): Seq[String] = {
-    val cur = currentSnapOpt(root).getOrElse(throw new IllegalStateException(
-      s"$root is not an index store: no _current snapshot pointer"))
-    val curIdx = snapIndex(cur)
+    val curIdx = snapIndex(liveSnap(root))
     Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("snap_"))
       .filter(f => scala.util.Try(snapIndex(f.getName)).toOption
@@ -523,6 +561,14 @@ object IndexStore {
     if (hasData(s"$root/$snap/$name"))
       Map(name -> Channel(Seq(s"$snap/$name"), partitionBy, sort))
     else Map.empty
+
+  /** Stage the 1-row census channel `name` (one file) into `snap`. Its
+    * entry is recorded even for a zero count. */
+  private def stageRow(root: String, snap: String, name: String,
+      row: DataFrame): Map[String, Channel] = {
+    row.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/$name")
+    Map(name -> Channel(Seq(s"$snap/$name"), "", ""))
+  }
 
   /** One snapshot transaction: open a staging dir, let `stage` write
     * into it and return the new manifest, then publish that manifest
@@ -907,14 +953,20 @@ object IndexStore {
       "writeClusters: empty docs frame — see write()")
     val (base, prior) = baseForWrite(out)
     transact(out, base) { snap =>
-      val labels = Dedup.clusterLabelsFor(s, docs)
-      try labels.write.mode(SaveMode.Overwrite).parquet(s"$out/$snap/cluster_labels")
       // the CC run's final-round checkpoint is only needed until the
       // labels land in parquet
-      finally releaseCheckpoint(labels)
-      maybeCrash("cluster_labels")
-      prior + ("cluster_labels" -> Channel(Seq(s"$snap/cluster_labels"), "", ""))
+      prior ++ withCheckpoint(Dedup.clusterLabelsFor(s, docs), adopt = true)(
+        stageLabels(out, snap, _))
     }
+  }
+
+  /** Stage a `cluster_labels` frame (a full labelling or a fold's
+    * label delta) into `snap`. */
+  private def stageLabels(root: String, snap: String,
+      labels: DataFrame): Map[String, Channel] = {
+    labels.write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/cluster_labels")
+    maybeCrash("cluster_labels")
+    staged(root, snap, "cluster_labels")
   }
 
   /** Merge an incoming batch into the persisted clustering WITHOUT
@@ -1059,61 +1111,88 @@ object IndexStore {
         censusFormatGuard(s, indexDir, prior, "append"); None },
       () => appendGuard("append", batch, "doc_id",
         channelFrom(s, indexDir, prior, "fingerprints")))(1).foreach { batchN =>
-      // the label DELTA is computed EAGERLY (localCheckpoint) before
-      // the new snapshot stages: the merge must see the pre-append
-      // band index. O(batch-driven changes) rows — the fold's write
-      // cost now matches its compute shape (round 7 wrote the merged
+      // the label DELTA is computed EAGERLY (checkpointed) before the
+      // new snapshot stages: the merge must see the pre-append band
+      // index. O(batch-driven changes) rows — the fold's write cost
+      // now matches its compute shape (round 7 wrote the merged
       // O(corpus) artifact here every micro-batch).
-      val labelDelta =
-        if (prior.contains("cluster_labels")) Some {
-          val plan = labelDeltaFrom(s, indexDir, prior, batch)
-          val d = plan.localCheckpoint()
-          // the supernode CC's final-round edge checkpoint feeds `plan`
-          // only until the delta materializes — release it here, not at
-          // driver GC. Surgical: `batch` may itself ride on a live
-          // checkpoint (screenAndFold's decisions frame, still needed
-          // by the channel writes below and returned to the caller),
-          // so only RDDs NOT reachable from the batch plan are dropped.
-          releaseCheckpointExcept(plan, batch)
-          d
-        } else None
-      // released on EVERY exit: a failure (crash injection, lost OCC
-      // race) must not strand blocks across retries, and after a
-      // successful commit the parquet delta holds the rows
-      try {
-      // governed stores extend the census every fold (format-guarded
-      // at the top of appendFrom, before any staging); the batch's bin
-      // counts are additive, so readers just sum across the path list.
-      // The frame (and its schema refusal) is built BEFORE the staging
-      // threads launch — the hoisted cheap-refusal discipline.
-      val census = if (prior.contains("mix_census"))
-        Some(censusRequired("append", batch))
-      else None
-      // the channel deltas derive independently from `batch`; each is
-      // a small job paying mostly scheduler latency (guide §2.6 /
-      // SCALE.md "commit-latency-bound") — stage concurrently like
-      // writeUnified. The bloom is replaced (or dropped past the gate):
-      // its merge chains after its own fingerprints write, and its
-      // rebuild arm reads the staged path.
-      transact(indexDir, base) { snap =>
-        val mergedFps = () => s.read.parquet(
-          (prior.get("fingerprints").map(_.paths).getOrElse(Seq.empty) ++
-            Seq(s"$snap/fingerprints").filter(p => hasData(s"$indexDir/$p")))
-            .map(p => s"$indexDir/$p"): _*).select(col("fp"))
-        appendManifest(prior - "bloom", stageConcurrently(
-          () => stageDedup(s, batch, indexDir, snap, fps => mergeBloomInto(
-            s, indexDir, prior, fps, batchN, mergedFps, snap)),
-          () => labelDelta.map { d =>
-            d.write.mode(SaveMode.Overwrite)
-              .parquet(s"$indexDir/$snap/cluster_labels")
-            maybeCrash("cluster_labels")
-            staged(indexDir, snap, "cluster_labels")
-          }.getOrElse(Map.empty),
-          () => census.map(stageCensus(indexDir, snap, _)).getOrElse(Map.empty)))
+      val plan = Option.when(prior.contains("cluster_labels"))(
+        labelDeltaFrom(s, indexDir, prior, batch))
+      withCheckpointOpt(plan) { labelDelta =>
+        // the supernode CC's final-round edge checkpoint feeds `plan`
+        // only until the delta materializes — release it here, not at
+        // driver GC. Surgical: `batch` may itself ride on a live
+        // checkpoint (screenAndFold's decisions frame, still needed by
+        // the channel writes below and returned to the caller), so only
+        // RDDs NOT reachable from the batch plan are dropped.
+        plan.foreach(releaseCheckpointExcept(_, batch))
+        // governed stores extend the census every fold (format-guarded
+        // at the top of appendFrom, before any staging); the batch's bin
+        // counts are additive, so readers just sum across the path list.
+        // The frame (and its schema refusal) is built BEFORE the staging
+        // threads launch — the hoisted cheap-refusal discipline.
+        val census = Option.when(prior.contains("mix_census"))(
+          censusRequired("append", batch))
+        // the channel deltas derive independently from `batch`; each is
+        // a small job paying mostly scheduler latency (guide §2.6 /
+        // SCALE.md "commit-latency-bound") — stage concurrently like
+        // writeUnified. The bloom is replaced (or dropped past the gate):
+        // its merge chains after its own fingerprints write, and its
+        // rebuild arm reads the stored and staged fingerprint paths
+        // through the appended manifest.
+        transact(indexDir, base) { snap =>
+          val mergedFps = () => channelFrom(s, indexDir,
+            appendManifest(prior, staged(indexDir, snap, "fingerprints")),
+            "fingerprints").select(col("fp"))
+          appendManifest(prior - "bloom", stageConcurrently(
+            () => stageDedup(s, batch, indexDir, snap, fps => mergeBloomInto(
+              s, indexDir, prior, fps, batchN, mergedFps, snap)),
+            () => labelDelta.map(stageLabels(indexDir, snap, _)).getOrElse(Map.empty),
+            () => census.map(stageCensus(indexDir, snap, _)).getOrElse(Map.empty)))
+        }
       }
-      } finally labelDelta.foreach(releaseCheckpoint)
     }
   }
+
+  /** The one owner of the store's executor-side checkpoints: `body`
+    * borrows `frame` checkpointed, and the blocks behind it are
+    * released on EVERY exit — success, refusal, crash injection or a
+    * lost OCC race — so nothing strands MEMORY_AND_DISK blocks until
+    * driver GC. The checkpoint is taken lazily, so nothing is
+    * persisted before the `finally` owns it (an eager checkpoint job
+    * interrupted mid-way persists blocks nothing releases), and
+    * `eager` then materializes it in one job, as an eager checkpoint
+    * does.
+    * `adopt` lends a frame its producer already checkpointed (CC
+    * labels, a trained model) and only takes over its release.
+    * [[screenAndFoldFrom]] (which returns its checkpoint) and
+    * [[appendUnifiedGated]] (the CAS handshake) keep their own. */
+  private def withCheckpoint[T](frame: DataFrame, eager: Boolean = true,
+      adopt: Boolean = false)(body: DataFrame => T): T = {
+    val c = if (adopt) frame else frame.localCheckpoint(eager = false)
+    try {
+      if (eager && !adopt) checkpointRdds(c).foreach(_.count())
+      body(c)
+    } finally releaseCheckpoint(c)
+  }
+
+  /** [[withCheckpoint]] over an optional frame: None lends None. */
+  private def withCheckpointOpt[T](frame: Option[DataFrame])(
+      body: Option[DataFrame] => T): T =
+    frame.fold(body(None))(withCheckpoint(_)(c => body(Some(c))))
+
+  /** A media batch's byte-shingle fingerprints ([[Dedup.simhash60Bytes]]),
+    * checkpointed once for every guard and staging step of the
+    * transaction that reads them. */
+  private def withPrintable[T](payloads: Option[DataFrame])(
+      body: Option[DataFrame] => T): T =
+    withCheckpointOpt(payloads.map(Dedup.simhash60Bytes(_)))(body)
+
+  /** The RDDs behind a checkpointed frame's plan. */
+  private def checkpointRdds(df: DataFrame) =
+    df.queryExecution.logical.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
 
   /** Release the executor blocks behind a localCheckpoint'ed frame.
     * Dataset.unpersist is a NO-OP for checkpoints — the checkpoint
@@ -1122,26 +1201,16 @@ object IndexStore {
     * through the plan's LogicalRDD. Best-effort: an unrecognized plan
     * shape just falls back to ContextCleaner reclamation. */
   private[ops] def releaseCheckpoint(df: DataFrame): Unit =
-    scala.util.Try {
-      df.queryExecution.logical.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(false)
-      }; ()
-    }
+    scala.util.Try(checkpointRdds(df).foreach(r => uninterruptibly(r.unpersist(false))))
 
   /** [[releaseCheckpoint]] minus every RDD reachable from `keep`'s
     * plan — for plans that COMPOSE a dead internal checkpoint with a
     * caller-owned live one. */
   private def releaseCheckpointExcept(df: DataFrame, keep: DataFrame): Unit =
     scala.util.Try {
-      val keepIds = keep.queryExecution.logical.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-      }.toSet
-      df.queryExecution.logical.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD
-            if !keepIds.contains(lr.rdd.id) =>
-          lr.rdd.unpersist(false)
-      }; ()
+      val keepIds = checkpointRdds(keep).map(_.id).toSet
+      checkpointRdds(df).filterNot(r => keepIds(r.id))
+        .foreach(r => uninterruptibly(r.unpersist(false)))
     }
 
   /** The ingest loop's read-modify-write as ONE transaction:
@@ -1232,19 +1301,20 @@ object IndexStore {
     * a corpus scan. */
   def batchDriftVsStore(s: SparkSession, indexDir: String,
       batch: DataFrame, anchor: String): DataFrame =
-    batchDriftVsStoreFrom(s, indexDir, baseRequired(indexDir)._2, batch, anchor)
+    driftVsAnchor(s, indexDir, channels(indexDir), Selection.censusBins(batch),
+      anchor)
 
-  /** [[batchDriftVsStore]] against a caller-held manifest — the
-    * gate's census read through the SAME resolution its fold commits
-    * against (single-base discipline; see [[screenAndFoldFrom]]). */
-  private def batchDriftVsStoreFrom(s: SparkSession, indexDir: String,
-      prior: Map[String, Channel], batch: DataFrame,
+  /** PSI of the census `bins` (its non-anchor sources) against the
+    * STORED anchor rows of the caller-held manifest — the gate's census
+    * read through the SAME resolution its fold commits against
+    * (single-base discipline; see [[screenAndFoldFrom]]). */
+  private def driftVsAnchor(s: SparkSession, indexDir: String,
+      prior: Map[String, Channel], bins: DataFrame,
       anchor: String): DataFrame =
     Selection.psiFromBins(
       channelFrom(s, indexDir, prior, "mix_census")
         .filter(col("source") === anchor)
-        .unionByName(
-          Selection.censusBins(batch).filter(col("source") =!= anchor)),
+        .unionByName(bins.filter(col("source") =!= anchor)),
       anchor)
 
   /** [[screenAndFold]] behind the drift CIRCUIT BREAKER: batch
@@ -1279,69 +1349,67 @@ object IndexStore {
       batch: DataFrame, anchor: String,
       maxPsi: Double = 0.25, orderGate: Boolean = false,
       maxOrderPsi: Double = 0.25): (DataFrame, DataFrame) = {
-    import s.implicits._
     // ONE (base, prior) capture for the whole gate+fold: the census
     // the verdict is computed against is the census the fold commits
     // against — a rival landing anywhere between gate and append is a
     // detected OCC conflict, never a silently-stale verdict.
     val (base, prior) = baseRequired(indexDir)
-    // four-feature gate (rounds 11-13): a source is held when ANY
-    // marginal's PSI trips — psi_max is the greatest of the rnd4'd
-    // per-feature values (the token marginal joining past its evidence
-    // floor), so a content shift at constant length (q163), at
-    // constant length AND token count (q166), or a vocabulary swap
-    // invisible to all three doc marginals (q167) holds exactly like
-    // a length shift
-    val rep = batchDriftVsStoreFrom(s, indexDir, prior, batch, anchor)
-      .select(col("source"), col("n_docs"), col("psi_nchars"),
-        col("psi_ntokens"), col("psi_nonalpha"), col("psi_tokhash"),
-        col("psi_max"), (col("psi_max") > maxPsi).as("held"))
-      .as[(String, Long, Double, Double, Double, Double, Double, Boolean)]
-      .collect().toSeq
-    val ord = orderVerdict(s, batch, anchor, orderGate, maxOrderPsi)
-    val heldSrcs = (rep.filter(_._8).map(_._1) ++
-      ord.collect { case (src, (_, true)) => src }).distinct
+    val (held, report) = gateVerdict(s, indexDir, prior, batch,
+      () => Selection.censusBins(batch), anchor, maxPsi, orderGate, maxOrderPsi)
     val admitted =
-      if (heldSrcs.isEmpty) batch
-      else batch.filter(!col("source").isin(heldSrcs: _*))
-    (screenAndFoldFrom(s, indexDir, base, prior, admitted),
-      gateReport(s, rep, ord, orderGate))
+      if (held.isEmpty) batch
+      else batch.filter(!col("source").isin(held: _*))
+    (screenAndFoldFrom(s, indexDir, base, prior, admitted), report)
   }
 
-  /** The order-screen verdicts of a gated fold's non-anchor batch
-    * sources: source -> (psi_order, held-by-order). Empty when the
-    * gate is off; a source with no order row (no tokens at all) is
-    * below any evidence floor and cannot be order-held. Shared by
-    * [[screenAndFoldGated]] and [[appendUnifiedGated]]. */
-  private def orderVerdict(s: SparkSession, batch: DataFrame,
-      anchor: String, orderGate: Boolean,
-      maxOrderPsi: Double): Map[String, (Double, Boolean)] = {
-    import s.implicits._
-    if (!orderGate) Map.empty
-    else Selection.orderShiftPsi(batch.filter(col("source") =!= anchor))
-      .select(col("source"), col("n_toks"), col("psi_order"))
-      .as[(String, Long, Double)].collect()
-      .map { case (src, nToks, psi) => src ->
-        (psi, nToks >= Selection.MinTokhashEvidence && psi > maxOrderPsi) }
-      .toMap
-  }
+  private type GateRow = (String, Long, Double, Double, Double, Double, Double, Boolean)
 
-  /** The gated fold's report frame: the four-marginal columns always;
-    * `psi_order` added and the order verdict folded into `held` only
-    * when the order gate ran (schema back-compat for every existing
-    * gate consumer). */
-  private def gateReport(s: SparkSession,
-      rep: Seq[(String, Long, Double, Double, Double, Double, Double, Boolean)],
-      ord: Map[String, (Double, Boolean)], orderGate: Boolean): DataFrame = {
+  /** One gated fold's verdict, shared by [[screenAndFoldGated]] and
+    * [[appendUnifiedGated]]: the four-feature gate (rounds 11-13) — a
+    * source is held when ANY marginal's PSI trips: psi_max, the
+    * greatest of the rnd4'd per-feature values of the batch census
+    * `bins()` against the stored anchor ([[driftVsAnchor]]; the token
+    * marginal joins past its evidence floor), passes `maxPsi`, so a
+    * content shift at constant length (q163), at constant length AND
+    * token count (q166), or a vocabulary swap invisible to all three
+    * doc marginals (q167) holds exactly like a length shift — or when
+    * the opt-in order screen, run concurrently, holds it. Returns (held
+    * sources, the per-source report frame). */
+  private def gateVerdict(s: SparkSession, root: String,
+      prior: Map[String, Channel], batch: DataFrame, bins: () => DataFrame,
+      anchor: String, maxPsi: Double, orderGate: Boolean,
+      maxOrderPsi: Double): (Seq[String], DataFrame) = {
     import s.implicits._
-    if (!orderGate)
-      rep.toDF("source", "n_docs", "psi_nchars", "psi_ntokens",
-        "psi_nonalpha", "psi_tokhash", "psi_max", "held")
-    else rep.map { case (src, nd, pc, pt, pa, ph, mx, held) =>
+    val v = probeConcurrently[Any](
+      () => driftVsAnchor(s, root, prior, bins(), anchor)
+        .select(col("source"), col("n_docs"), col("psi_nchars"),
+          col("psi_ntokens"), col("psi_nonalpha"), col("psi_tokhash"),
+          col("psi_max"), (col("psi_max") > maxPsi).as("held"))
+        .as[GateRow].collect().toSeq,
+      // the order screen: per non-anchor batch source, (psi_order,
+      // held-by-order); empty when the gate is off. A source with no
+      // order row (no tokens at all) is below any evidence floor and
+      // cannot be order-held.
+      () => if (!orderGate) Map.empty
+      else Selection.orderShiftPsi(batch.filter(col("source") =!= anchor))
+        .select(col("source"), col("n_toks"), col("psi_order"))
+        .as[(String, Long, Double)].collect()
+        .map { case (src, nToks, psi) => src ->
+          (psi, nToks >= Selection.MinTokhashEvidence && psi > maxOrderPsi) }
+        .toMap)
+    val rep = v(0).asInstanceOf[Seq[GateRow]]
+    val ord = v(1).asInstanceOf[Map[String, (Double, Boolean)]]
+    // the report: `psi_order` and the order verdict folded into `held`
+    // only when the order gate ran (schema back-compat for every
+    // existing gate consumer)
+    val report = rep.map { case (src, nd, pc, pt, pa, ph, mx, held) =>
       val (psiOrd, heldOrd) = ord.getOrElse(src, (0.0, false))
       (src, nd, pc, pt, pa, ph, mx, psiOrd, held || heldOrd)
     }.toDF("source", "n_docs", "psi_nchars", "psi_ntokens",
       "psi_nonalpha", "psi_tokhash", "psi_max", "psi_order", "held")
+    ((rep.filter(_._8).map(_._1) ++
+      ord.collect { case (src, (_, true)) => src }).distinct,
+      if (orderGate) report else report.drop("psi_order"))
   }
 
   /** Audited census anchor RE-BASELINE — the governance lifecycle's
@@ -1455,12 +1523,10 @@ object IndexStore {
       .write.mode(SaveMode.Overwrite).partitionBy("b")
       .parquet(s"$root/$snap/media_sim_blocks")
     maybeCrash("media_sim_blocks")
-    Seq((prior._1 + batchN, prior._2 + 4 * batchN)).toDF("n_payloads", "n_blocks")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/$snap/media_stats")
+    val stats = stageRow(root, snap, "media_stats",
+      Seq((prior._1 + batchN, prior._2 + 4 * batchN)).toDF("n_payloads", "n_blocks"))
     maybeCrash("media_stats")
-    staged(root, snap, "media_sim_blocks", "b") +
-      ("media_stats" -> Channel(Seq(s"$snap/media_stats"), "", ""))
+    staged(root, snap, "media_sim_blocks", "b") ++ stats
   }
 
   /** The stored media census, BACKFILLED once for a pre-media_stats
@@ -1487,12 +1553,7 @@ object IndexStore {
     * payload: binary). */
   def writeMedia(s: SparkSession, payloads: DataFrame, out: String): Unit = {
     val (base, prior) = baseForWrite(out)
-    val printable = Dedup.simhash60Bytes(payloads).localCheckpoint()
-    // released on EVERY exit (the require below included): the
-    // checkpoint holds the batch's fingerprint blocks in executor
-    // storage, and a long-lived serving session would otherwise carry
-    // one stranded frame per media write until driver GC
-    try {
+    withPrintable(Some(payloads))(_.foreach { printable =>
       require(!printable.isEmpty,
         "writeMedia: no fingerprintable payloads (empty frame, or every " +
           "payload shorter than one byte-shingle window) — a channel-less " +
@@ -1501,7 +1562,7 @@ object IndexStore {
       transact(out, base) { snap =>
         prior -- MediaChannels ++ stageMedia(s, out, snap, printable, (0L, 0L))
       }
-    } finally releaseCheckpoint(printable)
+    })
   }
 
   /** O(batch) append into the media channel (disjointness enforced
@@ -1513,9 +1574,8 @@ object IndexStore {
     // stored): a batch id the channel cannot hold must not block its
     // own redelivery, and a batch with nothing storable is a no-op.
     // Guard read through the transaction's base manifest (single-base
-    // discipline), checkpoint released on every exit.
-    val printable = Dedup.simhash60Bytes(batch).localCheckpoint()
-    try {
+    // discipline).
+    withPrintable(Some(batch))(_.foreach { printable =>
       if (appendGuard("appendMedia", printable, "doc_id",
           channelFrom(s, indexDir, prior, "media_sim_blocks"),
           fingerprint = Some("sim")).isDefined)
@@ -1523,7 +1583,7 @@ object IndexStore {
           appendManifest(prior, stageMedia(s, indexDir, snap, printable,
             mediaStatsOf(s, indexDir, prior)))
         }
-    } finally releaseCheckpoint(printable)
+    })
   }
 
   /** Batch payloads whose byte-shingle fingerprint sits within Hamming
@@ -1700,16 +1760,14 @@ object IndexStore {
     // the base must be one snapshot by construction, as appendFrom /
     // screenAndFold already do (and it saves a redundant manifest read)
     else if (appendGuard("appendText", batch, "doc_id",
-        channelFrom(s, indexDir, prior, "doc_lens")).isDefined) {
-      val st = channelFrom(s, indexDir, prior, "stats").head()
+        channelFrom(s, indexDir, prior, "doc_lens")).isDefined)
       // a degenerate bootstrap (all-letterless opening batch) commits
       // doc_lens+stats but no data-less postings channel, and the first
       // real append creates it (the appendManifest rule)
       transact(indexDir, base) { snap =>
-        appendManifest(prior, writeTextInto(s, batch, indexDir, snap,
-          Some((st.getAs[Long]("n_docs"), st.getAs[Long]("sum_dl"))), preTok))
+        appendManifest(prior,
+          writeTextInto(s, batch, indexDir, snap, Some(prior), preTok))
       }
-    }
   }
 
   /** Stage the three text channels of one doc frame into `snap`;
@@ -1726,7 +1784,10 @@ object IndexStore {
     * append recorded but the channel omitted would make that doc's
     * exact redelivery unrecognizable (misread as partial overlap,
     * wedging the stream). The stats census still counts only INDEXED
-    * docs (dl > 0 — the q143 oracle's WHERE clause).
+    * docs (dl > 0 — the q143 oracle's WHERE clause). A full write
+    * passes `fold = None`; an append passes its prior manifest, whose
+    * `stats` row the new one extends (read here, once, for every
+    * text fold).
     *
     * `preTok` (round 12, VERDICT r11 next #3 — warm consolidation):
     * an optional PRE-TOKENIZED (doc_id, term, tf) frame covering a
@@ -1739,7 +1800,7 @@ object IndexStore {
     * — a stale or foreign frame silently corrupts the postings; the
     * route equivalence is spec-pinned (TextIndexSpec). */
   private def writeTextInto(s: SparkSession, docs: DataFrame,
-      root: String, snap: String, priorStats: Option[(Long, Long)],
+      root: String, snap: String, fold: Option[Map[String, Channel]],
       preTok: Option[DataFrame] = None): Map[String, Channel] = {
     val postings = preTok
       .map(_.join(docs.select(col("doc_id")), Seq("doc_id"), "left_semi"))
@@ -1778,7 +1839,9 @@ object IndexStore {
       // doc_lens + stats chain (both branches read only the two
       // persisted frames above; guide §2.6 — the r16 staging
       // discipline). The commit stays with the caller, after both.
-      stageConcurrently(
+      // Neither is interrupted when the other fails: both read the
+      // cached frames released below.
+      stageBlocks(Seq(
         () => {
           postings.join(docLens, Seq("doc_id"))
             .repartitionByRange(col("term"), col("doc_id"))
@@ -1790,31 +1853,33 @@ object IndexStore {
         () => {
           docLens.write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/doc_lens")
           maybeCrash("doc_lens")
-          // stats channel: exact long merge (prior + batch) — the 1-row
-          // collect is the whole cross-channel coupling. Only INDEXED docs
-          // (dl > 0) enter the census: the id-complete dl=0 rows exist for
-          // the membership guard, not for BM25's N/avgdl
+          // stats channel: exact long merge (a fold's prior stats row +
+          // batch) — the 1-row collects are the whole cross-channel
+          // coupling. Only INDEXED docs (dl > 0) enter the census: the
+          // id-complete dl=0 rows exist for the membership guard, not
+          // for BM25's N/avgdl
+          val (pn, psd) = fold.map { prior =>
+            val st = channelFrom(s, root, prior, "stats").head()
+            (st.getAs[Long]("n_docs"), st.getAs[Long]("sum_dl"))
+          }.getOrElse((0L, 0L))
           val b = docLens.filter(col("dl") > 0)
             .agg(count(lit(1)).as("n"), sum(col("dl")).as("sd")).head()
-          val (bn, bsd) = (b.getLong(0), if (b.isNullAt(1)) 0L else b.getLong(1))
-          val (n, sd) = priorStats match {
-            case Some((pn, psd)) => (pn + bn, psd + bsd)
-            case None => (bn, bsd)
-          }
           import s.implicits._
-          Seq((n, sd)).toDF("n_docs", "sum_dl")
-            .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/stats")
-          staged(root, snap, "doc_lens") +
-            ("stats" -> Channel(Seq(s"$snap/stats"), "", ""))
-        })
+          staged(root, snap, "doc_lens") ++ stageRow(root, snap, "stats",
+            Seq((pn + b.getLong(0), psd + (if (b.isNullAt(1)) 0L else b.getLong(1))))
+              .toDF("n_docs", "sum_dl"))
+        }), interrupt = false)
     } finally {
       // BLOCKING unpersist: the async default returns while tens of GB
       // of cached posting blocks still drain, and that churn taxed the
       // NEXT queries — measured at 100× as 30-44 s "lookups" for two
       // calls after a store write until cleanup settled. Synchronous
       // release charges the cleanup to the write, where it belongs.
-      postings.unpersist(blocking = true)
-      docLens.unpersist(blocking = true); ()
+      // A staging thread interrupted by a failing sibling (see
+      // [[stageConcurrently]]) must release too ([[uninterruptibly]]).
+      uninterruptibly(postings.unpersist(blocking = true))
+      uninterruptibly(docLens.unpersist(blocking = true))
+      ()
     }
   }
 
@@ -2008,9 +2073,8 @@ object IndexStore {
             val n0 = channelFrom(s, root, prior, "cells").count()
             (n0 + batchN, channelFrom(s, root, prior, "centroids").count(), n0)
         }
-        Seq((n, k, nAtTrain)).toDF("n_vecs", "k", "n_at_train")
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/vec_stats")
-        Map("vec_stats" -> Channel(Seq(s"$snap/vec_stats"), "", ""))
+        stageRow(root, snap, "vec_stats",
+          Seq((n, k, nAtTrain)).toDF("n_vecs", "k", "n_at_train"))
       })
 
   /** O(batch) append: assign under the stored centroids, stage into
@@ -2037,20 +2101,8 @@ object IndexStore {
   def appendVectors(s: SparkSession, indexDir: String,
       batch: DataFrame, raw: Option[DataFrame] = None): Unit = {
     val (base, prior) = baseRequired(indexDir)
-    val hasProj = prior.contains("proj_stats")
-    require(hasProj || raw.isEmpty,
-      "appendVectors: raw embeddings were passed for projected-channel " +
-        s"maintenance, but the store at $indexDir carries no proj_stats " +
-        "channel — nothing would be maintained and the caller's " +
-        "expectation would silently not hold; writeProjections first, " +
-        "or drop the raw frame")
-    require(!hasProj || raw.isDefined,
-      s"appendVectors: the store at $indexDir carries the projected-ANN " +
-        "channels (proj_units/exact_vecs), which this append would leave " +
-        "STALE — the same committed version would serve the new vectors " +
-        "on the IVF arm and silently omit them from the projected arm. " +
-        "Pass raw = Some((vec_id, label, embedding) rows of this batch) " +
-        "so both arms advance in one snapshot transaction")
+    projPairingGuard("appendVectors", s"store at $indexDir",
+      Some(prior.contains("proj_stats")), raw, None)
     // guard + centroid reads through the transaction's base manifest
     // (same single-base discipline as appendText)
     appendGuard("appendVectors", batch, "vec_id",
@@ -2068,6 +2120,41 @@ object IndexStore {
             prior, snap, batch, _)).getOrElse(Map.empty)))
       }
     }
+  }
+
+  /** The raw/projection pairing refusals every vector-carrying append
+    * shares, in one fixed order (`op` names the entry point, `store`
+    * the store in its messages):
+    *
+    *  - `hasProj` (whether the store carries `proj_stats`; None skips
+    *    both store checks): a `raw` frame on a store without the
+    *    projected channels would maintain nothing;
+    *  - `vEmpty` (the vectors side's emptiness, for the unified folds
+    *    that allow an empty side; None skips): `raw` beside an EMPTY
+    *    vectors side is a mismatched pairing;
+    *  - a proj-carrying store refuses a vector-carrying append without
+    *    `raw`, which would leave the projected arm STALE — an empty
+    *    vectors side (`vEmpty`) is exempt. */
+  private def projPairingGuard(op: String, store: String,
+      hasProj: Option[Boolean], raw: Option[DataFrame],
+      vEmpty: Option[Boolean]): Unit = {
+    hasProj.foreach(p => require(p || raw.isEmpty,
+      s"$op: raw embeddings were passed for projected-channel " +
+        s"maintenance, but the $store carries no proj_stats channel — " +
+        "nothing would be maintained and the caller's expectation would " +
+        "silently not hold; writeProjections first, or drop the raw frame"))
+    vEmpty.foreach(e => require(raw.isEmpty || !e,
+      s"$op: raw embeddings were passed with an EMPTY vectors side — the " +
+        "projected deltas pair with THIS fold's vectors, so a vectors-less " +
+        "raw frame is a mismatched pairing, not a maintenance tick; fold " +
+        "the raw rows with their vectors"))
+    hasProj.foreach(p => require(!p || vEmpty.contains(true) || raw.isDefined,
+      s"$op: the $store carries the projected-ANN channels " +
+        "(proj_units/exact_vecs), which this vector-carrying append would " +
+        "leave STALE — the same committed version would serve the new " +
+        "vectors on the IVF arm and silently omit them from the projected " +
+        "arm. Pass raw = Some((vec_id, label, embedding) rows of this " +
+        "batch's vectors) so both arms advance in one snapshot transaction"))
   }
 
   /** Stage the projected-channel deltas of an append batch into
@@ -2131,21 +2218,17 @@ object IndexStore {
     * so a retrain doubles as the vector family's compaction. */
   def retrainVectors(s: SparkSession, indexDir: String): Unit = {
     val (base, prior) = baseRequired(indexDir)
-    val stored = channelFrom(s, indexDir, prior, "cells")
-      .select(col("vec_id"), col("label"), col("unit"))
-      .localCheckpoint()
-    // both checkpoints released on EVERY exit — `stored` is a
-    // CORPUS-sized frame, and a crash-injected or OCC-losing retrain
-    // (or a plain success, in a long-lived serving session) must not
-    // strand MEMORY_AND_DISK blocks until driver GC
-    try {
-      // lloydTrain returns an already-checkpointed model frame — no
-      // second checkpoint here, just ownership of the release
-      val cents = Similarity.lloydTrain(stored.select(col("vec_id"), col("unit")))
-      try transact(indexDir, base) { snap =>
-        prior -- VectorChannels ++ stageVectors(s, indexDir, snap, stored, cents, None)
-      } finally releaseCheckpoint(cents)
-    } finally releaseCheckpoint(stored)
+    // `stored` is a CORPUS-sized frame; lloydTrain returns an
+    // already-checkpointed model frame, whose release is adopted
+    withCheckpoint(channelFrom(s, indexDir, prior, "cells")
+        .select(col("vec_id"), col("label"), col("unit"))) { stored =>
+      withCheckpoint(Similarity.lloydTrain(stored.select(col("vec_id"),
+          col("unit"))), adopt = true) { cents =>
+        transact(indexDir, base) { snap =>
+          prior -- VectorChannels ++ stageVectors(s, indexDir, snap, stored, cents, None)
+        }
+      }
+    }
   }
 
   // ---------------------------------------------------------------
@@ -2497,18 +2580,13 @@ object IndexStore {
     * unified-fold warm regression when this helper first landed
     * without it. The checkpoint materializes the assignment once
     * (MEMORY_AND_DISK, spilling for corpus-sized bootstraps — the same
-    * order of I/O as the exchange it feeds), and is released on every
-    * exit. It is LAZY: the sampling pass materializes it, so no job
-    * runs before `a` is owned by the `finally` — an eager checkpoint
-    * interrupted mid-job by a failing sibling staging block (see
-    * [[stageConcurrently]]) would persist blocks nothing releases. */
-  private def stageCells(assigned: DataFrame, dest: String): Unit = {
-    val a = assigned.localCheckpoint(eager = false)
-    try a.repartitionByRange(col("cid"), col("vec_id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cid")
-      .parquet(dest)
-    finally releaseCheckpoint(a)
-  }
+    * order of I/O as the exchange it feeds), and [[withCheckpoint]]
+    * releases it on every exit. It is not made eager: the sampling
+    * pass materializes it, which saves a job. */
+  private def stageCells(assigned: DataFrame, dest: String): Unit =
+    withCheckpoint(assigned, eager = false)(
+      _.repartitionByRange(col("cid"), col("vec_id"))
+        .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(dest))
 
   /** Top-k cosine ANN for a bounded query batch, answered from the
     * stored channels: probe assignment runs against the broadcast
@@ -2712,53 +2790,49 @@ object IndexStore {
     // the checkpointed fingerprints the staging block then reuses, so
     // the hoist costs nothing extra.
     val census = if (governed) Some(censusRequired("writeUnified", docs)) else None
-    val mediaPrintable = payloads.map { p =>
-      val printable = Dedup.simhash60Bytes(p).localCheckpoint()
-      require(!printable.isEmpty,
+    withPrintable(payloads) { mediaPrintable =>
+      mediaPrintable.foreach(printable => require(!printable.isEmpty,
         "writeUnified: no fingerprintable payloads (empty frame, or " +
           "every payload shorter than one byte-shingle window) — a " +
           "media-channel-less store would wedge every later payload " +
           "fold; bootstrap with at least one fingerprintable payload, " +
-          "or omit the payloads side")
-      printable
+          "or omit the payloads side"))
+      val (base, prior) = baseForWrite(out)
+      // the independent channel families stage CONCURRENTLY into their
+      // own subdirectories of the one snapshot (VERDICT r13 next #4 —
+      // see [[stageConcurrently]]); the commit stays single + last.
+      // The proj-family channels are ALWAYS dropped from the prior on a
+      // full rewrite, proj passed or not (ADVICE r11): they describe the
+      // corpus being replaced, and carrying them forward under proj=None
+      // would let the count-based coverage gate pass by coincidence
+      // (same vector count, different corpus) and silently serve the OLD
+      // corpus on the projected arm. A proj=None rewrite leaves a store
+      // with no projected route — loud at read time (projectedAnnFromStore
+      // refuses a proj_stats-less store by name); re-run writeProjections
+      // or pass proj to restore it.
+      transact(out, base) { snap =>
+        prior -- TextChannels -- VectorChannels - "mix_census" --
+          ProjChannels -- MediaChannels ++ stageConcurrently(
+          () => writeTextInto(s, docs, out, snap, None, preTok),
+          () => stageVectors(s, out, snap, vectors, centroids, None),
+          () => census.map(stageCensus(out, snap, _)).getOrElse(Map.empty),
+          // optional projected-channel bootstrap: the serving pair lands in
+          // the SAME commit as the families it must cover, so no version
+          // ever exists where the IVF arm serves and the projected arm is
+          // absent-then-backfilled (and the version axis the q157 oracle
+          // replays stays the ingest timeline, not a channel-add commit)
+          () => proj.zip(projIdentity).map { case ((units, fineVecs), (k, d, fineN)) =>
+            stageProjections(s, out, snap, units, Some(fineVecs), k, d, fineN)
+          }.getOrElse(Map.empty),
+          // media-family bootstrap: the payload fingerprints land in the SAME
+          // commit as the text and vector families (unified id space); the
+          // all-unfingerprintable refusal fired at the top with the other
+          // deterministic refusals, and this block reuses its checkpointed
+          // fingerprints
+          () => mediaPrintable.map(stageMedia(s, out, snap, _, (0L, 0L)))
+            .getOrElse(Map.empty))
+      }
     }
-    try {
-    val (base, prior) = baseForWrite(out)
-    // the independent channel families stage CONCURRENTLY into their
-    // own subdirectories of the one snapshot (VERDICT r13 next #4 —
-    // see [[stageConcurrently]]); the commit stays single + last.
-    // The proj-family channels are ALWAYS dropped from the prior on a
-    // full rewrite, proj passed or not (ADVICE r11): they describe the
-    // corpus being replaced, and carrying them forward under proj=None
-    // would let the count-based coverage gate pass by coincidence
-    // (same vector count, different corpus) and silently serve the OLD
-    // corpus on the projected arm. A proj=None rewrite leaves a store
-    // with no projected route — loud at read time (projectedAnnFromStore
-    // refuses a proj_stats-less store by name); re-run writeProjections
-    // or pass proj to restore it.
-    transact(out, base) { snap =>
-      prior -- TextChannels -- VectorChannels - "mix_census" --
-        ProjChannels -- MediaChannels ++ stageConcurrently(
-        () => writeTextInto(s, docs, out, snap, None, preTok),
-        () => stageVectors(s, out, snap, vectors, centroids, None),
-        () => census.map(stageCensus(out, snap, _)).getOrElse(Map.empty),
-        // optional projected-channel bootstrap: the serving pair lands in
-        // the SAME commit as the families it must cover, so no version
-        // ever exists where the IVF arm serves and the projected arm is
-        // absent-then-backfilled (and the version axis the q157 oracle
-        // replays stays the ingest timeline, not a channel-add commit)
-        () => proj.zip(projIdentity).map { case ((units, fineVecs), (k, d, fineN)) =>
-          stageProjections(s, out, snap, units, Some(fineVecs), k, d, fineN)
-        }.getOrElse(Map.empty),
-        // media-family bootstrap: the payload fingerprints land in the SAME
-        // commit as the text and vector families (unified id space); the
-        // all-unfingerprintable refusal fired at the top with the other
-        // deterministic refusals, and this block reuses its checkpointed
-        // fingerprints
-        () => mediaPrintable.map(stageMedia(s, out, snap, _, (0L, 0L)))
-          .getOrElse(Map.empty))
-    }
-    } finally mediaPrintable.foreach(releaseCheckpoint)
   }
 
   /** O(batch) fold of a (docs, vectors) batch pair into a unified
@@ -2828,9 +2902,7 @@ object IndexStore {
       preCensus: Option[DataFrame] = None): Unit = {
     // the two emptiness probes are independent small jobs — overlap
     // them (probeConcurrently keeps any failure in declaration order)
-    val empt = probeConcurrently(() => docs.isEmpty, () => vectors.isEmpty)
-    val (dEmpty, vEmpty) = (empt(0), empt(1))
-    val hasProj = prior.contains("proj_stats")
+    val Seq(dEmpty, vEmpty) = probeConcurrently(() => docs.isEmpty, () => vectors.isEmpty)
     // generational guard FIRST — a governed docs-carrying fold onto an
     // old-format census must refuse before ANY channel delta is staged
     // (zero wasted ingest work, no orphaned staging dir)
@@ -2842,119 +2914,92 @@ object IndexStore {
         "hold the fingerprints and a later screen would silently see " +
         "none of them; bootstrap the media family with " +
         "writeUnified(..., payloads = ...), or drop the payloads side")
-    require(hasProj || raw.isEmpty,
-      "appendUnified: raw embeddings were passed for projected-channel " +
-        s"maintenance, but the unified store at $root carries no " +
-        "proj_stats channel — nothing would be maintained and the " +
-        "caller's expectation would silently not hold; writeProjections " +
-        "first, or drop the raw frame")
-    require(raw.isEmpty || !vEmpty,
-      "appendUnified: raw embeddings were passed with an EMPTY vectors " +
-        "side — the projected deltas pair with THIS fold's vectors, so " +
-        "a vectors-less raw frame is a mismatched pairing, not a " +
-        "maintenance tick; fold the raw rows with their vectors")
-    require(!hasProj || vEmpty || raw.isDefined,
-      s"appendUnified: the unified store at $root carries the " +
-        "projected-ANN channels (proj_units/exact_vecs), which this " +
-        "vector-carrying fold would leave STALE — the same committed " +
-        "version would serve the new vectors on the IVF arm and " +
-        "silently omit them from the projected arm. Pass raw = " +
-        "Some((vec_id, label, embedding) rows of this batch's vectors) " +
-        "so both arms advance in one pair-atomic commit")
-    // media fingerprints computed ONCE (guard + staging share them);
-    // checkpoint released on every exit, the appendMedia discipline
-    val mediaPrintable = payloads.map(p =>
-      Dedup.simhash60Bytes(p).localCheckpoint())
-    try {
-    // the three families' replay guards are independent read-only
-    // probes (each 2–3 small jobs); overlap them — refusal precedence
-    // stays the sequential order (media, text, vectors) by
-    // probeConcurrently's declaration-order delivery
-    val guards = probeConcurrently[Option[Long]](
-      () => mediaPrintable.flatMap(pr =>
-        appendGuard("appendUnified(media)", pr, "doc_id",
-          channelFrom(s, root, prior, "media_sim_blocks"),
-          fingerprint = Some("sim"))),
-      () => if (dEmpty) None else appendGuard("appendUnified(text)",
-        docs, "doc_id", channelFrom(s, root, prior, "doc_lens")),
-      () => if (vEmpty) None else appendGuard("appendUnified(vectors)",
-        vectors, "vec_id", channelFrom(s, root, prior, "cells")))
-    val mediaGo = guards(0)
-    if (dEmpty && vEmpty && mediaGo.isEmpty) return
-    val textGo = guards(1)
-    val vecGo = guards(2)
-    require(dEmpty || vEmpty || textGo.isDefined == vecGo.isDefined,
-      "appendUnified: one family of the pair is an exact replay and the " +
-        "other is new — atomic unified commits make a half-folded pair " +
-        "impossible, so this is a mismatched (docs, vectors) pairing, " +
-        "not an at-least-once redelivery. If this is the documented " +
-        "lagging-embeddings catch-up (vectors arriving for docs folded " +
-        "earlier, or vice versa), submit it as a ONE-SIDED fold: the " +
-        "late family's frame paired with an EMPTY frame on the other " +
-        "side — one-sided folds are legal and commit atomically")
-    // fresh media attached to an exactly-replayed (non-empty) pair is
-    // the media sibling of the half-replayed pair: an atomic commit
-    // that held the pair would have held its media too, so this can
-    // only be a caller re-pairing new payloads with old docs — refuse
-    // it toward the documented media-only catch-up shape
-    require(!(mediaGo.isDefined && textGo.isEmpty && vecGo.isEmpty &&
-        !(dEmpty && vEmpty)),
-      "appendUnified: the (docs, vectors) pair is an exact replay but " +
-        "the payloads side is NEW — a commit that folded the pair would " +
-        "have folded its media atomically, so this is a mismatched " +
-        "(pair, payloads) pairing. Late payloads for already-folded " +
-        "docs are legal as a MEDIA-ONLY fold: empty docs and vectors, " +
-        "payloads alone")
-    if (textGo.isEmpty && vecGo.isEmpty && mediaGo.isEmpty)
-      return // exact replay of every family: skip
-    // a governed unified store extends its census on every DOCS-side
-    // fold (same additive-delta contract as the dedup family's append);
-    // a vectors-only catch-up leaves the doc-mix timeline untouched
-    // (format-guarded at the top of appendUnifiedFrom, before staging).
-    // The frame (and its schema refusal) is built BEFORE the staging
-    // threads launch — the hoisted cheap-refusal discipline.
-    // `preCensus` (VERDICT r14 next #2): the GATED path already paid
-    // this batch's census explode for its verdict — the fold writes
-    // that checkpointed ~O(sources × 71)-row bins frame instead of
-    // exploding the batch a second time (bins are per-source
-    // additive, so gate-bins-minus-held ≡ censusBins(admitted)
-    // bit-identically; the unified fold does not screen, which is
-    // what makes the reuse safe — the dedup family's screen makes
-    // kept ≠ admitted, so IT still censuses its own kept frame)
-    val census =
-      if (prior.contains("mix_census") && textGo.isDefined)
-        Some(preCensus.getOrElse(censusRequired("appendUnified", docs)))
-      else None
-    // the family deltas stage CONCURRENTLY into the one snapshot
-    // (VERDICT r13 next #4 — see [[stageConcurrently]]); every block
-    // reads only the caller-held `prior` capture and writes only its
-    // own subdirectories, and the pair-atomic commit stays last
-    transact(root, base) { snap =>
-      appendManifest(prior, stageConcurrently(
-        () => textGo.map { _ =>
-          val st = channelFrom(s, root, prior, "stats").head()
-          writeTextInto(s, docs, root, snap,
-            Some((st.getAs[Long]("n_docs"), st.getAs[Long]("sum_dl"))), preTok)
-        }.getOrElse(Map.empty),
-        () => census.map(stageCensus(root, snap, _)).getOrElse(Map.empty),
-        () => vecGo.map(batchN => stageVectors(s, root, snap, vectors,
-          channelFrom(s, root, prior, "centroids"), Some((prior, batchN))))
-          .getOrElse(Map.empty),
-        // projected-channel deltas ride the SAME pair-atomic commit (the
-        // appendVectors maintenance contract on the single-pointer store);
-        // a vector-side exact replay skips them with the cells delta —
-        // the store already covers those vectors
-        () => (vecGo, raw) match {
-          case (Some(_), Some(r)) => appendProjectionsInto(
-            s, root, "appendUnified", prior, snap, vectors, r)
-          case _ => Map.empty
-        },
-        // media fingerprint blocks ride the SAME commit (third family);
-        // an exact media replay skips with the other deltas
-        () => mediaGo.map(_ => stageMedia(s, root, snap, mediaPrintable.get,
-          mediaStatsOf(s, root, prior))).getOrElse(Map.empty)))
+    projPairingGuard("appendUnified", s"unified store at $root",
+      Some(prior.contains("proj_stats")), raw, Some(vEmpty))
+    // media fingerprints computed ONCE (guard + staging share them)
+    withPrintable(payloads) { mediaPrintable =>
+      // the three families' replay guards are independent read-only
+      // probes (each 2–3 small jobs); overlap them — refusal precedence
+      // stays the sequential order (media, text, vectors) by
+      // probeConcurrently's declaration-order delivery
+      val Seq(mediaGo, textGo, vecGo) = probeConcurrently[Option[Long]](
+        () => mediaPrintable.flatMap(pr =>
+          appendGuard("appendUnified(media)", pr, "doc_id",
+            channelFrom(s, root, prior, "media_sim_blocks"),
+            fingerprint = Some("sim"))),
+        () => if (dEmpty) None else appendGuard("appendUnified(text)",
+          docs, "doc_id", channelFrom(s, root, prior, "doc_lens")),
+        () => if (vEmpty) None else appendGuard("appendUnified(vectors)",
+          vectors, "vec_id", channelFrom(s, root, prior, "cells")))
+      // (both requires below hold vacuously for an all-empty pair)
+      require(dEmpty || vEmpty || textGo.isDefined == vecGo.isDefined,
+        "appendUnified: one family of the pair is an exact replay and the " +
+          "other is new — atomic unified commits make a half-folded pair " +
+          "impossible, so this is a mismatched (docs, vectors) pairing, " +
+          "not an at-least-once redelivery. If this is the documented " +
+          "lagging-embeddings catch-up (vectors arriving for docs folded " +
+          "earlier, or vice versa), submit it as a ONE-SIDED fold: the " +
+          "late family's frame paired with an EMPTY frame on the other " +
+          "side — one-sided folds are legal and commit atomically")
+      // fresh media attached to an exactly-replayed (non-empty) pair is
+      // the media sibling of the half-replayed pair: an atomic commit
+      // that held the pair would have held its media too, so this can
+      // only be a caller re-pairing new payloads with old docs — refuse
+      // it toward the documented media-only catch-up shape
+      require(!(mediaGo.isDefined && textGo.isEmpty && vecGo.isEmpty &&
+          !(dEmpty && vEmpty)),
+        "appendUnified: the (docs, vectors) pair is an exact replay but " +
+          "the payloads side is NEW — a commit that folded the pair would " +
+          "have folded its media atomically, so this is a mismatched " +
+          "(pair, payloads) pairing. Late payloads for already-folded " +
+          "docs are legal as a MEDIA-ONLY fold: empty docs and vectors, " +
+          "payloads alone")
+      // an exact replay of every family skips
+      if (textGo.isDefined || vecGo.isDefined || mediaGo.isDefined) {
+        // a governed unified store extends its census on every DOCS-side
+        // fold (same additive-delta contract as the dedup family's append);
+        // a vectors-only catch-up leaves the doc-mix timeline untouched
+        // (format-guarded at the top of appendUnifiedFrom, before staging).
+        // The frame (and its schema refusal) is built BEFORE the staging
+        // threads launch — the hoisted cheap-refusal discipline.
+        // `preCensus` (VERDICT r14 next #2): the GATED path already paid
+        // this batch's census explode for its verdict — the fold writes
+        // that checkpointed ~O(sources × 71)-row bins frame instead of
+        // exploding the batch a second time (bins are per-source
+        // additive, so gate-bins-minus-held ≡ censusBins(admitted)
+        // bit-identically; the unified fold does not screen, which is
+        // what makes the reuse safe — the dedup family's screen makes
+        // kept ≠ admitted, so IT still censuses its own kept frame)
+        val census = Option.when(prior.contains("mix_census") && textGo.isDefined)(
+          preCensus.getOrElse(censusRequired("appendUnified", docs)))
+        // the family deltas stage CONCURRENTLY into the one snapshot
+        // (VERDICT r13 next #4 — see [[stageConcurrently]]); every block
+        // reads only the caller-held `prior` capture and writes only its
+        // own subdirectories, and the pair-atomic commit stays last
+        transact(root, base) { snap =>
+          appendManifest(prior, stageConcurrently(
+            () => textGo.map(_ => writeTextInto(s, docs, root, snap, Some(prior),
+              preTok)).getOrElse(Map.empty),
+            () => census.map(stageCensus(root, snap, _)).getOrElse(Map.empty),
+            () => vecGo.map(batchN => stageVectors(s, root, snap, vectors,
+              channelFrom(s, root, prior, "centroids"), Some((prior, batchN))))
+              .getOrElse(Map.empty),
+            // projected-channel deltas ride the SAME pair-atomic commit (the
+            // appendVectors maintenance contract on the single-pointer store);
+            // a vector-side exact replay skips them with the cells delta —
+            // the store already covers those vectors
+            () => (vecGo, raw) match {
+              case (Some(_), Some(r)) => appendProjectionsInto(
+                s, root, "appendUnified", prior, snap, vectors, r)
+              case _ => Map.empty
+            },
+            // media fingerprint blocks ride the SAME commit (third family);
+            // an exact media replay skips with the other deltas
+            () => mediaGo.map(_ => stageMedia(s, root, snap, mediaPrintable.get,
+              mediaStatsOf(s, root, prior))).getOrElse(Map.empty)))
+        }
+      }
     }
-    } finally mediaPrintable.foreach(releaseCheckpoint)
   }
 
   /** [[appendUnified]] behind the drift circuit breaker — the
@@ -3002,7 +3047,6 @@ object IndexStore {
       payloads: Option[DataFrame] = None,
       preTok: Option[DataFrame] = None, orderGate: Boolean = false,
       maxOrderPsi: Double = 0.25): DataFrame = {
-    import s.implicits._
     val (base, prior) = baseRequired(root)
     // CALLER mispairing checked against the caller's ORIGINAL frames,
     // before the breaker touches anything (ADVICE r11): a raw side
@@ -3012,57 +3056,16 @@ object IndexStore {
     // admitted vectors, and must never launder a caller's mispairing
     // into a silent drop.
     val vEmptyCaller = vectors.isEmpty
-    require(raw.isEmpty || !vEmptyCaller,
-      "appendUnifiedGated: raw embeddings were passed with an EMPTY " +
-        "vectors side — the projected deltas pair with THIS fold's " +
-        "vectors, so a vectors-less raw frame is a mismatched pairing, " +
-        "not a maintenance tick; fold the raw rows with their vectors")
+    projPairingGuard("appendUnifiedGated", "", None, raw, Some(vEmptyCaller))
     require(prior.contains("mix_census"),
       "appendUnifiedGated: this unified store carries no mix_census " +
         "channel — the drift gate has no stored anchor distribution to " +
         "hold against; bootstrap with writeUnified(..., governed = true)")
-    // the two orphan gates, the census explode and the gate's PSI read
-    // below are independent read-only probes — they overlap on the
-    // scheduler (probeConcurrently), with refusal precedence pinned to
-    // this declaration order: vector orphans, payload orphans, census.
-    // orphan gate: every batch vector's doc is in-batch (gated with
-    // this tick) or already stored (gated when it folded) — one
-    // O(batch) anti-join against the batch ids plus one against the
-    // pruned doc_lens id column
-    val vecOrphanGate: () => Unit = () => if (!vEmptyCaller) {
-      val orphans = vectors.select(col("vec_id"))
-        .join(docs.select(col("doc_id").as("vec_id")), Seq("vec_id"),
-          "left_anti")
-        .join(channelFrom(s, root, prior, "doc_lens")
-          .select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_anti")
-        .count()
-      require(orphans == 0,
-        s"appendUnifiedGated: $orphans batch vector(s) have no doc in " +
-          "this batch and none stored — a vectors-LEADING fold would " +
-          "carry their source past the drift breaker ungated (vectors " +
-          "have no source column) and leave the pair inconsistent if " +
-          "their docs are later held. Fold docs first (or in the same " +
-          "pair); the one-sided vectors catch-up is legal only for docs " +
-          "already folded through this gate")
-    }
-    // the media sibling of the orphan gate: every payload's doc is
-    // in-batch (gated with this tick) or already stored (gated when it
-    // folded) — payloads carry no source column either
-    val payloadOrphanGate: () => Unit = () =>
-      payloads.filter(!_.isEmpty).foreach { p =>
-      val orphans = p.select(col("doc_id"))
-        .join(docs.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .join(channelFrom(s, root, prior, "doc_lens")
-          .select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .count()
-      require(orphans == 0,
-        s"appendUnifiedGated: $orphans batch payload(s) have no doc in " +
-          "this batch and none stored — a media-LEADING fold would " +
-          "carry their source's fingerprints past the drift breaker " +
-          "ungated (payloads have no source column). Fold docs first " +
-          "(or in the same tick); the media-only catch-up is legal " +
-          "only for docs already folded through this gate")
-    }
+    // the two orphan gates and the gate verdict (census explode, PSI
+    // read, order screen) are independent read-only probes — they
+    // overlap on the scheduler (probeConcurrently), with refusal
+    // precedence pinned to this declaration order: vector orphans,
+    // payload orphans, census.
     // ONE census explode for the whole gated fold (VERDICT r14 next
     // #2): the gate's verdict and the fold's mix_census delta both
     // need censusBins(batch) — previously two full batch explodes per
@@ -3085,14 +3088,14 @@ object IndexStore {
     // observes (published, not-yet-tombstoned) and releases.
     val binsTomb = s.emptyDataFrame
     val binsRef = new java.util.concurrent.atomic.AtomicReference[DataFrame]()
-    var rep: Seq[(String, Long, Double, Double, Double, Double, Double,
-      Boolean)] = null
-    var ord: Map[String, (Double, Boolean)] = null
+    var verdict: (Seq[String], DataFrame) = null
     try {
     probeConcurrently[Unit](
-      vecOrphanGate,
-      payloadOrphanGate,
-      () => {
+      () => if (!vEmptyCaller) orphanGate(s, root, prior, docs, vectors,
+        "vec_id", "vector", "vectors", "the one-sided vectors"),
+      () => payloads.filter(!_.isEmpty).foreach(orphanGate(s, root, prior,
+        docs, _, "doc_id", "payload", "media", "the media-only")),
+      () => verdict = gateVerdict(s, root, prior, docs, () => {
         val bins = censusRequired("appendUnifiedGated", docs)
           .localCheckpoint(eager = false)
         if (!binsRef.compareAndSet(null, bins)) {
@@ -3100,33 +3103,17 @@ object IndexStore {
           // tombstoned before we published): nothing is materialized yet
           // — drop the marker and stop; this probe's result is dead
           releaseCheckpoint(bins)
-        } else {
-        // the PSI collect is the first action over `bins`, so it
-        // materializes the checkpoint inside its own job (one fewer
-        // blocking job per gated tick than the old eager checkpoint)
-        rep = Selection.psiFromBins(
-            channelFrom(s, root, prior, "mix_census")
-              .filter(col("source") === anchor)
-              .unionByName(bins.filter(col("source") =!= anchor)),
-            anchor)
-          .select(col("source"), col("n_docs"), col("psi_nchars"),
-            col("psi_ntokens"), col("psi_nonalpha"), col("psi_tokhash"),
-            col("psi_max"), (col("psi_max") > maxPsi).as("held"))
-          .as[(String, Long, Double, Double, Double, Double, Double, Boolean)]
-          .collect().toSeq
+          throw new java.util.concurrent.CancellationException(
+            "appendUnifiedGated: the fold unwound before its census published")
         }
-      },
-      // the order screen's verdict folds into the SAME held set (opt-in;
-      // the screenAndFoldGated scaladoc's rationale) — it reads the
-      // batch's token-position frame, which the aggregated census bins
-      // above cannot supply, so the opted-in tick pays two extra narrow
-      // batch token passes and the default tick pays nothing
-      () => ord = orderVerdict(s, docs, anchor, orderGate, maxOrderPsi))
+        // the PSI collect is the first action over `bins`, so it
+        // materializes the checkpoint inside its own job
+        bins
+      }, anchor, maxPsi, orderGate, maxOrderPsi))
     // all probes succeeded, so the publish CAS won: the reference is
     // the live checkpoint (materialized by the PSI collect above)
     val batchBins = binsRef.get()
-    val heldSrcs = (rep.filter(_._8).map(_._1) ++
-      ord.collect { case (src, (_, true)) => src }).distinct
+    val (heldSrcs, report) = verdict
     val (admittedDocs, admittedVecs, admittedRaw, admittedPayloads) =
       if (heldSrcs.isEmpty) (docs, vectors, raw, payloads)
       else {
@@ -3154,11 +3141,34 @@ object IndexStore {
       else admittedRaw
     appendUnifiedFrom(s, root, base, prior, admittedDocs, admittedVecs,
       rawEff, admittedPayloads, preTok, preCensus = Some(censusDelta))
-    gateReport(s, rep, ord, orderGate)
+    report
     } finally {
       val bins = binsRef.getAndSet(binsTomb)
       if (bins != null) releaseCheckpoint(bins)
     }
+  }
+
+  /** The gated unified fold's orphan gate for rows that carry no
+    * source column — a batch's vectors or payloads, `idCol` naming
+    * their doc id: each row's doc must be in this batch (gated with
+    * this tick) or already stored (gated when it folded). One O(batch)
+    * anti-join against the batch ids plus one against the pruned
+    * doc_lens id column. */
+  private def orphanGate(s: SparkSession, root: String,
+      prior: Map[String, Channel], docs: DataFrame, rows: DataFrame,
+      idCol: String, what: String, lead: String, catchUp: String): Unit = {
+    val orphans = rows.select(col(idCol).as("doc_id"))
+      .join(docs.select(col("doc_id")), Seq("doc_id"), "left_anti")
+      .join(channelFrom(s, root, prior, "doc_lens").select(col("doc_id")),
+        Seq("doc_id"), "left_anti")
+      .count()
+    require(orphans == 0,
+      s"appendUnifiedGated: $orphans batch $what(s) have no doc in this " +
+        s"batch and none stored — a $lead-LEADING fold would carry their " +
+        s"source past the drift breaker ungated (${what}s have no source " +
+        "column) and leave the fold inconsistent if their docs are later " +
+        s"held. Fold docs first (or in the same tick); $catchUp catch-up " +
+        "is legal only for docs already folded through this gate")
   }
 
   /** The hybrid read pair from a unified store: ONE manifest
@@ -3368,14 +3378,12 @@ object IndexStore {
         .write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/exact_vecs")
       maybeCrash("exact_vecs")
     }
-    Seq((k, d, ProjScheme, signTableFp(k, d), nVecs))
-      .toDF("k", "d", "scheme", "sign_fp", "n_vecs")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/$snap/proj_stats")
+    val stats = stageRow(root, snap, "proj_stats",
+      Seq((k, d, ProjScheme, signTableFp(k, d), nVecs))
+        .toDF("k", "d", "scheme", "sign_fp", "n_vecs"))
     maybeCrash("proj_stats")
     staged(root, snap, "proj_units") ++
-      fineVecs.map(_ => staged(root, snap, "exact_vecs")).getOrElse(Map.empty) +
-      ("proj_stats" -> Channel(Seq(s"$snap/proj_stats"), "", ""))
+      fineVecs.map(_ => staged(root, snap, "exact_vecs")).getOrElse(Map.empty) ++ stats
   }
 
   /** Coarse-to-fine ANN answered from the store alone — session q155

@@ -219,6 +219,13 @@ object StreamingOps {
     try { graft.ops.IndexStore.compactIfFragmented(s, dir); () }
     catch { case _: java.util.ConcurrentModificationException => () }
 
+  /** The vector model's in-loop maintenance, on the same best-effort
+    * contract: a retrain ([[graft.ops.IndexStore.retrainIfDrifted]])
+    * that loses an OCC race skips this tick. */
+  private def retrainBestEffort(s: SparkSession, dir: String): Unit =
+    try { graft.ops.IndexStore.retrainIfDrifted(s, dir); () }
+    catch { case _: java.util.ConcurrentModificationException => () }
+
   /** Continuous corpus ingestion with ROLLING index maintenance — the
     * `foreachBatch` body around `IndexStore.screenAndFold`, the
     * SINGLE-BASE screen+append transaction (composing screenBatch and
@@ -321,8 +328,7 @@ object StreamingOps {
     // firing it first saves the compaction a redundant O(corpus) pass
     // on the tick where both trip. Same best-effort contract: an OCC
     // loss skips this tick's maintenance, never takes ingest down.
-    try { graft.ops.IndexStore.retrainIfDrifted(s, vecIndexDir); () }
-    catch { case _: java.util.ConcurrentModificationException => () }
+    retrainBestEffort(s, vecIndexDir)
     compactBestEffort(s, vecIndexDir)
   }
 
@@ -385,8 +391,7 @@ object StreamingOps {
       graft.ops.IndexStore.appendUnified(s, root, docs, vectors, raw,
         payloads)
     }
-    try { graft.ops.IndexStore.retrainIfDrifted(s, root); () }
-    catch { case _: java.util.ConcurrentModificationException => () }
+    retrainBestEffort(s, root)
     compactBestEffort(s, root)
   }
 
@@ -417,8 +422,7 @@ object StreamingOps {
         anchor, maxPsi, raw, payloads, orderGate = orderGate,
         maxOrderPsi = maxOrderPsi)
     }
-    try { graft.ops.IndexStore.retrainIfDrifted(s, root); () }
-    catch { case _: java.util.ConcurrentModificationException => () }
+    retrainBestEffort(s, root)
     compactBestEffort(s, root)
     rep
   }

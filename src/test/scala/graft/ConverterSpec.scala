@@ -131,4 +131,25 @@ class ConverterSpec extends SparkSpec {
     assert(stats.rows == 300 && stats.bytes == Files.size(target))
     assert(listing(out).map(_.getFileName.toString) == Seq("output.json"))
   }
+
+  test("a chunks run that fails before publishing leaves the previous part files byte-intact and no staging dir") {
+    val parent = tmpDir("conv-chunks")
+    val out = s"$parent/out"
+    val chunks = Converter.Config(outputMode = "chunks")
+    Converter.convert(spark, csvInput(), out, chunks)
+    def files() = listing(out).sortBy(_.toString)
+      .map(p => p.getFileName.toString -> Files.readAllBytes(p).toSeq)
+    val before = files()
+    assert(before.exists(_._1.startsWith("part-")))
+    Sinks.crashBeforePublish = true
+    val err = try intercept[RuntimeException](Converter.convert(spark, csvInput(), out, chunks))
+      finally Sinks.crashBeforePublish = false
+    assert(err.getMessage == "injected crash before publish")
+    assert(files() == before)
+    assert(listing(parent).map(_.getFileName.toString) == Seq("out"))
+    // the next run publishes its own output in place of the old one
+    val stats = Converter.convert(spark, csvInput(), out, chunks)
+    assert(stats.rows == 300 && files() != before)
+    assert(listing(parent).map(_.getFileName.toString) == Seq("out"))
+  }
 }

@@ -528,9 +528,55 @@ class IndexStoreSpec extends SparkSpec {
       ops.IndexStore.appendMedia(spark, midx, b)
       ops.IndexStore.appendMedia(spark, midx, b) // replay: guard-skip path
     }
+    assertNoNewPersistedRdds("writeMedia (empty refusal)") {
+      intercept[IllegalArgumentException] {
+        ops.IndexStore.writeMedia(spark, Seq.empty[(Long, Array[Byte])]
+          .toDF("doc_id", "payload"), tmp("ckpt-media-empty"))
+      }
+    }
+    // the unified store's media family: the fingerprint checkpoint is
+    // released on success, on a refusal and on a crash mid-staging
+    def udocs(ids: Seq[Long]) =
+      df(ids.map(i => i -> s"alpha beta w${('a' + i % 26).toChar}"))
+    def uvecs(ids: Seq[Long]) = vecs.filter($"vec_id".isin(ids: _*))
+    def pays(ids: Seq[Long]) = ids.map(i => i -> noisy(i * 31 + 7))
+      .toDF("doc_id", "payload").withColumn("payload", $"payload".cast("binary"))
+    val uidx = tmp("ckpt-unified")
+    assertNoNewPersistedRdds("writeUnified with payloads (success)") {
+      ops.IndexStore.writeUnified(spark, udocs(1L to 6L), uvecs(1L to 6L),
+        cents, uidx, payloads = Some(pays(1L to 6L)))
+    }
+    assertNoNewPersistedRdds("writeUnified (all-unfingerprintable refusal)") {
+      val e = intercept[IllegalArgumentException] {
+        ops.IndexStore.writeUnified(spark, udocs(1L to 6L), uvecs(1L to 6L),
+          cents, tmp("ckpt-unified-refused"), payloads = Some(
+            Seq(1L -> Array[Byte](1, 2)).toDF("doc_id", "payload")))
+      }
+      assert(e.getMessage.contains("no fingerprintable payloads"), e.getMessage)
+    }
+    assertNoNewPersistedRdds("appendUnified with payloads (success)") {
+      ops.IndexStore.appendUnified(spark, uidx, udocs(7L to 9L),
+        uvecs(7L to 9L), payloads = Some(pays(7L to 9L)))
+    }
+    assertNoNewPersistedRdds("appendUnified with payloads (crash-injected)") {
+      ops.IndexStore.crashAfterChannel = Some("media_sim_blocks")
+      try intercept[RuntimeException] {
+        ops.IndexStore.appendUnified(spark, uidx, udocs(10L to 12L),
+          uvecs(10L to 12L), payloads = Some(pays(10L to 12L)))
+      } finally ops.IndexStore.crashAfterChannel = None
+    }
+    assertNoNewPersistedRdds("appendUnified (MEDIA-ONLY refusal)") {
+      val e = intercept[IllegalArgumentException] {
+        ops.IndexStore.appendUnified(spark, uidx, udocs(7L to 9L),
+          uvecs(7L to 9L), payloads = Some(pays(20L to 22L)))
+      }
+      assert(e.getMessage.contains("MEDIA-ONLY"), e.getMessage)
+    }
     val didx = tmp("ckpt-dedup")
     ops.IndexStore.write(spark, df(docs), didx)
-    ops.IndexStore.writeClusters(spark, df(docs), didx)
+    assertNoNewPersistedRdds("writeClusters") {
+      ops.IndexStore.writeClusters(spark, df(docs), didx)
+    }
     assertNoNewPersistedRdds("append (label delta, success)") {
       ops.IndexStore.append(spark, didx, df(batch.filter(_._1 == 4L)))
     }
