@@ -160,6 +160,10 @@ object IndexStore {
     * hoisted cheap-refusal discipline), so first-to-complete
     * precedence here only ever races genuine I/O faults.
     *
+    * Compaction and [[cloneStoreAt]] stage through it too: their
+    * channel rewrites and copies are independent blocks of one
+    * snapshot ([[rewriteChannelsInto]]).
+    *
     * Returns the union of the blocks' staged channel entries. */
   private def stageConcurrently(
       blocks: (() => Map[String, Channel])*): Map[String, Channel] =
@@ -189,20 +193,11 @@ object IndexStore {
         if (interrupt) { futs.foreach(_.cancel(true)); pool.shutdownNow() }
         else pool.shutdown()
         val cause = e match { case x: ExecutionException => x.getCause; case x => x }
-        // bounded grace for interrupted stragglers: Spark actions
-        // abort on interrupt within seconds; a writer that ignores
-        // even this no longer wedges the fold — its output is
-        // uncommitted staging garbage. A straggler that outlives
-        // even the grace is SURFACED (ADVICE r15): the caller is
-        // about to unwind while a daemon thread may still write
-        // staging files — harmless to committed state (nothing
-        // references the staging dir), but an operator diagnosing
-        // the original fault should see the wedge, not infer it.
-        if (!uninterruptibly(pool.awaitTermination(120, TimeUnit.SECONDS)))
-          System.err.println("[graft] stageConcurrently: a staging " +
-            "writer did not stop within 120 s and may still be " +
-            "writing into the uncommitted staging dir; propagating " +
-            s"the original failure anyway: $cause")
+        // a straggler's output is uncommitted staging garbage: nothing
+        // references the staging dir
+        awaitStopped(pool, "stageConcurrently", "a staging writer did " +
+          "not stop within 120 s and may still be writing into the " +
+          "uncommitted staging dir", cause)
         throw cause
       }
       futs.map(_.get()).reduce(_ ++ _)
@@ -233,7 +228,12 @@ object IndexStore {
     * CAS loses, and the owner's finally must getAndSet a tombstone —
     * the appendUnifiedGated pattern. Plain result delivery (outer var
     * written by the probe, read by the caller after a SUCCESSFUL
-    * probeConcurrently) stays safe: each f.get() is the edge. */
+    * probeConcurrently) stays safe: each f.get() is the edge.
+    *
+    * A refusal reaches the caller only after every sibling probe has
+    * stopped ([[awaitStopped]], as [[stageConcurrently]] waits), so an
+    * interrupted probe's own release has run by the time the caller
+    * unwinds. */
   private def probeConcurrently[A](blocks: (() => A)*): Seq[A] = {
     import java.util.concurrent._
     if (blocks.sizeIs <= 1) blocks.map(_()).toSeq
@@ -242,12 +242,34 @@ object IndexStore {
       try {
         val futs = blocks.map(b =>
           pool.submit(new Callable[A] { def call(): A = b() }))
-        futs.map(f =>
+        try futs.map(f =>
           try f.get()
           catch { case e: ExecutionException => throw e.getCause }).toSeq
-      } finally pool.shutdownNow()
+        catch { case e: Throwable =>
+          pool.shutdownNow()
+          // probes are read-only: a straggler leaves the store untouched
+          awaitStopped(pool, "probeConcurrently", "a probe did not stop " +
+            "within 120 s and may still be running", e)
+          throw e
+        }
+      } finally pool.shutdown()
     }
   }
+
+  /** Wait for the blocks of a failing `pool` to stop, so their
+    * releases (checkpoints, cached frames) finish before the caller
+    * unwinds. The grace is bounded: Spark actions abort on interrupt
+    * within seconds, and a block that ignores even 120 s no longer
+    * wedges the caller. A straggler that outlives the grace is
+    * SURFACED on stderr as `[graft] <who>: <what>` (ADVICE r15): an
+    * operator diagnosing the original fault should see the wedge, not
+    * infer it. */
+  private def awaitStopped(pool: java.util.concurrent.ExecutorService,
+      who: String, what: String, cause: Throwable): Unit =
+    if (!uninterruptibly(pool.awaitTermination(120,
+        java.util.concurrent.TimeUnit.SECONDS)))
+      System.err.println(s"[graft] $who: $what; propagating the " +
+        s"original failure anyway: $cause")
 
   /** A fixed pool of `n` daemon threads named `<name>-<i>`: the
     * dedicated pool [[stageConcurrently]] and [[probeConcurrently]]
@@ -2243,9 +2265,40 @@ object IndexStore {
     s.conf.getOption("graft.store.compactTargetBytes").map(_.toLong)
       .getOrElse(128L << 20)
 
-  private def dirBytes(f: java.io.File): Long =
-    if (f.isFile) f.length()
-    else Option(f.listFiles()).getOrElse(Array.empty).map(dirBytes).sum
+  /** The store's one "data file" rule: a file or dir a reader scans.
+    * Hidden names are not — Spark's `.crc` sidecars, `_SUCCESS` and
+    * any other `_`/`.`-prefixed entry, the names Spark's file index
+    * skips. Compaction's size estimate and copy test and
+    * [[describeStore]]'s `n_files` and `bytes` all count by it, so the
+    * byte and file columns describe the same files. */
+  private def isData(f: java.io.File): Boolean = {
+    val n = f.getName
+    !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith(".crc"))
+  }
+
+  /** The data files at or under `f`. */
+  private def dataFiles(f: java.io.File): Seq[java.io.File] =
+    if (f.isFile) Seq(f).filter(isData)
+    else Option(f.listFiles()).toSeq.flatten.filter(isData).flatMap(dataFiles)
+
+  private def dataBytes(f: java.io.File): Long = dataFiles(f).map(_.length).sum
+
+  /** True when the parquet dir `dir` holds exactly one `part-` data
+    * file in every leaf directory, and none elsewhere. */
+  private def onePartPerLeaf(dir: java.io.File): Boolean = {
+    val (dirs, files) = Option(dir.listFiles()).toSeq.flatten.filter(isData)
+      .partition(_.isDirectory)
+    if (dirs.nonEmpty) files.isEmpty && dirs.forall(onePartPerLeaf)
+    else files.size == 1 && files.head.getName.startsWith("part-")
+  }
+
+  /** Copy the file or tree `src` to `dest`, byte for byte. */
+  private def copyTree(src: java.nio.file.Path, dest: java.nio.file.Path): Unit = {
+    Files.createDirectories(dest.getParent)
+    val walk = Files.walk(src)
+    try walk.forEach(p => Files.copy(p, dest.resolve(src.relativize(p).toString)))
+    finally walk.close()
+  }
 
   /** Rewrite every channel of the live snapshot into ONE fresh
     * snapshot, restoring each channel's contract layout — the
@@ -2271,8 +2324,12 @@ object IndexStore {
     * `sort` channels via repartitionByRange + sortWithinPartitions
     * (one global range again), `partition_by` channels clustered so
     * each partition dir lands ≈one file — sized at
-    * [[compactTargetBytes]] per file, and commits all channels as
-    * single-path entries in one snapshot TRANSACTION: the same
+    * [[compactTargetBytes]] per file. A channel that is already
+    * compact (one path, one part file per leaf dir, at most one
+    * target's bytes) is byte-copied instead, and the channels are
+    * rewritten and copied concurrently ([[rewriteChannelsInto]]). All
+    * channels commit as single-path entries in one snapshot
+    * TRANSACTION: the same
     * stage-then-flip protocol as every other mutation, so readers see
     * either the fragmented store or the compacted one, never a mix,
     * and a crash mid-compaction costs nothing (IndexStoreSpec injects
@@ -2293,27 +2350,36 @@ object IndexStore {
     * contract layout at ~[[compactTargetBytes]] files; returns the
     * staged single-path channel map. Shared by [[compact]] (srcRoot ==
     * destRoot: collapse append fragmentation in place) and
-    * [[cloneStoreAt]] (a fresh root: publish a version). */
+    * [[cloneStoreAt]] (a fresh root: publish a version).
+    *
+    * Each channel is one [[stageConcurrently]] block, so the
+    * channels' jobs overlap on the scheduler; the commit stays the
+    * caller's, single and last. A channel whose rewrite would write
+    * exactly the files it already has is byte-copied instead. That is
+    * decided from facts: its entry has one path, that path holds one
+    * `part-` file per leaf dir, and its data bytes are at most
+    * [[compactTargetBytes]] — the rewrite's estimate is then 1 part,
+    * which writes one file per partition value. So after a first
+    * compaction the census channels and every channel no fold has
+    * appended to are copied, and a channel a fold appended to is
+    * rewritten. A single-file channel (the `bloom` blob) is always
+    * copied, under its own BASENAME: the name carries
+    * the (capacity, estItems) contract and must survive, or the next
+    * fold would misread the sketch as pre-contract and pay a spurious
+    * channel re-agg. */
   private def rewriteChannelsInto(s: SparkSession, srcRoot: String,
       m: Map[String, Channel], destRoot: String,
-      destSnap: String): Map[String, Channel] =
-    m.map { case (name, ch) =>
-      if (name == "bloom") {
-        // the blob is a single file — carry its bytes into the new
-        // snapshot so the old one becomes fully unreferenced. The
-        // BASENAME carries the (capacity, estItems) contract and must
-        // survive the copy, or the next fold would misread the sketch
-        // as pre-contract and pay a spurious channel re-agg.
-        val bytes = Files.readAllBytes(Paths.get(s"$srcRoot/${ch.paths.head}"))
-        val blobName = Paths.get(ch.paths.head).getFileName.toString
-        new java.io.File(s"$destRoot/$destSnap/bloom").mkdirs()
-        Files.write(Paths.get(s"$destRoot/$destSnap/bloom/$blobName"), bytes)
-        maybeCrash(name)
-        name -> ch.copy(paths = Seq(s"$destSnap/bloom/$blobName"))
-      } else {
+      destSnap: String): Map[String, Channel] = {
+    val target = compactTargetBytes(s)
+    stageConcurrently(m.toSeq.map { case (name, ch) => () => {
+      val src = new java.io.File(s"$srcRoot/${ch.paths.head}")
+      val rel = if (src.isFile) s"$destSnap/$name/${src.getName}" else s"$destSnap/$name"
+      if (src.isFile || (ch.paths.size == 1 &&
+          dataBytes(src) <= target && onePartPerLeaf(src)))
+        copyTree(src.toPath, Paths.get(s"$destRoot/$rel"))
+      else {
         val df = channelFrom(s, srcRoot, m, name)
-        val bytes = ch.paths.map(p => dirBytes(new java.io.File(s"$srcRoot/$p"))).sum
-        val target = compactTargetBytes(s)
+        val bytes = ch.paths.map(p => dataBytes(new java.io.File(s"$srcRoot/$p"))).sum
         val parts = math.max(1L, (bytes + target - 1) / target).toInt
         val shaped =
           if (ch.sort.nonEmpty) {
@@ -2334,11 +2400,12 @@ object IndexStore {
           } else df.repartition(parts)
         val w = shaped.write.mode(SaveMode.Overwrite)
         (if (ch.partitionBy.nonEmpty) w.partitionBy(ch.partitionBy) else w)
-          .parquet(s"$destRoot/$destSnap/$name")
-        maybeCrash(name)
-        name -> ch.copy(paths = Seq(s"$destSnap/$name"))
+          .parquet(s"$destRoot/$rel")
       }
-    }
+      maybeCrash(name)
+      Map(name -> ch.copy(paths = Seq(rel)))
+    }}: _*)
+  }
 
   /** PUBLISH a committed version of a store to a fresh root — the
     * operational close of snapshot time travel: [[history]] +
@@ -2698,18 +2765,14 @@ object IndexStore {
   private def describeRows(s: SparkSession, root: String, ver: String,
       m: Map[String, Channel], nVersions: Int): DataFrame = {
     import s.implicits._
-    def dataFiles(f: java.io.File): Long =
-      if (f.isFile) { if (!f.getName.startsWith("_") &&
-        !f.getName.startsWith(".") && !f.getName.endsWith(".crc")) 1L else 0L }
-      else Option(f.listFiles()).getOrElse(Array.empty).map(dataFiles).sum
     m.toSeq.sortBy(_._1).map { case (name, ch) =>
       val files = ch.paths.map(p => new java.io.File(s"$root/$p"))
       val facts = if (CensusChannels(name)) {
         val r = channelFrom(s, root, m, name).head()
         r.schema.fieldNames.map(f => s"$f=${r.getAs[Any](f)}").mkString(" ")
       } else ""
-      (name, ch.paths.size, files.map(dataFiles).sum,
-        files.map(dirBytes).sum, ch.partitionBy, ch.sort, facts,
+      (name, ch.paths.size, files.map(dataFiles(_).size.toLong).sum,
+        files.map(dataBytes).sum, ch.partitionBy, ch.sort, facts,
         ver, nVersions)
     }.toDF("channel", "n_paths", "n_files", "bytes",
       "partition_by", "sort", "facts", "version", "n_versions")

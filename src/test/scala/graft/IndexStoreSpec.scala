@@ -793,4 +793,98 @@ class IndexStoreSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("born"), e.getMessage)
   }
+
+  // ---- compaction: copy what is already compact, rewrite the rest ----
+
+  /** A unified store as the ingest loop leaves it before a compaction:
+    * a bootstrap plus two folds. */
+  private def foldedUnified(tag: String): String = {
+    def docsU(ids: Range) = df(ids.map(i =>
+      i.toLong -> s"alpha w${('a' + i % 26).toChar} beta${('a' + i % 3).toChar} gamma"))
+    def vecsU(ids: Range) = ids.map { i =>
+      (i.toLong, i % 3, Seq(math.cos(i * 0.7), math.sin(i * 0.7)))
+    }.toDF("vec_id", "label", "unit")
+    val cents = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(-1.0, 0.0)), (2L, Seq(0.0, 1.0)))
+      .toDF("cid", "cvec")
+    val root = tmp(tag)
+    ops.IndexStore.writeUnified(spark, docsU(0 until 20), vecsU(0 until 20), cents, root)
+    ops.IndexStore.appendUnified(spark, root, docsU(20 until 26), vecsU(20 until 26))
+    ops.IndexStore.appendUnified(spark, root, docsU(26 until 32), vecsU(26 until 32))
+    root
+  }
+
+  /** The store's BM25 and ANN answers. */
+  private def unifiedReads(root: String) = (
+    ops.IndexStore.bm25FromStore(spark, root, Seq("betab", "gamma"))
+      .orderBy($"score".desc, $"doc_id").collect().toSeq,
+    ops.IndexStore.annFromStore(spark, root,
+      Seq((100L, Seq(0.6, 0.8))).toDF("vec_id", "unit"), nprobe = 2, k = 5)
+      .collect().map(_.toString).sorted.toSeq)
+
+  /** Every `part-` file under `dir`, by path relative to it → bytes. */
+  private def partFiles(dir: java.nio.file.Path): Map[String, Seq[Byte]] = {
+    val walk = java.nio.file.Files.walk(dir)
+    try walk.toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(p => p.getFileName.toString.startsWith("part-"))
+      .map(p => dir.relativize(p).toString ->
+        java.nio.file.Files.readAllBytes(p).toSeq).toMap
+    finally walk.close()
+  }
+
+  private def describeFiles(root: String): Map[String, Long] =
+    ops.IndexStore.describeStore(spark, root).collect()
+      .map(r => r.getString(0) -> r.getLong(2)).toMap
+
+  test("compact byte-copies the channels already in contract layout and rewrites the rest") {
+    val root = foldedUnified("compact-copy")
+    val prior = ops.IndexStore.manifestAt(root, currentSnap(root))
+    val filesBefore = describeFiles(root)
+    val reads = unifiedReads(root)
+    val (_, jobs) = jobsOf(ops.IndexStore.compact(spark, root))
+    // 13 jobs when compaction rewrote every channel: the two copied
+    // census channels each saved a schema inference and a write
+    assert(jobs == 9, s"compact ran $jobs jobs")
+    val snap = currentSnap(root)
+    val m = ops.IndexStore.manifestAt(root, snap)
+    assert(m.keySet == prior.keySet)
+    // the census channels are single-path, single-file after every fold;
+    // the folded channels carry three paths, and centroids three files
+    // (one per partition of the model frame), so those are rewritten
+    val copied = prior.keySet.filter(ch => prior(ch).paths.size == 1 &&
+      partFiles(java.nio.file.Paths.get(root, prior(ch).paths.head)).size == 1)
+    assert(copied == Set("stats", "vec_stats"), copied.toString)
+    for (ch <- copied) {
+      val src = partFiles(java.nio.file.Paths.get(root, prior(ch).paths.head))
+      assert(partFiles(java.nio.file.Paths.get(root, m(ch).paths.head)) == src,
+        s"copied channel $ch is not byte-identical to its source")
+    }
+    for ((ch, ent) <- m) assert(ent.paths == Seq(s"$snap/$ch"), s"$ch: $ent")
+    // compaction never spreads a channel over more files
+    val filesAfter = describeFiles(root)
+    for ((ch, n) <- filesAfter)
+      assert(n <= filesBefore(ch), s"$ch: $n files after compact, ${filesBefore(ch)} before")
+    assert(unifiedReads(root) == reads, "compact changed a BM25 or ANN answer")
+  }
+
+  test("a crash mid-compaction at a copied or a rewritten channel changes nothing; one retry lands") {
+    val root = foldedUnified("compact-crash")
+    val h = ops.IndexStore.history(root)
+    val reads = unifiedReads(root)
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet
+    // stats is copied, postings rewritten (see the test above)
+    for (ch <- Seq("stats", "postings")) {
+      ops.IndexStore.crashAfterChannel = Some(ch)
+      val e = try intercept[RuntimeException] { ops.IndexStore.compact(spark, root) }
+      finally ops.IndexStore.crashAfterChannel = None
+      assert(e.getMessage == s"injected crash after channel $ch", e.getMessage)
+      assert(ops.IndexStore.history(root) == h, s"a crash at $ch published")
+      assert(unifiedReads(root) == reads, s"a crash at $ch changed a read")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == rdds,
+        s"a crash at $ch stranded persisted RDD blocks")
+    }
+    ops.IndexStore.compact(spark, root)
+    assert(ops.IndexStore.history(root) == h :+ currentSnap(root))
+    assert(unifiedReads(root) == reads, "the retried compaction changed a read")
+    assert(manifestChannels(root).values.forall(_.size == 1))
+  }
 }

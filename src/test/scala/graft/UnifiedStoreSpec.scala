@@ -870,15 +870,9 @@ class UnifiedStoreSpec extends SparkSpec {
       }
       assert(e.getMessage.contains("no doc in"),
         s"round $i: expected the orphan refusal, got: ${e.getMessage}")
-      // the losing side of the handshake may release from the probe's
-      // own (interrupted) thread moments after the refusal unwinds —
-      // poll briefly before declaring a strand
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-      while (leaked.nonEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-      }
+      // the refusal reaches us only after every sibling probe stopped,
+      // so whichever side of the handshake releases has released by now
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
       assert(leaked.isEmpty,
         s"round $i: refused gated fold stranded persisted RDD blocks: $leaked")
     }
