@@ -424,10 +424,7 @@ object Bench {
           f"$preRatio1%.3f > 2.5) under a clean sweep — one bounded " +
           "warm retry (VERDICT r14 next #4)")
         Core.clearCaches(spark)
-        ops.Dedup.resetWarmFixtures()
-        ops.Similarity.resetWarmFixtures()
-        ops.TextOps.resetWarmFixtures()
-        ops.Selection.resetWarmFixtures()
+        Core.resetStoreFixtures()
         val shots2 = scala.collection.mutable.ListBuffer.empty[Double]
         def agree2: Boolean = shots2.size >= 2 && {
           val a = shots2(shots2.size - 2); val b = shots2.last

@@ -186,7 +186,7 @@ object Core {
         java.nio.file.Paths.get("/proc/sys/kernel/pid_max")).trim.toLong)
       .getOrElse(4194304L)
 
-  def jvmStorePath(prefix: String, dir: String, suffix: String = ""): String = {
+  private def jvmStorePath(prefix: String, dir: String, suffix: String): String = {
     val tmp = sys.props("java.io.tmpdir")
     val base = dir.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_+", "")
     val stem = s"${prefix}_${base}_p"
@@ -228,28 +228,30 @@ object Core {
       rowCounts.getOrElseUpdate((dir, name), table(s, dir, name).count())
     }
 
-  /** One memo slot with PER-KEY build synchronization: two callers of
-    * the same key serialize (one `.cache()` per key per session), but
-    * callers of DIFFERENT keys never contend — the pre-r17 global
-    * build lock let Dedup's clusterLabels memo (the one build that
-    * RUNS Spark jobs — a full CC iteration — while building) block
-    * every unrelated memo miss in the bench's concurrent warm groups
-    * for the whole run (ADVICE r16). [[builtOpt]] exposes the frame
-    * only if the build completed, so [[clearCaches]] never forces an
-    * unbuilt slot just to unpersist it. */
-  private final class MemoCell(build: () => DataFrame) {
-    @volatile private var built: DataFrame = _
-    def df: DataFrame = {
-      if (built == null) synchronized {
-        if (built == null) built = build()
+  /** One build-once slot with PER-KEY synchronization, the program's
+    * only one: two callers of the same key serialize on the cell (one
+    * build per key), but callers of DIFFERENT keys never contend — the
+    * pre-r17 global build lock let Dedup's clusterLabels memo (the one
+    * build that RUNS Spark jobs — a full CC iteration — while building)
+    * block every unrelated memo miss in the bench's concurrent warm
+    * groups for the whole run (ADVICE r16). A build that throws records
+    * nothing, so the next caller builds again. [[builtOpt]] exposes the
+    * value only if the build completed, so a release never forces an
+    * unbuilt slot. */
+  private final class MemoCell[T] {
+    @volatile private var built: Option[T] = None
+    /** The built value; the caller that finds none runs its `build`. */
+    def value(build: => T): T = {
+      if (built.isEmpty) synchronized {
+        if (built.isEmpty) built = Some(build)
       }
-      built
+      built.get
     }
-    def builtOpt: Option[DataFrame] = Option(built)
+    def builtOpt: Option[T] = built
   }
 
   private val memos =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), MemoCell]
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), MemoCell[DataFrame]]
 
   /** Build-once cached DataFrame shared across catalog queries within a
     * session (e.g. the LSH band keys five dedup queries reuse, or the
@@ -257,13 +259,12 @@ object Core {
     * key per session — no "already cached" re-cache churn — and every
     * registration is released together via [[clearCaches]]. Build
     * synchronization is PER KEY (see [[MemoCell]]): a losing
-    * getOrElseUpdate race only ever constructs a spare cell whose
-    * build closure never runs. */
+    * getOrElseUpdate race only ever constructs a spare empty cell. */
   def memo(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     // drop entries of stopped sessions so a long-lived JVM (sbt test,
     // repeated runMains) doesn't pin dead sessions and their plans
     memos.keys.filter(_._1.sparkContext.isStopped).foreach(memos.remove)
-    memos.getOrElseUpdate((s, key), new MemoCell(() => build.cache())).df
+    memos.getOrElseUpdate((s, key), new MemoCell[DataFrame]).value(build.cache())
   }
 
   /** Time one warm-phase memo build — Bench folds these into its
@@ -282,4 +283,72 @@ object Core {
       memos.remove(k).flatMap(_.builtOpt)
         .foreach(_.unpersist(blocking = false))
     }
+
+  /** Per-JVM store fixtures: the root of a store that a build wrote
+    * once, under [[jvmStorePath]]. The warm phase builds every fixture
+    * before the queries that read it, so a query times its serving
+    * route, not the ingest. The program's one instance is behind
+    * [[storeFixture]] and [[resetStoreFixtures]].
+    *
+    * Each key `(prefix, dir, suffix)` has its own [[MemoCell]]:
+    * concurrent callers of one key run one build and get one root, and
+    * no build holds a lock that another key's build needs — Bench's
+    * concurrent warm groups build side by side, and a build may call
+    * another fixture (a serving clone reads its source's root) without
+    * deadlock. A build that throws records nothing, and the next call
+    * builds again from an empty root at the same path. */
+  private[graft] final class StoreFixtures {
+    private val cells =
+      scala.collection.concurrent.TrieMap.empty[(String, String, String), MemoCell[String]]
+
+    def apply(prefix: String, dir: String, suffix: String)(build: String => Unit): String =
+      cells.getOrElseUpdate((prefix, dir, suffix), new MemoCell[String]).value {
+        val root = jvmStorePath(prefix, dir, suffix)
+        // what a failed build (or a dead process with this pid) left
+        // there: a build onto it would append to its timeline
+        graft.ops.IndexStore.deleteRec(new java.io.File(root))
+        build(root)
+        root
+      }
+
+    /** Forget every fixture and delete every root that was built, so
+      * the next call of each key rebuilds from nothing: a rebuild onto
+      * a surviving root would append snapshots to its committed
+      * timeline. Call it only while no build runs and nothing reads
+      * the old roots again. */
+    def reset(): Unit =
+      cells.keys.foreach { k =>
+        cells.remove(k).flatMap(_.builtOpt)
+          .foreach(p => graft.ops.IndexStore.deleteRec(new java.io.File(p)))
+      }
+  }
+
+  private val fixtures = new StoreFixtures
+
+  /** The store fixture `(prefix, dir, suffix)`, built by `build(root)`
+    * on the first call of the JVM (see [[StoreFixtures]]). */
+  def storeFixture(prefix: String, dir: String, suffix: String = "")(
+      build: String => Unit): String = fixtures(prefix, dir, suffix)(build)
+
+  /** Delete every store fixture (see [[StoreFixtures.reset]]) — Bench's
+    * warm retry, between phases. */
+  def resetStoreFixtures(): Unit = fixtures.reset()
+
+  /** Fold `docs` into a store as the 3-slice ingest timeline that q143
+    * and q152 read back: slice `doc_id % 3 == r` for r = 0, 1, 2, one
+    * committed version per non-empty slice. `write` bootstraps the
+    * store with the first non-empty slice and `append` folds each later
+    * one (an append skips an empty batch), so the history stays dense
+    * and matches the oracle's slicing. Fails with `refusal` when every
+    * slice is empty. */
+  def foldThirds(docs: DataFrame, refusal: => String)(
+      write: DataFrame => Unit, append: DataFrame => Unit): Unit = {
+    var initialized = false
+    for (r <- 0 to 2) {
+      val slice = docs.filter(col("doc_id") % 3 === r)
+      if (initialized) append(slice)
+      else if (!slice.isEmpty) { write(slice); initialized = true }
+    }
+    require(initialized, refusal)
+  }
 }

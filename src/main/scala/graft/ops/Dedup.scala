@@ -687,32 +687,13 @@ object Dedup {
     * this store; rebuilding the snapshot inside every bench run timed
     * the write, not the operator (VERDICT r5 next #5). Keyed by
     * (dir, gateLt) — a different corpus or gate gets its own store. */
-  private val snapshotStores =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
-
-  /** Drop this family's warm-built store fixtures so Bench's
-    * warm-bracket self-heal (VERDICT r14 next #4) can re-run the warm
-    * phase iso-condition: the memo entry AND the store directory go
-    * (a rebuild onto a surviving root would append extra snapshots
-    * and change every timeline fixture). Only the bench calls this,
-    * after the query sweep — nothing reads the old roots again. */
-  private[graft] def resetWarmFixtures(): Unit =
-    snapshotStores.synchronized {
-      snapshotStores.values.foreach(p => IndexStore.deleteRec(new java.io.File(p)))
-      snapshotStores.clear()
-    }
-
   private def snapshotStore(s: SparkSession, dir: String, gateLt: Long): String =
-    snapshotStores.synchronized {
-      snapshotStores.getOrElseUpdate((dir, gateLt), {
-        val gate = conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-          .cast("long")
-        val slice = table(s, dir, "documents").filter(gate < gateLt)
-        val idx = graft.Core.jvmStorePath("graft_incc", dir, s"_g$gateLt")
-        IndexStore.write(s, slice, idx)
-        IndexStore.writeClusters(s, slice, idx)
-        idx
-      })
+    storeFixture("graft_incc", dir, s"_g$gateLt") { idx =>
+      val gate = conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
+        .cast("long")
+      val slice = table(s, dir, "documents").filter(gate < gateLt)
+      IndexStore.write(s, slice, idx)
+      IndexStore.writeClusters(s, slice, idx)
     }
 
   /** Small-corpus arm of the [[snCandidates]] gate: ONE unpartitioned

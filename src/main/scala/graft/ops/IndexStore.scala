@@ -2054,7 +2054,7 @@ object IndexStore {
   /** Stage the vector family into `snap`, its three pieces overlapping
     * on the scheduler (r16 staging discipline):
     *
-    *  - `centroids`: the model `cents`, staged by a full write
+    *  - `centroids`: the model `cents`, staged by a full write as one file
     *    (`fold = None`); a fold (`fold = Some((prior, batchN))`)
     *    assigns under the stored model and leaves its channel alone.
     *  - `cells`: `vectors` assigned under `cents`, cid-partitioned.
@@ -2072,7 +2072,9 @@ object IndexStore {
       fold: Option[(Map[String, Channel], Long)]): Map[String, Channel] =
     stageConcurrently(
       () => if (fold.isDefined) Map.empty else {
-        cents.write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/centroids")
+        // one file: the model is a few rows, and a frozen channel in its
+        // compact form is byte-copied by every compaction
+        cents.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/centroids")
         maybeCrash("centroids")
         staged(root, snap, "centroids")
       },
@@ -2257,13 +2259,9 @@ object IndexStore {
   // store maintenance: compaction + vacuum
   // ---------------------------------------------------------------
 
-  /** Compacted-file size target (bytes) — ~128 MB parquet files, the
-    * row-group-friendly size a 1000-executor scan wants. Conf-gated
-    * (`graft.store.compactTargetBytes`) so tests can force multi-file
-    * layouts on tiny fixtures. */
-  private def compactTargetBytes(s: SparkSession): Long =
-    s.conf.getOption("graft.store.compactTargetBytes").map(_.toLong)
-      .getOrElse(128L << 20)
+  /** Compacted-file size target (bytes) — 128 MiB parquet files, the
+    * row-group-friendly size a 1000-executor scan wants. */
+  private val CompactTargetBytes = 128L << 20
 
   /** The store's one "data file" rule: a file or dir a reader scans.
     * Hidden names are not — Spark's `.crc` sidecars, `_SUCCESS` and
@@ -2324,7 +2322,7 @@ object IndexStore {
     * `sort` channels via repartitionByRange + sortWithinPartitions
     * (one global range again), `partition_by` channels clustered so
     * each partition dir lands ≈one file — sized at
-    * [[compactTargetBytes]] per file. A channel that is already
+    * [[CompactTargetBytes]] per file. A channel that is already
     * compact (one path, one part file per leaf dir, at most one
     * target's bytes) is byte-copied instead, and the channels are
     * rewritten and copied concurrently ([[rewriteChannelsInto]]). All
@@ -2347,7 +2345,7 @@ object IndexStore {
 
   /** Rewrite every channel of manifest `m` (resolved against
     * `srcRoot`) into `destRoot/destSnap`, restoring each channel's
-    * contract layout at ~[[compactTargetBytes]] files; returns the
+    * contract layout at ~[[CompactTargetBytes]] files; returns the
     * staged single-path channel map. Shared by [[compact]] (srcRoot ==
     * destRoot: collapse append fragmentation in place) and
     * [[cloneStoreAt]] (a fresh root: publish a version).
@@ -2358,7 +2356,7 @@ object IndexStore {
     * exactly the files it already has is byte-copied instead. That is
     * decided from facts: its entry has one path, that path holds one
     * `part-` file per leaf dir, and its data bytes are at most
-    * [[compactTargetBytes]] — the rewrite's estimate is then 1 part,
+    * [[CompactTargetBytes]] — the rewrite's estimate is then 1 part,
     * which writes one file per partition value. So after a first
     * compaction the census channels and every channel no fold has
     * appended to are copied, and a channel a fold appended to is
@@ -2370,17 +2368,17 @@ object IndexStore {
   private def rewriteChannelsInto(s: SparkSession, srcRoot: String,
       m: Map[String, Channel], destRoot: String,
       destSnap: String): Map[String, Channel] = {
-    val target = compactTargetBytes(s)
     stageConcurrently(m.toSeq.map { case (name, ch) => () => {
       val src = new java.io.File(s"$srcRoot/${ch.paths.head}")
       val rel = if (src.isFile) s"$destSnap/$name/${src.getName}" else s"$destSnap/$name"
       if (src.isFile || (ch.paths.size == 1 &&
-          dataBytes(src) <= target && onePartPerLeaf(src)))
+          dataBytes(src) <= CompactTargetBytes && onePartPerLeaf(src)))
         copyTree(src.toPath, Paths.get(s"$destRoot/$rel"))
       else {
         val df = channelFrom(s, srcRoot, m, name)
         val bytes = ch.paths.map(p => dataBytes(new java.io.File(s"$srcRoot/$p"))).sum
-        val parts = math.max(1L, (bytes + target - 1) / target).toInt
+        val parts = math.max(1L,
+          (bytes + CompactTargetBytes - 1) / CompactTargetBytes).toInt
         val shaped =
           if (ch.sort.nonEmpty) {
             val cols = ch.sort.split(",").map(c => col(c.trim))
@@ -3238,7 +3236,7 @@ object IndexStore {
     * resolution feeds both the BM25 route and the IVF route, so the
     * lexical and semantic answers come from the same committed corpus
     * version BY CONSTRUCTION — there is no second pointer for a
-    * concurrent fold to race (contrast [[Similarity.hybridSingleAt]]'s
+    * concurrent fold to race (contrast [[Similarity.hybridOne]]'s
     * caller-pinned pair of stores). Each half is the existing
     * manifest-parameterized route (bm25From / annFrom), so scoring is
     * bit-identical to the split stores'. */
@@ -3247,21 +3245,6 @@ object IndexStore {
       nprobe: Int = 4, k: Int = 5): (DataFrame, DataFrame) = {
     val m = channels(root)
     (bm25From(s, root, m, terms), annFrom(s, root, m, queries, nprobe, k))
-  }
-
-  /** Batch sibling of [[retrievalFromUnified]]: the q145 batch shapes
-    * — ONE union-pruned postings read plus ONE probed cells read serve
-    * the whole query batch — driven from ONE manifest resolution of
-    * the unified store, so every query in the batch answers from the
-    * same committed corpus version without the caller pinning
-    * anything. */
-  def retrievalBatchFromUnified(s: SparkSession, root: String,
-      qframe: DataFrame, kLex: Int, exclude: Option[DataFrame],
-      queries: DataFrame, nprobe: Int = 4,
-      kAnn: Int = 100, terms: Option[Seq[String]] = None): (DataFrame, DataFrame) = {
-    val m = channels(root)
-    (bm25BatchFrom(s, root, m, qframe, kLex, exclude, terms),
-      annFrom(s, root, m, queries, nprobe, kAnn))
   }
 
   /** [[retrievalFromUnified]] AS OF a committed version — time travel

@@ -473,29 +473,12 @@ object Selection {
     * TextOps.versionedTextStore — the rolling store exists before an
     * audit query arrives; rebuilding it inside the query would time
     * the ingest, not the monitor. */
-  private val governedStores =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def governedStore(s: SparkSession, dir: String): String =
-    governedStores.synchronized {
-      governedStores.getOrElseUpdate(dir, {
-        val idx = jvmStorePath("graft_gov", dir)
-        val docs = table(s, dir, "documents")
-        // committed version ⇔ non-empty fold (q143's rule): the
-        // bootstrap write defers to the first populated residue,
-        // append skips empty batches — history stays dense
-        var initialized = false
-        for (r <- 0 to 2) {
-          val slice = docs.filter(col("doc_id") % 3 === r)
-          if (!initialized) {
-            if (!slice.isEmpty) {
-              IndexStore.write(s, slice, idx, governed = true); initialized = true
-            }
-          } else IndexStore.append(s, idx, slice)
-        }
-        require(initialized,
-          s"governedStore: documents table at $dir is empty — the drift timeline is undefined")
-        idx
-      })
+    storeFixture("graft_gov", dir) { idx =>
+      foldThirds(table(s, dir, "documents"),
+          s"governedStore: documents table at $dir is empty — the drift timeline is undefined")(
+        IndexStore.write(s, _, idx, governed = true),
+        IndexStore.append(s, idx, _))
     }
 
   /** Once-per-JVM governed dedup store whose history contains ONE
@@ -516,26 +499,20 @@ object Selection {
     * held sources, and recomputes the final census from raw documents
     * alone. The census columns (source, n_chars) stay REAL — the
     * gate, the hold and the timeline are the production arithmetic. */
-  private val gatedHoldStores =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def gatedHoldStore(s: SparkSession, dir: String): String =
-    gatedHoldStores.synchronized {
-      gatedHoldStores.getOrElseUpdate(dir, {
-        val idx = jvmStorePath("graft_gate", dir)
-        val docs = table(s, dir, "documents")
-          .select(col("doc_id"), md5(col("doc_id").cast("string")).as("text"),
-            col("source"), col("n_chars"))
-        IndexStore.write(s, docs.filter(col("doc_id") % 2 === 0), idx,
-          governed = true)
-        val odd = docs.filter(col("doc_id") % 2 === 1)
-        val batch = odd.filter(col("doc_id") % 10 =!= 1)
-          .unionByName(odd.filter(col("doc_id") % 10 === 1)
-            .select(col("doc_id"), col("text"),
-              lit("probe_shift").as("source"),
-              (col("n_chars") + 480).as("n_chars")))
-        IndexStore.screenAndFoldGated(s, idx, batch, "src0")
-        idx
-      })
+    storeFixture("graft_gate", dir) { idx =>
+      val docs = table(s, dir, "documents")
+        .select(col("doc_id"), md5(col("doc_id").cast("string")).as("text"),
+          col("source"), col("n_chars"))
+      IndexStore.write(s, docs.filter(col("doc_id") % 2 === 0), idx,
+        governed = true)
+      val odd = docs.filter(col("doc_id") % 2 === 1)
+      val batch = odd.filter(col("doc_id") % 10 =!= 1)
+        .unionByName(odd.filter(col("doc_id") % 10 === 1)
+          .select(col("doc_id"), col("text"),
+            lit("probe_shift").as("source"),
+            (col("n_chars") + 480).as("n_chars")))
+      IndexStore.screenAndFoldGated(s, idx, batch, "src0")
     }
 
   /** The gated unified fixture's hold line. 1.0, not the production
@@ -578,48 +555,42 @@ object Selection {
     * are excluded per-tick too (the unified id space —
     * SelectionSpec/UnifiedStoreSpec pin that side; the census only
     * sees docs). */
-  private val gatedUnifiedStores =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def gatedUnifiedStore(s: SparkSession, dir: String): String =
-    gatedUnifiedStores.synchronized {
-      gatedUnifiedStores.getOrElseUpdate(dir, {
-        val idx = jvmStorePath("graft_guni", dir)
-        val docs = table(s, dir, "documents")
-          .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
-        val vecs = Similarity.normalized(s, dir)
-        // the MEDIA family rides every commit (round 12, VERDICT r11
-        // missing #1): each doc's payload is its text bytes (the q141
-        // corpus), fingerprinted inside the same pair-atomic commits —
-        // so the fixture's timeline is a THREE-family history and a
-        // held source's payloads land in no channel (q165 reads it
-        // back under the oracle)
-        def payloadsOf(d: DataFrame): DataFrame =
-          d.select(col("doc_id"), col("text").cast("binary").as("payload"))
-        // re-sourced probe rows keep their doc_id and text, so the
-        // memoized full-corpus tokenization covers every fold's batch
-        // (VERDICT r11 next #3 — one pass shared across the three
-        // text-carrying warm fixtures)
-        val preTok = Some(TextOps.bm25Index(s, dir))
-        IndexStore.writeUnified(s, docs.filter(col("doc_id") % 2 === 0),
-          vecs.filter(col("vec_id") % 2 === 0),
-          Similarity.ivfCentroids(s, dir), idx, governed = true,
-          payloads = Some(payloadsOf(docs.filter(col("doc_id") % 2 === 0))),
+    storeFixture("graft_guni", dir) { idx =>
+      val docs = table(s, dir, "documents")
+        .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
+      val vecs = Similarity.normalized(s, dir)
+      // the MEDIA family rides every commit (round 12, VERDICT r11
+      // missing #1): each doc's payload is its text bytes (the q141
+      // corpus), fingerprinted inside the same pair-atomic commits —
+      // so the fixture's timeline is a THREE-family history and a
+      // held source's payloads land in no channel (q165 reads it
+      // back under the oracle)
+      def payloadsOf(d: DataFrame): DataFrame =
+        d.select(col("doc_id"), col("text").cast("binary").as("payload"))
+      // re-sourced probe rows keep their doc_id and text, so the
+      // memoized full-corpus tokenization covers every fold's batch
+      // (VERDICT r11 next #3 — one pass shared across the three
+      // text-carrying warm fixtures)
+      val preTok = Some(TextOps.bm25Index(s, dir))
+      IndexStore.writeUnified(s, docs.filter(col("doc_id") % 2 === 0),
+        vecs.filter(col("vec_id") % 2 === 0),
+        Similarity.ivfCentroids(s, dir), idx, governed = true,
+        payloads = Some(payloadsOf(docs.filter(col("doc_id") % 2 === 0))),
+        preTok = preTok)
+      for ((residue, shift) <- Seq((1, 480L), (3, 0L))) {
+        val slice = docs.filter(col("doc_id") % 4 === residue)
+        val batch = slice.filter(col("doc_id") % 10 =!= 1)
+          .unionByName(slice.filter(col("doc_id") % 10 === 1)
+            .select(col("doc_id"), col("text"),
+              lit("probe_shift").as("source"),
+              (col("n_chars") + shift).as("n_chars")))
+        IndexStore.appendUnifiedGated(s, idx, batch,
+          vecs.filter(col("vec_id") % 4 === residue), "src0",
+          maxPsi = GatedUnifiedMaxPsi,
+          payloads = Some(payloadsOf(slice)),
           preTok = preTok)
-        for ((residue, shift) <- Seq((1, 480L), (3, 0L))) {
-          val slice = docs.filter(col("doc_id") % 4 === residue)
-          val batch = slice.filter(col("doc_id") % 10 =!= 1)
-            .unionByName(slice.filter(col("doc_id") % 10 === 1)
-              .select(col("doc_id"), col("text"),
-                lit("probe_shift").as("source"),
-                (col("n_chars") + shift).as("n_chars")))
-          IndexStore.appendUnifiedGated(s, idx, batch,
-            vecs.filter(col("vec_id") % 4 === residue), "src0",
-            maxPsi = GatedUnifiedMaxPsi,
-            payloads = Some(payloadsOf(slice)),
-            preTok = preTok)
-        }
-        idx
-      })
+      }
     }
 
   /** Once-per-JVM governed dedup store whose history is the full
@@ -649,39 +620,33 @@ object Selection {
     * Fold 2 (% 4 == 3 non-src0, % 10 == 3): the SAME probe
     * construction — `probe_shift` at n_chars + 480 — now PASSES the
     * same gate against the new anchor and enters the census. */
-  private val reanchorStores =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def reanchorStore(s: SparkSession, dir: String): String =
-    reanchorStores.synchronized {
-      reanchorStores.getOrElseUpdate(dir, {
-        val idx = jvmStorePath("graft_rea", dir)
-        val docs = table(s, dir, "documents")
-          .select(col("doc_id"), md5(col("doc_id").cast("string")).as("text"),
-            col("source"), col("n_chars"))
-        IndexStore.write(s, docs.filter(col("doc_id") % 2 === 0), idx,
-          governed = true)
-        val f1s = docs.filter(col("doc_id") % 4 === 1)
-        IndexStore.screenAndFoldGated(s, idx,
-          f1s.filter(col("doc_id") % 10 =!= 1)
-            .unionByName(f1s.filter(col("doc_id") % 10 === 1)
-              .select(col("doc_id"), col("text"),
-                lit("probe_shift").as("source"),
-                (col("n_chars") + 480).as("n_chars"))),
-          "src0", maxPsi = GatedUnifiedMaxPsi)
-        IndexStore.reanchorCensus(s, idx, "src0",
-          docs.filter(col("source") === "src0")
-            .select(col("doc_id"), col("text"), col("source"),
-              (col("n_chars") + 480).as("n_chars")),
-          maxPsi = GatedUnifiedMaxPsi)
-        IndexStore.screenAndFoldGated(s, idx,
-          docs.filter(col("doc_id") % 4 === 3 &&
-              col("source") =!= "src0" && col("doc_id") % 10 === 3)
+    storeFixture("graft_rea", dir) { idx =>
+      val docs = table(s, dir, "documents")
+        .select(col("doc_id"), md5(col("doc_id").cast("string")).as("text"),
+          col("source"), col("n_chars"))
+      IndexStore.write(s, docs.filter(col("doc_id") % 2 === 0), idx,
+        governed = true)
+      val f1s = docs.filter(col("doc_id") % 4 === 1)
+      IndexStore.screenAndFoldGated(s, idx,
+        f1s.filter(col("doc_id") % 10 =!= 1)
+          .unionByName(f1s.filter(col("doc_id") % 10 === 1)
             .select(col("doc_id"), col("text"),
               lit("probe_shift").as("source"),
-              (col("n_chars") + 480).as("n_chars")),
-          "src0", maxPsi = GatedUnifiedMaxPsi)
-        idx
-      })
+              (col("n_chars") + 480).as("n_chars"))),
+        "src0", maxPsi = GatedUnifiedMaxPsi)
+      IndexStore.reanchorCensus(s, idx, "src0",
+        docs.filter(col("source") === "src0")
+          .select(col("doc_id"), col("text"), col("source"),
+            (col("n_chars") + 480).as("n_chars")),
+        maxPsi = GatedUnifiedMaxPsi)
+      IndexStore.screenAndFoldGated(s, idx,
+        docs.filter(col("doc_id") % 4 === 3 &&
+            col("source") =!= "src0" && col("doc_id") % 10 === 3)
+          .select(col("doc_id"), col("text"),
+            lit("probe_shift").as("source"),
+            (col("n_chars") + 480).as("n_chars")),
+        "src0", maxPsi = GatedUnifiedMaxPsi)
     }
 
   /** Once-per-JVM governed UNIFIED store whose single gated fold ran
@@ -702,47 +667,28 @@ object Selection {
     * probe_reversed and probe_clone — the exchangeable scrambles —
     * pass (≤0.09): the held source's rows land in NO channel of the
     * commit, which q170 reads back and DuckDB replays end to end. */
-  private val orderGateStores =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def orderGateStore(s: SparkSession, dir: String): String =
-    orderGateStores.synchronized {
-      orderGateStores.getOrElseUpdate(dir, {
-        val idx = jvmStorePath("graft_ogate", dir)
-        val docs = table(s, dir, "documents")
-          .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
-        val boot = docs.filter(col("source") === "src0")
-        val vecs = Similarity.normalized(s, dir)
-          .join(boot.select(col("doc_id").as("vec_id")), Seq("vec_id"),
-            "left_semi")
-        IndexStore.writeUnified(s, boot, vecs,
-          Similarity.ivfCentroids(s, dir), idx, governed = true)
-        val slice = boot.filter(col("doc_id") % 40 === 0)
-        def probe(name: String, off: Long, text: Column): DataFrame =
-          slice.select((col("doc_id") + off).as("doc_id"), text.as("text"),
-            lit(name).as("source"), col("n_chars"))
-        val batch = probe("probe_sorted", 1000000000L,
-            concat_ws(" ", sort_array(split(col("text"), " "))))
-          .unionByName(probe("probe_reversed", 2000000000L,
-            concat_ws(" ", reverse(split(col("text"), " ")))))
-          .unionByName(probe("probe_clone", 3000000000L, col("text")))
-        IndexStore.appendUnifiedGated(s, idx, batch, vecs.limit(0),
-          "src0", maxPsi = GatedUnifiedMaxPsi, orderGate = true)
-        idx
-      })
+    storeFixture("graft_ogate", dir) { idx =>
+      val docs = table(s, dir, "documents")
+        .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
+      val boot = docs.filter(col("source") === "src0")
+      val vecs = Similarity.normalized(s, dir)
+        .join(boot.select(col("doc_id").as("vec_id")), Seq("vec_id"),
+          "left_semi")
+      IndexStore.writeUnified(s, boot, vecs,
+        Similarity.ivfCentroids(s, dir), idx, governed = true)
+      val slice = boot.filter(col("doc_id") % 40 === 0)
+      def probe(name: String, off: Long, text: Column): DataFrame =
+        slice.select((col("doc_id") + off).as("doc_id"), text.as("text"),
+          lit(name).as("source"), col("n_chars"))
+      val batch = probe("probe_sorted", 1000000000L,
+          concat_ws(" ", sort_array(split(col("text"), " "))))
+        .unionByName(probe("probe_reversed", 2000000000L,
+          concat_ws(" ", reverse(split(col("text"), " ")))))
+        .unionByName(probe("probe_clone", 3000000000L, col("text")))
+      IndexStore.appendUnifiedGated(s, idx, batch, vecs.limit(0),
+        "src0", maxPsi = GatedUnifiedMaxPsi, orderGate = true)
     }
-
-  /** The Dedup.resetWarmFixtures contract for this family's five
-    * warm-built governed stores — Bench's warm-bracket self-heal
-    * only. */
-  private[graft] def resetWarmFixtures(): Unit = Seq(
-    governedStores, gatedHoldStores, gatedUnifiedStores,
-    reanchorStores, orderGateStores).foreach { m =>
-    m.synchronized {
-      m.values.foreach(p =>
-        IndexStore.deleteRec(new java.io.File(p)))
-      m.clear()
-    }
-  }
 
   /** Force-materialize this family's session-shared memoized frame —
     * Bench's warm phase, timed per frame (the Similarity.warm
@@ -763,10 +709,6 @@ object Selection {
     * bench's concurrent store group (VERDICT r14 next #3) — the first
     * r15 measurement chained them in one thread and that chain WAS
     * the group wall (29.8 s ≈ 9.9 + 6.6 + 13.4). */
-  def warmStoreParts(s: SparkSession, dir: String)
-      : Seq[() => Seq[(String, Double)]] =
-    warmStorePartsEarly(s, dir) ++ warmStorePartsLate(s, dir)
-
   /** The fixtures whose inputs are RAW driver tables only (md5 texts,
     * no memoized frame — governedStore / gatedHoldStore /
     * reanchorStore read `documents` and nothing else): safe to start

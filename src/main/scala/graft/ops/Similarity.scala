@@ -248,141 +248,120 @@ object Similarity {
       .orderBy($"qid", $"rrf".desc, $"doc_id")
   }
 
-  /** One-query hybrid route over EXPLICITLY PINNED store versions —
-    * the fix for the cross-store consistency gap (VERDICT r7 missing
-    * #3): q142's round-7 spelling resolved the text and vector store
-    * pointers independently, so with concurrent ingest the lexical and
-    * semantic halves could answer from different corpus states. Here
-    * the caller resolves (textSnap, vecSnap) ONCE — normally
-    * `IndexStore.history(root).last` for each — and every channel read
-    * of the route goes through those committed manifests, so one
-    * hybrid answer reads one version of each store no matter what
-    * commits mid-flight (HybridStoreSpec injects a concurrent append
-    * between the two sides and pins the output). `selfId` is the
-    * querying doc, excluded from both top lists before ranking. */
-  private[graft] def hybridSingleAt(s: SparkSession, dir: String,
-      textSnap: String, vecSnap: String, selfId: Long,
-      terms: Seq[String]): DataFrame = {
+  /** A committed store version that one arm of a hybrid route reads
+    * through: (root, snapshot). Every channel read of the arm resolves
+    * the snapshot's manifest, so what commits mid-flight never reaches
+    * it (HybridStoreSpec injects a concurrent append between the two
+    * arms and pins the output). */
+  private type Pin = (String, String)
+
+  /** `root` pinned at its live version, resolved once. A unified store
+    * passes the SAME pin to both arms, so one hybrid answer reads one
+    * corpus version by construction; the split text and vector stores
+    * pass one pin each (the fix for VERDICT r7 missing #3, where
+    * q142's two halves resolved their pointers independently). */
+  private def live(root: String): Pin = (root, IndexStore.history(root).last)
+
+  /** A semantic arm: the query doc ids' top 100 neighbours at `pin`,
+    * each query's own doc excluded, as (qid, doc_id, sem_rank). */
+  private type SemArm = (SparkSession, String, Pin, Seq[Long]) => DataFrame
+
+  /** The IVF-cells arm (q140's lookup): the queries' normalized
+    * vectors probe 4 cells of the pinned model (annFromStoreAt). */
+  private def ivfArm(s: SparkSession, dir: String, pin: Pin,
+      qids: Seq[Long]): DataFrame = {
     import s.implicits._
-    val lexTop = IndexStore.bm25FromStoreAt(s,
-        TextOps.textStore(s, dir), textSnap, terms)
+    val qv = normalized(s, dir)
+      .filter($"vec_id".isin(qids: _*)).select($"vec_id", $"unit")
+    IndexStore.annFromStoreAt(s, pin._1, pin._2, qv, nprobe = 4, k = 100)
+      .select($"qid", $"vid".as("doc_id"), $"rn".cast("int").as("sem_rank"))
+  }
+
+  /** The projected-channels arm (q159's lookup): one coarse read of
+    * `proj_units` and one exact rerank over `exact_vecs`, the projection
+    * identity checked at the same pin (projectedAnnFromStoreAt). It
+    * prunes by dimension where [[ivfArm]] prunes by cell, so the fused
+    * output differs exactly where the candidate sets do. */
+  private def projArm(s: SparkSession, dir: String, pin: Pin,
+      qids: Seq[Long]): DataFrame = {
+    import s.implicits._
+    val qe = table(s, dir, "embeddings")
+      .filter($"vec_id".isin(qids: _*)).select($"vec_id", $"embedding")
+    IndexStore.projectedAnnFromStoreAt(s, pin._1, pin._2, qe, k = 100)
+      .select($"qid", $"vid".as("doc_id"), $"rn".cast("int").as("sem_rank"))
+  }
+
+  /** The lexical arm of a batch: ONE union-pruned postings read at
+    * `pin` for all queries (q144's batch shape), each query's own doc
+    * anti-joined before its qid-partitioned rank window, top 100 as
+    * (qid, doc_id, lex_rank). Each qid's ranks equal the single
+    * route's (TextIndexSpec pins the batch scores bit-equal to single
+    * lookups). */
+  private def lexArm(s: SparkSession, pin: Pin,
+      queries: Seq[(Long, Seq[String])]): DataFrame = {
+    import s.implicits._
+    val qframe = queries
+      .flatMap { case (qid, ts) => ts.map(t => (qid, t)) }
+      .distinct.toDF("qid", "term")
+    val exclude = queries.map { case (qid, _) => (qid, qid) }
+      .toDF("qid", "self_id")
+    IndexStore.bm25BatchFromStoreAt(s, pin._1, pin._2, qframe,
+        k = 100, exclude = Some(exclude),
+        terms = Some(queries.flatMap(_._2).distinct))
+      .select($"qid", $"doc_id", $"rank".cast("int").as("lex_rank"))
+  }
+
+  /** The batch hybrid route (q145, q160, q164): [[lexArm]] at `lex`
+    * and the semantic `arm` at `sem` for all queries at once, fused
+    * per qid by [[rrfFuseBatch]]. On a real cluster that is one
+    * postings read and one semantic read for the whole batch where N
+    * single routes pay 2N. Each qid's rows equal the single route's
+    * for that query alone (HybridStoreSpec). */
+  private[graft] def hybridBatch(s: SparkSession, dir: String, lex: Pin,
+      sem: Pin, arm: SemArm, queries: Seq[(Long, Seq[String])]): DataFrame =
+    rrfFuseBatch(lexArm(s, lex, queries), arm(s, dir, sem, queries.map(_._1)))
+
+  /** The one-query hybrid route (q142, q153): the query doc `probe._1`
+    * with terms `probe._2`. Its lexical side is the single BM25 lookup
+    * at `lex`, self excluded, top 100 ranked by one window over that
+    * bounded frame (the rank PlanSpec allows as bounded); its semantic
+    * side is `arm` at `sem`; [[rrfFuse]] fuses them with q115's exact
+    * arithmetic, so the lexical ranks equal q115's. */
+  private[graft] def hybridOne(s: SparkSession, dir: String, lex: Pin,
+      sem: Pin, arm: SemArm, probe: (Long, Seq[String])): DataFrame = {
+    import s.implicits._
+    val (selfId, terms) = probe
+    val lexTop = IndexStore.bm25FromStoreAt(s, lex._1, lex._2, terms)
       .filter($"doc_id" =!= selfId)
       .orderBy($"score".desc, $"doc_id").limit(100)
       .withColumn("lex_rank",
         row_number().over(Window.orderBy($"score".desc, $"doc_id")))
       .select($"doc_id", $"lex_rank")
-    val qv = normalized(s, dir)
-      .filter($"vec_id" === selfId).select($"vec_id", $"unit")
-    val semTop = IndexStore.annFromStoreAt(s, vectorStore(s, dir), vecSnap,
-        qv, nprobe = 4, k = 100)
-      .select($"vid".as("doc_id"), $"rn".cast("int").as("sem_rank"))
-    rrfFuse(lexTop, semTop)
+    rrfFuse(lexTop, arm(s, dir, sem, Seq(selfId)).drop("qid"))
   }
 
-  /** qid-keyed BATCH hybrid serving (catalog q145): N queries answered
-    * by ONE union-pruned postings read (q144's batch shape, self
-    * excluded before the per-qid rank window) plus ONE probed cells
-    * read (annFromStore's queries frame is already batched), fused per
-    * qid by [[rrfFuseBatch]] — on a real cluster that is two jobs and
-    * two index scans for the whole batch where N single routes pay
-    * 2N. Store versions are resolved once up front and PINNED across
-    * both sides ([[hybridSingleAt]]'s paired-version contract), so
-    * every query in the batch answers from the same (text, vector)
-    * corpus state. Per-qid output ≡ the single pinned route
-    * (HybridStoreSpec). */
-  private[graft] def hybridBatchFromStore(s: SparkSession, dir: String,
+  /** q142's route at caller-chosen versions of the split text and
+    * vector stores. */
+  private[graft] def hybridSingleAt(s: SparkSession, dir: String,
+      textSnap: String, vecSnap: String, selfId: Long,
+      terms: Seq[String]): DataFrame =
+    hybridOne(s, dir, (TextOps.textStore(s, dir), textSnap),
+      (vectorStore(s, dir), vecSnap), ivfArm, (selfId, terms))
+
+  /** q145's batch served from the unified store at one pin. */
+  private[graft] def hybridBatchFromUnified(s: SparkSession, dir: String,
       queries: Seq[(Long, Seq[String])]): DataFrame = {
-    import s.implicits._
-    val tRoot = TextOps.textStore(s, dir)
-    val vRoot = vectorStore(s, dir)
-    val tSnap = IndexStore.history(tRoot).last
-    val vSnap = IndexStore.history(vRoot).last
-    val qframe = queries
-      .flatMap { case (qid, ts) => ts.map(t => (qid, t)) }
-      .distinct.toDF("qid", "term")
-    val exclude = queries.map { case (qid, _) => (qid, qid) }
-      .toDF("qid", "self_id")
-    val lex = IndexStore.bm25BatchFromStoreAt(s, tRoot, tSnap, qframe,
-        k = 100, exclude = Some(exclude),
-        terms = Some(queries.flatMap(_._2).distinct))
-      .select($"qid", $"doc_id", $"rank".cast("int").as("lex_rank"))
-    val qids = queries.map(_._1)
-    val qv = normalized(s, dir)
-      .filter($"vec_id".isin(qids: _*)).select($"vec_id", $"unit")
-    val sem = IndexStore.annFromStoreAt(s, vRoot, vSnap, qv,
-        nprobe = 4, k = 100)
-      .select($"qid", $"vid".as("doc_id"), $"rn".cast("int").as("sem_rank"))
-    rrfFuseBatch(lex, sem)
+    val uni = live(unifiedStore(s, dir))
+    hybridBatch(s, dir, uni, uni, ivfArm, queries)
   }
 
-  /** [[hybridBatchFromStore]] with the semantic arm swapped from the
-    * IVF cells to the projected-ANN channels (q160): both strategies
-    * co-reside in the SAME vector store, so the one (text, vector)
-    * version pair still pins the whole batch — the vector snap covers
-    * cells AND proj channels together, and swapping the route changes
-    * the candidate geometry (prune-by-dimension instead of
-    * prune-by-cell), never the consistency story. The lexical side is
-    * q145's union-pruned batch read verbatim; the semantic side is ONE
-    * store-fed coarse read + one exact rerank for all N queries
-    * (projectedAnnFromStoreAt is already qid-batched; its
-    * qid =!= vec_id condition excludes self). HybridStoreSpec pins the
-    * fusion against a driver-side recomputation and the lexical ranks
-    * against q145's. */
-  private[graft] def hybridBatchProjected(s: SparkSession, dir: String,
-      queries: Seq[(Long, Seq[String])]): DataFrame = {
-    import s.implicits._
-    val tRoot = TextOps.textStore(s, dir)
-    val vRoot = vectorStore(s, dir)
-    val tSnap = IndexStore.history(tRoot).last
-    val vSnap = IndexStore.history(vRoot).last
-    val qframe = queries
-      .flatMap { case (qid, ts) => ts.map(t => (qid, t)) }
-      .distinct.toDF("qid", "term")
-    val exclude = queries.map { case (qid, _) => (qid, qid) }
-      .toDF("qid", "self_id")
-    val lex = IndexStore.bm25BatchFromStoreAt(s, tRoot, tSnap, qframe,
-        k = 100, exclude = Some(exclude),
-        terms = Some(queries.flatMap(_._2).distinct))
-      .select($"qid", $"doc_id", $"rank".cast("int").as("lex_rank"))
-    val qids = queries.map(_._1)
-    val qe = table(s, dir, "embeddings")
-      .filter($"vec_id".isin(qids: _*)).select($"vec_id", $"embedding")
-    val sem = IndexStore.projectedAnnFromStoreAt(s, vRoot, vSnap, qe, k = 100)
-      .select($"qid", $"vid".as("doc_id"), $"rn".cast("int").as("sem_rank"))
-    rrfFuseBatch(lex, sem)
-  }
-
-  /** [[hybridBatchProjected]] served from a UNIFIED store (q164): the
-    * projected semantic arm and the q145 lexical batch read both feed
-    * off ONE manifest resolution of the single-pointer store — the
-    * interchangeable-arms contract (q160) on the family where it
-    * matters most, usable because [[IndexStore.appendUnified]] now
-    * maintains the projected channels inside the pair-atomic commit
-    * (VERDICT r10 #1). One snap pins postings, proj_units, exact_vecs,
-    * the projection identity AND the coverage gate together; scoring
-    * and fusion are the split-store route's exact arithmetic, so
-    * per-qid output over the same corpus is bit-identical to q160's
-    * (UnifiedStoreSpec pins it). */
-  private[graft] def hybridBatchProjectedUnified(s: SparkSession,
-      dir: String, root: String,
-      queries: Seq[(Long, Seq[String])]): DataFrame = {
-    import s.implicits._
-    val snap = IndexStore.history(root).last
-    val qframe = queries
-      .flatMap { case (qid, ts) => ts.map(t => (qid, t)) }
-      .distinct.toDF("qid", "term")
-    val exclude = queries.map { case (qid, _) => (qid, qid) }
-      .toDF("qid", "self_id")
-    val lex = IndexStore.bm25BatchFromStoreAt(s, root, snap, qframe,
-        k = 100, exclude = Some(exclude),
-        terms = Some(queries.flatMap(_._2).distinct))
-      .select($"qid", $"doc_id", $"rank".cast("int").as("lex_rank"))
-    val qids = queries.map(_._1)
-    val qe = table(s, dir, "embeddings")
-      .filter($"vec_id".isin(qids: _*)).select($"vec_id", $"embedding")
-    val sem = IndexStore.projectedAnnFromStoreAt(s, root, snap, qe, k = 100)
-      .select($"qid", $"vid".as("doc_id"), $"rn".cast("int").as("sem_rank"))
-    rrfFuseBatch(lex, sem)
+  /** The batch entries' queries: the two corpus-extreme term probes
+    * (q144's lexical pair) at the two smallest query-batch doc ids. */
+  private def extremeQueries(s: SparkSession, dir: String): Seq[(Long, Seq[String])] = {
+    val terms = Seq(
+      TextOps.qtermsOfExtreme(s, dir, useMax = false),
+      TextOps.qtermsOfExtreme(s, dir, useMax = true))
+    twoQids(s, dir).zip(terms)
   }
 
   /** The two smallest query-batch ids — the driver-known qid pair the
@@ -410,30 +389,6 @@ object Similarity {
         qids
       })
     }
-
-  /** The q142 hybrid answer served from the UNIFIED store (q153): one
-    * manifest, one version, both channels — the route cannot split
-    * versions because there is only one pointer to resolve
-    * (IndexStore.retrievalFromUnified resolves it once for both
-    * sides). Ranking/fusion are hybridSingleAt's exact arithmetic, so
-    * output is bit-identical to the paired-store route over the same
-    * corpus (UnifiedStoreSpec pins it). */
-  private[graft] def hybridSingleUnified(s: SparkSession, dir: String,
-      root: String, selfId: Long, terms: Seq[String]): DataFrame = {
-    import s.implicits._
-    val qv = normalized(s, dir)
-      .filter($"vec_id" === selfId).select($"vec_id", $"unit")
-    val (lexRaw, semRaw) =
-      IndexStore.retrievalFromUnified(s, root, terms, qv, nprobe = 4, k = 100)
-    val lexTop = lexRaw.filter($"doc_id" =!= selfId)
-      .orderBy($"score".desc, $"doc_id").limit(100)
-      .withColumn("lex_rank",
-        row_number().over(Window.orderBy($"score".desc, $"doc_id")))
-      .select($"doc_id", $"lex_rank")
-    val semTop = semRaw
-      .select($"vid".as("doc_id"), $"rn".cast("int").as("sem_rank"))
-    rrfFuse(lexTop, semTop)
-  }
 
   /** JL projections of the raw embeddings, long form (vec_id, j, p):
     * the q154 arithmetic at full double precision — exact decimal
@@ -590,33 +545,6 @@ object Similarity {
     queries.select($"vec_id".as("qid"),
         transform($"embedding", x => x.cast("double")).as("qembd"))
       .withColumn("qnsq", dotExact($"qembd", $"qembd"))
-  }
-
-  /** Batch arm of the unified route: q145's qid-keyed fused retrieval
-    * (one postings read + one cells read for N queries), but both
-    * sides fed by ONE manifest resolution of the unified store
-    * (IndexStore.retrievalBatchFromUnified) — the batch inherits the
-    * structural no-split-versions guarantee without pinning anything.
-    * Per-qid output ≡ q145's paired-store batch over the same corpus
-    * (UnifiedStoreSpec pins it). */
-  private[graft] def hybridBatchFromUnified(s: SparkSession, dir: String,
-      queries: Seq[(Long, Seq[String])]): DataFrame = {
-    import s.implicits._
-    val root = unifiedStore(s, dir)
-    val qframe = queries
-      .flatMap { case (qid, ts) => ts.map(t => (qid, t)) }
-      .distinct.toDF("qid", "term")
-    val exclude = queries.map { case (qid, _) => (qid, qid) }
-      .toDF("qid", "self_id")
-    val qids = queries.map(_._1)
-    val qv = normalized(s, dir)
-      .filter($"vec_id".isin(qids: _*)).select($"vec_id", $"unit")
-    val (lexRaw, semRaw) = IndexStore.retrievalBatchFromUnified(s, root,
-      qframe, kLex = 100, Some(exclude), qv, nprobe = 4, kAnn = 100,
-      terms = Some(queries.flatMap(_._2).distinct))
-    val lex = lexRaw.select($"qid", $"doc_id", $"rank".cast("int").as("lex_rank"))
-    val sem = semRaw.select($"qid", $"vid".as("doc_id"), $"rn".cast("int").as("sem_rank"))
-    rrfFuseBatch(lex, sem)
   }
 
   val catalog: Map[String, Q] = Map(
@@ -887,7 +815,7 @@ object Similarity {
     // the documented ANN trade, same as q39 vs q36); the lexical ranks
     // are bit-identical to q115's. Both store versions are resolved
     // ONCE up front and pinned across the whole route
-    // ([[hybridSingleAt]]) — one hybrid answer reads one committed
+    // ([[hybridOne]]) — one hybrid answer reads one committed
     // version of each store even under concurrent ingest. No oracle
     // (the semantic side inherits q39/q140's float-trained centroids);
     // HybridStoreSpec pins the fusion against a driver-side
@@ -895,16 +823,10 @@ object Similarity {
     // the lexical side against the session route, and the pinned reads
     // against an injected mid-route append. ----
     "q142_hybrid_store" -> Q(
-      (s, dir) => {
-        val tRoot = TextOps.textStore(s, dir)
-        val vRoot = vectorStore(s, dir)
-        // memoized probe: the probe id IS the min doc_id, so the
-        // former separate 1-row min head is the same cached value
-        val (minId, terms) = TextOps.qprobeOfExtreme(s, dir, useMax = false)
-        hybridSingleAt(s, dir,
-          IndexStore.history(tRoot).last, IndexStore.history(vRoot).last,
-          minId, terms)
-      },
+      // memoized probe: the probe id IS the min doc_id
+      (s, dir) => hybridOne(s, dir, live(TextOps.textStore(s, dir)),
+        live(vectorStore(s, dir)), ivfArm,
+        TextOps.qprobeOfExtreme(s, dir, useMax = false)),
       None),
 
     // ---- hybrid serving from the UNIFIED store: q142's answer, but
@@ -920,10 +842,9 @@ object Similarity {
     // replay contract. ----
     "q153_hybrid_unified_store" -> Q(
       (s, dir) => {
-        val root = unifiedStore(s, dir)
-        // memoized probe: id IS the min doc_id (q142's spelling)
-        val (minId, terms) = TextOps.qprobeOfExtreme(s, dir, useMax = false)
-        hybridSingleUnified(s, dir, root, minId, terms)
+        val uni = live(unifiedStore(s, dir))
+        hybridOne(s, dir, uni, uni, ivfArm,
+          TextOps.qprobeOfExtreme(s, dir, useMax = false))
       },
       None),
 
@@ -937,12 +858,8 @@ object Similarity {
     // HybridStoreSpec pins per-qid output ≡ the single pinned route,
     // whose lexical side q139's oracle covers. ----
     "q145_hybrid_batch_store" -> Q(
-      (s, dir) => {
-        val terms = Seq(
-          TextOps.qtermsOfExtreme(s, dir, useMax = false),
-          TextOps.qtermsOfExtreme(s, dir, useMax = true))
-        hybridBatchFromStore(s, dir, twoQids(s, dir).zip(terms))
-      },
+      (s, dir) => hybridBatch(s, dir, live(TextOps.textStore(s, dir)),
+        live(vectorStore(s, dir)), ivfArm, extremeQueries(s, dir)),
       None),
 
     // ---- BATCH hybrid with the PROJECTED semantic arm (q160): q145's
@@ -961,12 +878,8 @@ object Similarity {
     // recomputation from the two individually-pinned lookups and the
     // lexical side against q145's. ----
     "q160_hybrid_projected_batch" -> Q(
-      (s, dir) => {
-        val terms = Seq(
-          TextOps.qtermsOfExtreme(s, dir, useMax = false),
-          TextOps.qtermsOfExtreme(s, dir, useMax = true))
-        hybridBatchProjected(s, dir, twoQids(s, dir).zip(terms))
-      },
+      (s, dir) => hybridBatch(s, dir, live(TextOps.textStore(s, dir)),
+        live(vectorStore(s, dir)), projArm, extremeQueries(s, dir)),
       None),
 
     // ---- q160's projected-arm batch hybrid served from the UNIFIED
@@ -981,15 +894,12 @@ object Similarity {
     // q160's float-coarse rule); UnifiedStoreSpec pins per-qid output
     // ≡ q160 bit-identically over the same corpus. ----
     "q164_hybrid_projected_unified" -> Q(
+      // served from the clone PUBLISH (single-path channels), not
+      // the live 3-fold fixture — the textStore serving pattern on
+      // the unified family; content identical by the clone pin
       (s, dir) => {
-        val terms = Seq(
-          TextOps.qtermsOfExtreme(s, dir, useMax = false),
-          TextOps.qtermsOfExtreme(s, dir, useMax = true))
-        // served from the clone PUBLISH (single-path channels), not
-        // the live 3-fold fixture — the textStore serving pattern on
-        // the unified family; content identical by the clone pin
-        hybridBatchProjectedUnified(s, dir, unifiedServingStore(s, dir),
-          twoQids(s, dir).zip(terms))
+        val uni = live(unifiedServingStore(s, dir))
+        hybridBatch(s, dir, uni, uni, projArm, extremeQueries(s, dir))
       },
       None),
 
@@ -1460,29 +1370,11 @@ object Similarity {
     * semantic routes (IVF-by-cell and projected-by-dimension), so a
     * batch hybrid can swap its semantic arm without a second pointer
     * to race. */
-  /** The Dedup.resetWarmFixtures contract for this family's three
-    * warm-built store roots (vector / unified / unified-serving) —
-    * Bench's warm-bracket self-heal only. */
-  private[graft] def resetWarmFixtures(): Unit = Seq(
-    vectorStores, unifiedStores, unifiedServingStores).foreach { m =>
-    m.synchronized {
-      m.values.foreach(p => IndexStore.deleteRec(new java.io.File(p)))
-      m.clear()
-    }
-  }
-
-  private val vectorStores =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def vectorStore(s: SparkSession, dir: String): String =
-    vectorStores.synchronized {
-      vectorStores.getOrElseUpdate(dir, {
-        val idx = graft.Core.jvmStorePath("graft_vec", dir)
-        IndexStore.writeVectors(s, normalized(s, dir),
-          ivfCentroids(s, dir), idx)
-        IndexStore.writeProjections(s, idx, projectedUnits(s, dir),
-          exactVecs(s, dir))
-        idx
-      })
+    storeFixture("graft_vec", dir) { idx =>
+      IndexStore.writeVectors(s, normalized(s, dir), ivfCentroids(s, dir), idx)
+      IndexStore.writeProjections(s, idx, projectedUnits(s, dir),
+        exactVecs(s, dir))
     }
 
   /** Once-per-JVM unified SERVING store — [[unifiedStore]]'s live
@@ -1499,16 +1391,10 @@ object Similarity {
     * root carries the SAME committed corpus (cloneStoreAt's pin:
     * reads are bit-identical — UnifiedStoreSpec's q164 ≡ q160 pin
     * runs through this clone). */
-  private val unifiedServingStores =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def unifiedServingStore(s: SparkSession, dir: String): String =
-    unifiedServingStores.synchronized {
-      unifiedServingStores.getOrElseUpdate(dir, {
-        val src = unifiedStore(s, dir)
-        val idx = graft.Core.jvmStorePath("graft_unisrv", dir)
-        IndexStore.cloneStoreAt(s, src, IndexStore.history(src).last, idx)
-        idx
-      })
+    storeFixture("graft_unisrv", dir) { idx =>
+      val src = unifiedStore(s, dir)
+      IndexStore.cloneStoreAt(s, src, IndexStore.history(src).last, idx)
     }
 
   /** Once-per-JVM UNIFIED store (q153): the corpus's text AND vector
@@ -1525,38 +1411,32 @@ object Similarity {
     * (IndexStore.appendUnifiedGated). Same memo discipline as the
     * other rolling stores: built before the audit query arrives, so
     * the query times the serving route, not the ingest. */
-  private val unifiedStores =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def unifiedStore(s: SparkSession, dir: String): String =
-    unifiedStores.synchronized {
-      unifiedStores.getOrElseUpdate(dir, {
-        val idx = graft.Core.jvmStorePath("graft_uni", dir)
-        val docs = table(s, dir, "documents")
-        val vecs = normalized(s, dir)
-        val raw = table(s, dir, "embeddings")
-        // the projected-ANN channels ride the single-pointer store too
-        // (q164's interchangeable arms): bootstrap slice projected
-        // INSIDE the bootstrap commit (no channel-add version — the
-        // q157 oracle's version axis stays the 3-fold ingest timeline),
-        // later slices maintained by the folds' raw contract — so the
-        // flagship fixture exercises the pair-atomic proj maintenance
-        // path every session
-        val raw0 = raw.filter(col("vec_id") % 3 === 0)
-        // the docs side shares the memoized full-corpus tokenization
-        // with the other text-carrying fixtures (VERDICT r11 next #3)
-        val preTok = Some(TextOps.bm25Index(s, dir))
-        IndexStore.writeUnified(s, docs.filter(col("doc_id") % 3 === 0),
-          vecs.filter(col("vec_id") % 3 === 0), ivfCentroids(s, dir), idx,
-          governed = true,
-          proj = Some((projectedUnitsOf(raw0, 32), exactVecsOf(raw0))),
+    storeFixture("graft_uni", dir) { idx =>
+      val docs = table(s, dir, "documents")
+      val vecs = normalized(s, dir)
+      val raw = table(s, dir, "embeddings")
+      // the projected-ANN channels ride the single-pointer store too
+      // (q164's interchangeable arms): bootstrap slice projected
+      // INSIDE the bootstrap commit (no channel-add version — the
+      // q157 oracle's version axis stays the 3-fold ingest timeline),
+      // later slices maintained by the folds' raw contract — so the
+      // flagship fixture exercises the pair-atomic proj maintenance
+      // path every session
+      val raw0 = raw.filter(col("vec_id") % 3 === 0)
+      // the docs side shares the memoized full-corpus tokenization
+      // with the other text-carrying fixtures (VERDICT r11 next #3)
+      val preTok = Some(TextOps.bm25Index(s, dir))
+      IndexStore.writeUnified(s, docs.filter(col("doc_id") % 3 === 0),
+        vecs.filter(col("vec_id") % 3 === 0), ivfCentroids(s, dir), idx,
+        governed = true,
+        proj = Some((projectedUnitsOf(raw0, 32), exactVecsOf(raw0))),
+        preTok = preTok)
+      for (r <- 1 to 2)
+        IndexStore.appendUnified(s, idx,
+          docs.filter(col("doc_id") % 3 === r),
+          vecs.filter(col("vec_id") % 3 === r),
+          raw = Some(raw.filter(col("vec_id") % 3 === r)),
           preTok = preTok)
-        for (r <- 1 to 2)
-          IndexStore.appendUnified(s, idx,
-            docs.filter(col("doc_id") % 3 === r),
-            vecs.filter(col("vec_id") % 3 === r),
-            raw = Some(raw.filter(col("vec_id") % 3 === r)),
-            preTok = preTok)
-        idx
-      })
     }
 }

@@ -1075,27 +1075,10 @@ object TextOps {
     * route, and the ingest history stays intact for q143's timeline
     * walk (a compact of the versioned root itself would append a 4th
     * version and change that walk). */
-  /** The Dedup.resetWarmFixtures contract for this family's two
-    * warm-built store roots (versioned ingest + serving clone) —
-    * Bench's warm-bracket self-heal only. */
-  private[graft] def resetWarmFixtures(): Unit = Seq(
-    textStores, versionedTextStores).foreach { m =>
-    m.synchronized {
-      m.values.foreach(p => IndexStore.deleteRec(new java.io.File(p)))
-      m.clear()
-    }
-  }
-
-  private val textStores =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def textStore(s: SparkSession, dir: String): String =
-    textStores.synchronized {
-      textStores.getOrElseUpdate(dir, {
-        val src = versionedTextStore(s, dir)
-        val idx = graft.Core.jvmStorePath("graft_text", dir)
-        IndexStore.cloneStoreAt(s, src, IndexStore.history(src).last, idx)
-        idx
-      })
+    storeFixture("graft_text", dir) { idx =>
+      val src = versionedTextStore(s, dir)
+      IndexStore.cloneStoreAt(s, src, IndexStore.history(src).last, idx)
     }
 
   /** A text store with an INGEST HISTORY — the corpus folded in as
@@ -1105,37 +1088,17 @@ object TextOps {
     * timeline back through IndexStore.channelAt; memoized per JVM like
     * [[textStore]] (a rolling store's history exists before an audit
     * query arrives). */
-  private val versionedTextStores =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def versionedTextStore(s: SparkSession, dir: String): String =
-    versionedTextStores.synchronized {
-      versionedTextStores.getOrElseUpdate(dir, {
-        val idx = graft.Core.jvmStorePath("graft_textv", dir)
-        val docs = table(s, dir, "documents")
-        // committed version ⇔ NON-EMPTY fold, uniformly: appendText
-        // already skips empty batches, and the bootstrap write is
-        // deferred to the first non-empty slice for the same reason —
-        // a corpus with an empty doc_id%3 residue then yields exactly
-        // one committed snapshot per populated slice, which is the
-        // version sequence q143's oracle derives from the same slicing
-        var initialized = false
-        // ONE tokenization pass feeds all three folds: the memoized
-        // full-corpus postings (bm25Index) semi-joined per slice
-        // (VERDICT r11 next #3 — the three text-carrying warm fixtures
-        // each re-tokenized overlapping slices of this same corpus)
-        val preTok = Some(bm25Index(s, dir))
-        for (r <- 0 to 2) {
-          val slice = docs.filter(col("doc_id") % 3 === r)
-          if (!initialized) {
-            if (!slice.isEmpty) {
-              IndexStore.writeText(s, slice, idx, preTok); initialized = true
-            }
-          } else IndexStore.appendText(s, idx, slice, preTok)
-        }
-        require(initialized,
-          s"versionedTextStore: documents table at $dir is empty — the ingest timeline is undefined")
-        idx
-      })
+    storeFixture("graft_textv", dir) { idx =>
+      // ONE tokenization pass feeds all three folds: the memoized
+      // full-corpus postings (bm25Index) semi-joined per slice
+      // (VERDICT r11 next #3 — the three text-carrying warm fixtures
+      // each re-tokenized overlapping slices of this same corpus)
+      val preTok = Some(bm25Index(s, dir))
+      foldThirds(table(s, dir, "documents"),
+          s"versionedTextStore: documents table at $dir is empty — the ingest timeline is undefined")(
+        IndexStore.writeText(s, _, idx, preTok),
+        IndexStore.appendText(s, idx, _, preTok))
     }
 
 }

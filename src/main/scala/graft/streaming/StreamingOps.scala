@@ -332,32 +332,6 @@ object StreamingOps {
     compactBestEffort(s, vecIndexDir)
   }
 
-  /** [[ingestAndMaintain]] behind the governed store's drift circuit
-    * breaker (IndexStore.screenAndFoldGated): each micro-batch's
-    * sources are PSI-checked against the stored anchor census before
-    * folding, and a source whose tick would rot the mix is held out —
-    * reported, not folded — so a poisoned upstream cannot contaminate
-    * the rolling store at streaming cadence while an operator decides.
-    * Returns (decisions for admitted docs, per-source drift report
-    * with the `held` flag); sink both — the report is the audit trail
-    * the q152 timeline cannot show (what was REFUSED never enters the
-    * census). Same OCC-retry and best-effort compaction contract as
-    * the other loops. `orderGate`/`maxOrderPsi` thread to the gate's
-    * opt-in word-order self-null screen (the screenAndFoldGated
-    * contract: an order-held source is held at streaming cadence
-    * exactly like a PSI hold, and the report carries its psi_order). */
-  def ingestAndMaintainGoverned(s: SparkSession, indexDir: String,
-      batch: DataFrame, anchor: String,
-      maxPsi: Double = 0.25, orderGate: Boolean = false,
-      maxOrderPsi: Double = 0.25): (DataFrame, DataFrame) = {
-    val out = withOccRetry() {
-      graft.ops.IndexStore.screenAndFoldGated(s, indexDir, batch, anchor,
-        maxPsi, orderGate, maxOrderPsi)
-    }
-    compactBestEffort(s, indexDir)
-    out
-  }
-
   /** Unified-store sibling of [[ingestAndMaintainText]] /
     * [[ingestAndMaintainVectors]]: fold each micro-batch's (docs,
     * vectors) PAIR into the unified store as ONE atomic cross-family

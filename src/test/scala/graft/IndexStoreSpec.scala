@@ -841,18 +841,18 @@ class IndexStoreSpec extends SparkSpec {
     val filesBefore = describeFiles(root)
     val reads = unifiedReads(root)
     val (_, jobs) = jobsOf(ops.IndexStore.compact(spark, root))
-    // 13 jobs when compaction rewrote every channel: the two copied
-    // census channels each saved a schema inference and a write
-    assert(jobs == 9, s"compact ran $jobs jobs")
+    // 13 jobs when compaction rewrote every channel: each of the three
+    // copied channels saves a schema inference and a write
+    assert(jobs == 7, s"compact ran $jobs jobs")
     val snap = currentSnap(root)
     val m = ops.IndexStore.manifestAt(root, snap)
     assert(m.keySet == prior.keySet)
-    // the census channels are single-path, single-file after every fold;
-    // the folded channels carry three paths, and centroids three files
-    // (one per partition of the model frame), so those are rewritten
+    // the census channels and the frozen centroids model are
+    // single-path, single-file after every fold; the folded channels
+    // carry three paths, so those are rewritten
     val copied = prior.keySet.filter(ch => prior(ch).paths.size == 1 &&
       partFiles(java.nio.file.Paths.get(root, prior(ch).paths.head)).size == 1)
-    assert(copied == Set("stats", "vec_stats"), copied.toString)
+    assert(copied == Set("stats", "vec_stats", "centroids"), copied.toString)
     for (ch <- copied) {
       val src = partFiles(java.nio.file.Paths.get(root, prior(ch).paths.head))
       assert(partFiles(java.nio.file.Paths.get(root, m(ch).paths.head)) == src,
