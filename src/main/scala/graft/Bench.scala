@@ -80,6 +80,20 @@ object Bench {
     if (s.size >= 2) s(s.size / 2) else -1.0
   }
 
+  /** The shots of a self-stabilizing sentinel: `shoot(i)` for
+    * i = 1, 2, … until two consecutive positive shots agree within
+    * 10%, at most `maxShots` shots. A failed shot (-1) never counts as
+    * agreement. Returns every shot; the last is the stabilized one. */
+  private[graft] def stabilized(maxShots: Int)(shoot: Int => Double): Seq[Double] = {
+    val shots = scala.collection.mutable.ArrayBuffer.empty[Double]
+    def agree = shots.size >= 2 && {
+      val (a, b) = (shots(shots.size - 2), shots.last)
+      a > 0 && b > 0 && math.abs(b - a) / math.max(a, b) <= 0.1
+    }
+    while (shots.size < maxShots && !agree) shots += shoot(shots.size + 1)
+    shots.toSeq
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local()
@@ -174,16 +188,8 @@ object Bench {
     // 5× the band — the agreement itself is the steal evidence) and
     // the max/median verdict catches it.
     val calPreCold = calibrate("pre_cold")
-    val preShots = scala.collection.mutable.ListBuffer.empty[Double]
-    def lastTwoAgree: Boolean = preShots.size >= 2 && {
-      val a = preShots(preShots.size - 2)
-      val b = preShots.last
-      a > 0 && b > 0 && math.abs(b - a) / math.max(a, b) <= 0.1
-    }
-    if (only.isEmpty)
-      while (preShots.size < 6 && !lastTwoAgree)
-        preShots += calibrate(s"pre${preShots.size + 1}")
-    else preShots += -1.0
+    val preShots =
+      if (only.isEmpty) stabilized(6)(i => calibrate(s"pre$i")) else Seq(-1.0)
     val calPre = preShots.last
     // warm consolidation round 4 (VERDICT r12 next #2): the two
     // unified-store bootstraps — similarity.unifiedStore (q153 family)
@@ -347,16 +353,9 @@ object Bench {
     //    clean endpoints.
     def runSweep(tag: String): SweepWindow = {
       val errs = scala.collection.mutable.ListBuffer.empty[(String, String)]
-      val shots = scala.collection.mutable.ListBuffer.empty[Double]
-      def twoAgree: Boolean = shots.size >= 2 && {
-        val a = shots(shots.size - 2)
-        val b = shots.last
-        a > 0 && b > 0 && math.abs(b - a) / math.max(a, b) <= 0.1
-      }
-      if (only.isEmpty)
-        while (shots.size < 4 && !twoAgree)
-          shots += calibrate(s"${tag}first${shots.size + 1}", errs)
-      else shots += -1.0
+      val shots =
+        if (only.isEmpty) stabilized(4)(i => calibrate(s"${tag}first$i", errs))
+        else Seq(-1.0)
       val mid = scala.collection.mutable.ListBuffer.empty[Double]
       val res = ordered.zipWithIndex.map { case ((name, fn), idx) =>
         if (idx > 0 && idx % 30 == 0) mid += calibrate(s"${tag}mid$idx", errs)
@@ -370,7 +369,7 @@ object Bench {
           name -> -1.0
         }
       }
-      SweepWindow(res, shots.toSeq, mid.toSeq,
+      SweepWindow(res, shots, mid.toSeq,
         calibrate(s"${tag}last", errs), errs.toSeq)
     }
     val window1 = runSweep("")
@@ -425,13 +424,7 @@ object Bench {
           "warm retry (VERDICT r14 next #4)")
         Core.clearCaches(spark)
         Core.resetStoreFixtures()
-        val shots2 = scala.collection.mutable.ListBuffer.empty[Double]
-        def agree2: Boolean = shots2.size >= 2 && {
-          val a = shots2(shots2.size - 2); val b = shots2.last
-          a > 0 && b > 0 && math.abs(b - a) / math.max(a, b) <= 0.1
-        }
-        while (shots2.size < 6 && !agree2)
-          shots2 += calibrate(s"warmretry_pre${shots2.size + 1}")
+        val shots2 = stabilized(6)(i => calibrate(s"warmretry_pre$i"))
         val (wb2, ws2) = runWarmPhase()
         val post2 = calibrate("warmretry_post")
         // the retried bracket: BOTH its sentinels against the sweep
@@ -441,7 +434,7 @@ object Bench {
           if (sweepMedian > 0 && shots2.last > 0 && post2 > 0)
             math.max(shots2.last, post2) / sweepMedian
           else -1.0
-        Some((wb2, ws2, r2, shots2.toSeq, post2))
+        Some((wb2, ws2, r2, shots2, post2))
       }
     val retryWins = warmRetry.exists(w => chooseWarmRetry(preRatio1, w._3))
     val (warmBreakdown, warmSec) =

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.jdk.CollectionConverters._
+
 /** Shared helpers for the query catalog.
   *
   * Numeric discipline (SURVEY.md §7.4): every float aggregation that is
@@ -83,13 +85,10 @@ object Core {
     * forever (StreamSoak) must not grow it without limit. */
   private val MaxSchemas = 1024
 
-  /** Inferred parquet schemas, least recently used first. Holds only
-    * `StructType`s — never a session or a DataFrame. */
-  private val schemas =
-    new java.util.LinkedHashMap[String, StructType](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, StructType]): Boolean = size > MaxSchemas
-    }
+  /** Inferred parquet schemas, the least recently used dropped past
+    * [[MaxSchemas]]. Holds only `StructType`s — never a session or a
+    * DataFrame. */
+  private val schemas = new Memo[String, StructType](MaxSchemas)
 
   /** `spark.read.parquet(path)` without the footer-inference job on a
     * repeat read. A read without a schema launches one Spark job just
@@ -110,18 +109,21 @@ object Core {
     * directory's own mtime or inode could repeat after a delete and a
     * re-create, so neither is used. A path that is not a local file,
     * or that vanishes while it is listed, is read without the memo.
-    * Thread-safe: the staging and probe pools read concurrently, and
-    * two readers racing on one miss both infer, which costs one job. */
-  private[graft] def readParquet(s: SparkSession, path: String): DataFrame = {
-    val key = schemaKey(s, path)
-    key.flatMap(k => schemas.synchronized(Option(schemas.get(k)))) match {
-      case Some(schema) => s.read.schema(schema).parquet(path)
-      case None =>
-        val df = s.read.parquet(path)
-        key.foreach(k => schemas.synchronized(schemas.put(k, df.schema)))
-        df
+    * Thread-safe: the store's concurrent blocks read in parallel, and
+    * the first readers of one key share one cell ([[Memo]]), so they
+    * infer once; the reader that inferred keeps its own frame. */
+  private[graft] def readParquet(s: SparkSession, path: String): DataFrame =
+    schemaKey(s, path) match {
+      case None => s.read.parquet(path)
+      case Some(k) =>
+        var inferred: Option[DataFrame] = None
+        val schema = schemas(k) {
+          val df = s.read.parquet(path)
+          inferred = Some(df)
+          df.schema
+        }
+        inferred.getOrElse(s.read.schema(schema).parquet(path))
     }
-  }
 
   private def schemaKey(s: SparkSession, path: String): Option[String] =
     scala.util.Try {
@@ -213,8 +215,7 @@ object Core {
     s"$tmp/$stem$myPid$suffix"
   }
 
-  private val rowCounts =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
+  private val rowCounts = new Memo[(String, String), Long]
 
   /** Once-per-JVM row count of a driver table — the 1-row metadata job
     * the SIZE GATES key on (sorted-neighborhood channel, q100 rank
@@ -224,47 +225,57 @@ object Core {
     * testdata is immutable within a JVM's lifetime, so (dir, name)
     * keying without a session is safe. */
   def tableRows(s: SparkSession, dir: String, name: String): Long =
-    rowCounts.synchronized {
-      rowCounts.getOrElseUpdate((dir, name), table(s, dir, name).count())
+    rowCounts((dir, name))(table(s, dir, name).count())
+
+  /** A build-once value per key: the program's one memo. Each key has
+    * its own cell. Two callers of one key serialize on its cell (one
+    * build per key), but callers of DIFFERENT keys never contend: the
+    * map's lock is held only to find a key's cell, never across a
+    * build. A global build lock would let Dedup's clusterLabels memo
+    * (a build that RUNS Spark jobs — a full CC iteration) block every
+    * unrelated memo miss in the bench's concurrent warm groups for the
+    * whole run. A build may call the memo for another key. A build
+    * that throws records nothing, so the next caller builds again.
+    * Past `maxKeys` keys the least recently used one is dropped, and
+    * its next caller builds again. */
+  private[graft] final class Memo[K, V](maxKeys: Int = Int.MaxValue) {
+    private final class Cell { @volatile var built: Option[V] = None }
+
+    private val cells = new java.util.LinkedHashMap[K, Cell](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, Cell]): Boolean =
+        size > maxKeys
     }
 
-  /** One build-once slot with PER-KEY synchronization, the program's
-    * only one: two callers of the same key serialize on the cell (one
-    * build per key), but callers of DIFFERENT keys never contend — the
-    * pre-r17 global build lock let Dedup's clusterLabels memo (the one
-    * build that RUNS Spark jobs — a full CC iteration — while building)
-    * block every unrelated memo miss in the bench's concurrent warm
-    * groups for the whole run (ADVICE r16). A build that throws records
-    * nothing, so the next caller builds again. [[builtOpt]] exposes the
-    * value only if the build completed, so a release never forces an
-    * unbuilt slot. */
-  private final class MemoCell[T] {
-    @volatile private var built: Option[T] = None
-    /** The built value; the caller that finds none runs its `build`. */
-    def value(build: => T): T = {
-      if (built.isEmpty) synchronized {
-        if (built.isEmpty) built = Some(build)
+    /** The value of `key`; the caller that finds none runs `build`. */
+    def apply(key: K)(build: => V): V = {
+      val c = cells.synchronized(cells.computeIfAbsent(key, _ => new Cell))
+      if (c.built.isEmpty) c.synchronized {
+        if (c.built.isEmpty) c.built = Some(build)
       }
-      built.get
+      c.built.get
     }
-    def builtOpt: Option[T] = built
+
+    def keys: List[K] = cells.synchronized(cells.keySet.asScala.toList)
+
+    /** Forget `key`: its value if a build completed, so a release
+      * never forces an unbuilt cell. */
+    def remove(key: K): Option[V] =
+      cells.synchronized(Option(cells.remove(key))).flatMap(_.built)
   }
 
-  private val memos =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), MemoCell[DataFrame]]
+  private val memos = new Memo[(SparkSession, String), DataFrame]
 
   /** Build-once cached DataFrame shared across catalog queries within a
     * session (e.g. the LSH band keys five dedup queries reuse, or the
     * normalized embeddings three ANN queries reuse). One `.cache()` per
     * key per session — no "already cached" re-cache churn — and every
     * registration is released together via [[clearCaches]]. Build
-    * synchronization is PER KEY (see [[MemoCell]]): a losing
-    * getOrElseUpdate race only ever constructs a spare empty cell. */
+    * synchronization is PER KEY (see [[Memo]]). */
   def memo(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     // drop entries of stopped sessions so a long-lived JVM (sbt test,
     // repeated runMains) doesn't pin dead sessions and their plans
     memos.keys.filter(_._1.sparkContext.isStopped).foreach(memos.remove)
-    memos.getOrElseUpdate((s, key), new MemoCell[DataFrame]).value(build.cache())
+    memos((s, key))(build.cache())
   }
 
   /** Time one warm-phase memo build — Bench folds these into its
@@ -280,8 +291,7 @@ object Core {
     * long session doesn't accumulate executor storage. */
   def clearCaches(s: SparkSession): Unit =
     memos.keys.filter(_._1 eq s).foreach { k =>
-      memos.remove(k).flatMap(_.builtOpt)
-        .foreach(_.unpersist(blocking = false))
+      memos.remove(k).foreach(_.unpersist(blocking = false))
     }
 
   /** Per-JVM store fixtures: the root of a store that a build wrote
@@ -290,7 +300,7 @@ object Core {
     * route, not the ingest. The program's one instance is behind
     * [[storeFixture]] and [[resetStoreFixtures]].
     *
-    * Each key `(prefix, dir, suffix)` has its own [[MemoCell]]:
+    * Each key `(prefix, dir, suffix)` has its own cell of a [[Memo]]:
     * concurrent callers of one key run one build and get one root, and
     * no build holds a lock that another key's build needs — Bench's
     * concurrent warm groups build side by side, and a build may call
@@ -298,11 +308,10 @@ object Core {
     * deadlock. A build that throws records nothing, and the next call
     * builds again from an empty root at the same path. */
   private[graft] final class StoreFixtures {
-    private val cells =
-      scala.collection.concurrent.TrieMap.empty[(String, String, String), MemoCell[String]]
+    private val roots = new Memo[(String, String, String), String]
 
     def apply(prefix: String, dir: String, suffix: String)(build: String => Unit): String =
-      cells.getOrElseUpdate((prefix, dir, suffix), new MemoCell[String]).value {
+      roots((prefix, dir, suffix)) {
         val root = jvmStorePath(prefix, dir, suffix)
         // what a failed build (or a dead process with this pid) left
         // there: a build onto it would append to its timeline
@@ -317,9 +326,8 @@ object Core {
       * timeline. Call it only while no build runs and nothing reads
       * the old roots again. */
     def reset(): Unit =
-      cells.keys.foreach { k =>
-        cells.remove(k).flatMap(_.builtOpt)
-          .foreach(p => graft.ops.IndexStore.deleteRec(new java.io.File(p)))
+      roots.keys.foreach { k =>
+        roots.remove(k).foreach(p => graft.ops.IndexStore.deleteRec(new java.io.File(p)))
       }
   }
 

@@ -96,15 +96,7 @@ object ScaleProbe {
       println(f"PROBE compute_sentinel_$tag%-12s $sec%8.2f s")
       sec
     }
-    val anchorStart = {
-      var prev = computeSentinel("start1")
-      var shot = 2
-      var cur = computeSentinel("start2")
-      while (shot < 4 && math.abs(cur - prev) / math.max(cur, prev) > 0.1) {
-        shot += 1; prev = cur; cur = computeSentinel(s"start$shot")
-      }
-      cur
-    }
+    val anchorStart = Bench.stabilized(4)(i => computeSentinel(s"start$i")).last
 
     // SCAN-BOUND sentinel (round 14): the compute anchor is blind to
     // IO/steal bursts on scan-bound lines — the first r14 session read
@@ -131,15 +123,7 @@ object ScaleProbe {
       println(f"PROBE scan_sentinel_$tag%-15s $sec%8.2f s")
       sec
     }
-    val scanStart = {
-      var prev = scanSentinel("start1")
-      var shot = 2
-      var cur = scanSentinel("start2")
-      while (shot < 4 && math.abs(cur - prev) / math.max(cur, prev) > 0.1) {
-        shot += 1; prev = cur; cur = scanSentinel(s"start$shot")
-      }
-      cur
-    }
+    val scanStart = Bench.stabilized(4)(i => scanSentinel(s"start$i")).last
 
     // ---- ANCHORED-WINDOW discipline (VERDICT r12 next #1: the bench
     // regime split, ported to the probe). Round 12's four steady-state

@@ -221,27 +221,23 @@ object Dedup {
     * write-side variant of [[clusterLabels]] (which is dir-keyed and
     * session-memoized): same band rows, same pair self-join, same
     * star-contraction CC. */
-  private[ops] def clusterLabelsFor(s: SparkSession, docs: DataFrame): DataFrame = {
-    import s.implicits._
-    val b = toBandRowsPublic(s, docs)
-    val pairs = b.as("a").join(b.as("b"),
-        $"a.band" === $"b.band" && $"a.band_key" === $"b.band_key" &&
-          $"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"))
+  private[ops] def clusterLabelsFor(s: SparkSession, docs: DataFrame): DataFrame =
+    connectedComponents(docs.select(col("doc_id")), bandPairs(toBandRowsPublic(s, docs)))
+
+  /** Candidate near-dup pairs (id_a < id_b) of band rows (doc_id,
+    * band, band_key): the docs sharing ≥1 LSH band bucket. The one
+    * band self-join of the batch queries, the store reports and the
+    * store's cluster merge. */
+  private[ops] def bandPairs(bands: DataFrame): DataFrame =
+    bands.as("a").join(bands.as("b"),
+        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    connectedComponents(docs.select($"doc_id"), pairs)
-  }
 
   /** Candidate near-dup pairs: docs sharing ≥1 LSH band bucket. */
-  private[graft] def lshPairs(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val b = bandKeys(s, dir)
-    b.as("a").join(b.as("b"),
-        $"a.band" === $"b.band" && $"a.band_key" === $"b.band_key" &&
-          $"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"))
-      .distinct()
-  }
+  private[graft] def lshPairs(s: SparkSession, dir: String): DataFrame =
+    bandPairs(bandKeys(s, dir))
 
   /** PRODUCTION band keys: identical shingling, permutation family and
     * banding to [[bandKeys]], but the per-shingle base hash is
@@ -263,15 +259,8 @@ object Dedup {
 
   /** Candidate pairs over the xxhash64 production path — same contract
     * as [[lshPairs]]. */
-  def lshPairsFast(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val b = bandKeysFast(s, dir)
-    b.as("a").join(b.as("b"),
-        $"a.band" === $"b.band" && $"a.band_key" === $"b.band_key" &&
-          $"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"))
-      .distinct()
-  }
+  def lshPairsFast(s: SparkSession, dir: String): DataFrame =
+    bandPairs(bandKeysFast(s, dir))
 
   /** Connected components over the near-dup pair graph by alternating
     * large-star/small-star edge contraction (Kiveris et al.,

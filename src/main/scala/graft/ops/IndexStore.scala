@@ -46,8 +46,8 @@ import graft.Core._
   * [[withCheckpoint]] is the one owner of executor-side checkpoints:
   * it takes each checkpoint and releases it on every exit, refusals
   * included ([[withPrintable]] builds the media fingerprints through
-  * it). Only [[screenAndFoldFrom]], which returns its checkpoint, and
-  * [[appendUnifiedGated]]'s CAS handshake release their own.
+  * it). Only [[screenAndFoldFrom]], which returns its checkpoint to
+  * its caller, releases its own.
   *
   * == Snapshot layout (format_version 1) ==
   *
@@ -121,10 +121,11 @@ object IndexStore {
     * atomicity test drives. Never set outside tests.
     *
     * NOTE (ADVICE r16): since the staging writes run concurrently
-    * (stageConcurrently), this fires on a staging-pool thread and the
-    * siblings are interrupted mid-write — so WHICH sibling channels'
-    * staging files exist after an injected crash is nondeterministic,
-    * run to run. Crash tests must pin only commit-visible state (the
+    * ([[runBlocks]]), this fires on a pool thread while the sibling
+    * blocks are mid-write: the earlier-declared ones finish and the
+    * later-declared ones are interrupted at an arbitrary point, so
+    * WHICH staging files exist after an injected crash varies run to
+    * run. Crash tests must pin only commit-visible state (the
     * pointer never flips, the retry lands); leak accounting keys on
     * committed snapshots + vacuum, never on aborted staging-dir
     * contents. */
@@ -133,151 +134,92 @@ object IndexStore {
     if (crashAfterChannel.contains(ch))
       throw new RuntimeException(s"injected crash after channel $ch")
 
-  /** Stage INDEPENDENT channel writes of one snapshot concurrently
-    * (VERDICT r13 next #4): the unified fold's latency is commit
-    * fan-out — dozens of small sequential parquet jobs per pair-atomic
-    * snapshot, each paying scheduler latency, not CPU (SCALE.md
-    * attributes the 100× q153 band to exactly this) — so the
-    * independent families overlap on the scheduler. Every block writes
-    * its own staging subdirectory; the commit point (manifest +
-    * pointer rename) stays single and last, OUTSIDE this helper.
+  /** Run INDEPENDENT blocks concurrently and return their results in
+    * declaration order: the store's one pool runner. The channel
+    * writes of one snapshot ([[stageConcurrently]]) and the read-only
+    * pre-staging probes (emptiness checks, append guards, orphan
+    * counts, gate-verdict reads) both run through it. Each block is a
+    * small Spark job that pays mostly scheduler latency, so the blocks
+    * overlap on the scheduler. They run on a DEDICATED daemon pool
+    * sized to the block count, never ExecutionContext.global, whose
+    * shared pool the bench's concurrent warm bootstraps already occupy.
     *
-    * Execution (ADVICE r14): a DEDICATED daemon pool sized to the
-    * block fan-out — never ExecutionContext.global, whose shared pool
-    * the bench's two concurrent warm bootstraps already occupy: 10–14
-    * blocking parquet jobs without `blocking{}` wrappers would
-    * saturate it on low-core hosts and silently serialize the overlap
-    * this helper exists to buy.
-    *
-    * Failure discipline (ADVICE r14): FAIL FAST — the first failure to
-    * COMPLETE aborts the fold; the remaining blocks are interrupted
-    * (their staging output is inert garbage either way — never
-    * committed, reclaimed by vacuum) and drained with a bounded grace
-    * so a wedged writer can no longer hang the fold forever, then the
-    * observed failure is rethrown as-is (crash-injection semantics:
-    * the injected exception type reaches the caller unchanged). The
-    * deterministic refusals all fire before staging starts (the
-    * hoisted cheap-refusal discipline), so first-to-complete
-    * precedence here only ever races genuine I/O faults.
-    *
-    * Compaction and [[cloneStoreAt]] stage through it too: their
-    * channel rewrites and copies are independent blocks of one
-    * snapshot ([[rewriteChannelsInto]]).
-    *
-    * Returns the union of the blocks' staged channel entries. */
-  private def stageConcurrently(
-      blocks: (() => Map[String, Channel])*): Map[String, Channel] =
-    stageBlocks(blocks, interrupt = true)
-
-  /** [[stageConcurrently]]; with `interrupt = false` a failure (or an
-    * interrupt of the caller) lets the blocks still running finish
-    * instead of interrupting them. For blocks that read frames the
-    * caller cached: an interrupted query can leave an adaptive query
-    * stage running that rebuilds the cache after the caller released
-    * it, stranding its blocks. */
-  private def stageBlocks(blocks: Seq[() => Map[String, Channel]],
-      interrupt: Boolean): Map[String, Channel] = {
+    * The one failure rule: when block `i` fails, the blocks declared
+    * before `i` run to completion and the blocks declared after `i`
+    * are interrupted. With `interrupt = false` they finish instead;
+    * that is for blocks that read frames the caller cached, because an
+    * interrupted query can leave an adaptive query stage running that
+    * rebuilds the cache after the caller released it. The call returns
+    * only after every block has stopped ([[awaitStopped]]), so a
+    * block's own releases have run before the caller unwinds, and it
+    * throws the earliest-declared failure unchanged. Which failure the
+    * caller sees therefore never depends on thread timing: refusal
+    * precedence is the declaration order, and an injected crash
+    * reaches the caller with its own type. A caller interrupted while
+    * it waits (it is itself a block of a failing outer run) stops its
+    * blocks the same way before it rethrows. */
+  private[graft] def runBlocks[A](blocks: Seq[() => A],
+      interrupt: Boolean = true): Seq[A] = {
     import java.util.concurrent._
-    val pool = daemonPool(blocks.size, "graft-stage")
-    try {
-      val ecs = new ExecutorCompletionService[Map[String, Channel]](pool)
-      val futs = blocks.map(b => ecs.submit(
-        new Callable[Map[String, Channel]] { def call() = b() }))
-      try for (_ <- blocks) ecs.take().get()
-      catch { case e @ (_: ExecutionException | _: InterruptedException) =>
-        // a failed block, or this thread interrupted because it is
-        // itself a block of a failing outer staging (a family that
-        // stages its channels concurrently): stop every block and wait
-        // for them, so their releases (checkpoints, cached frames)
-        // finish before the caller unwinds
-        if (interrupt) { futs.foreach(_.cancel(true)); pool.shutdownNow() }
-        else pool.shutdown()
-        val cause = e match { case x: ExecutionException => x.getCause; case x => x }
-        // a straggler's output is uncommitted staging garbage: nothing
-        // references the staging dir
-        awaitStopped(pool, "stageConcurrently", "a staging writer did " +
-          "not stop within 120 s and may still be writing into the " +
-          "uncommitted staging dir", cause)
-        throw cause
-      }
-      futs.map(_.get()).reduce(_ ++ _)
-    } finally pool.shutdown()
-  }
-
-  /** Run INDEPENDENT read-only pre-staging probes (emptiness checks,
-    * append guards, orphan counts, gate-verdict reads) concurrently,
-    * then deliver results — and any refusal — in DECLARATION order:
-    * the first block to fail in declaration order wins even if a
-    * later block failed first on the clock, so refusal precedence
-    * stays deterministic (the ADVICE r15 hoisting lesson applied to
-    * concurrency instead of giving the latency win up). Probes must
-    * not stage anything: a sibling's wasted work under a refusal is
-    * bounded by the probes themselves, and the store is untouched
-    * either way. Each probe is a separate small Spark job that pays
-    * mostly scheduler latency (guide §2.6 — the same measured shape
-    * as the channel writes stageConcurrently overlaps).
-    *
-    * Resource contract (ADVICE r16): a sibling's failure interrupts
-    * the other probes at ARBITRARY points (shutdownNow), and a probe's
-    * write to an outer var has NO happens-before edge with the caller
-    * when a DIFFERENT probe's get() is what threw — so a probe that
-    * must allocate a releasable resource (the gated fold's census
-    * localCheckpoint is the one sanctioned case) may not hand it out
-    * through a plain var. It must publish through an AtomicReference
-    * CAS BEFORE any materialization job, release it itself when the
-    * CAS loses, and the owner's finally must getAndSet a tombstone —
-    * the appendUnifiedGated pattern. Plain result delivery (outer var
-    * written by the probe, read by the caller after a SUCCESSFUL
-    * probeConcurrently) stays safe: each f.get() is the edge.
-    *
-    * A refusal reaches the caller only after every sibling probe has
-    * stopped ([[awaitStopped]], as [[stageConcurrently]] waits), so an
-    * interrupted probe's own release has run by the time the caller
-    * unwinds. */
-  private def probeConcurrently[A](blocks: (() => A)*): Seq[A] = {
-    import java.util.concurrent._
-    if (blocks.sizeIs <= 1) blocks.map(_()).toSeq
+    if (blocks.sizeIs <= 1) blocks.map(_())
     else {
-      val pool = daemonPool(blocks.size, "graft-probe")
+      val tasks = new Array[FutureTask[A]](blocks.size)
+      for (i <- blocks.indices)
+        tasks(i) = new FutureTask[A](new Callable[A] { def call(): A = blocks(i)() }) {
+          override def setException(t: Throwable): Unit = {
+            super.setException(t)
+            if (interrupt) tasks.drop(i + 1).foreach(_.cancel(true))
+          }
+        }
+      val pool = daemonPool(blocks.size)
       try {
-        val futs = blocks.map(b =>
-          pool.submit(new Callable[A] { def call(): A = b() }))
-        try futs.map(f =>
-          try f.get()
-          catch { case e: ExecutionException => throw e.getCause }).toSeq
-        catch { case e: Throwable =>
-          pool.shutdownNow()
-          // probes are read-only: a straggler leaves the store untouched
-          awaitStopped(pool, "probeConcurrently", "a probe did not stop " +
-            "within 120 s and may still be running", e)
-          throw e
+        tasks.foreach(pool.execute)
+        try tasks.toSeq.map(_.get())
+        catch { case e @ (_: ExecutionException | _: InterruptedException) =>
+          if (interrupt) tasks.foreach(_.cancel(true))
+          pool.shutdown()
+          val cause = e match { case x: ExecutionException => x.getCause; case x => x }
+          // a straggler's output is uncommitted staging garbage (nothing
+          // references the staging dir), and a probe writes nothing
+          awaitStopped(pool, cause)
+          throw cause
         }
       } finally pool.shutdown()
     }
   }
+
+  /** [[runBlocks]] over the channel writes of one snapshot: every block
+    * writes its own staging subdirectory and returns its channel
+    * entries, and the union is the snapshot's staged channels. The
+    * commit point (manifest + pointer rename) stays single and last,
+    * outside: the unified fold's latency is commit fan-out, dozens of
+    * small parquet jobs that would otherwise run one after another.
+    * Compaction and
+    * [[cloneStoreAt]] stage through it too ([[rewriteChannelsInto]]). */
+  private def stageConcurrently(
+      blocks: (() => Map[String, Channel])*): Map[String, Channel] =
+    runBlocks(blocks).reduce(_ ++ _)
 
   /** Wait for the blocks of a failing `pool` to stop, so their
     * releases (checkpoints, cached frames) finish before the caller
     * unwinds. The grace is bounded: Spark actions abort on interrupt
     * within seconds, and a block that ignores even 120 s no longer
     * wedges the caller. A straggler that outlives the grace is
-    * SURFACED on stderr as `[graft] <who>: <what>` (ADVICE r15): an
-    * operator diagnosing the original fault should see the wedge, not
-    * infer it. */
+    * SURFACED on stderr: an operator diagnosing the original fault
+    * should see the wedge, not infer it. */
   private def awaitStopped(pool: java.util.concurrent.ExecutorService,
-      who: String, what: String, cause: Throwable): Unit =
+      cause: Throwable): Unit =
     if (!uninterruptibly(pool.awaitTermination(120,
         java.util.concurrent.TimeUnit.SECONDS)))
-      System.err.println(s"[graft] $who: $what; propagating the " +
-        s"original failure anyway: $cause")
+      System.err.println("[graft] runBlocks: a block did not stop within " +
+        s"120 s and may still be running; propagating the original failure anyway: $cause")
 
-  /** A fixed pool of `n` daemon threads named `<name>-<i>`: the
-    * dedicated pool [[stageConcurrently]] and [[probeConcurrently]]
-    * each run their blocks on. */
-  private def daemonPool(n: Int, name: String) = {
+  /** A fixed pool of `n` daemon threads named `graft-block-<i>`, the
+    * dedicated pool of one [[runBlocks]] call. */
+  private def daemonPool(n: Int) = {
     val seq = new java.util.concurrent.atomic.AtomicInteger()
     java.util.concurrent.Executors.newFixedThreadPool(n, (r: Runnable) => {
-      val t = new Thread(r, s"$name-${seq.incrementAndGet()}")
+      val t = new Thread(r, s"graft-block-${seq.incrementAndGet()}")
       t.setDaemon(true); t
     })
   }
@@ -956,15 +898,8 @@ object IndexStore {
     * re-shingling and re-minhashing the whole corpus. This is the
     * operational input for the pair-consuming reports below: index
     * once per snapshot, report from the artifacts. */
-  def pairsFromStore(s: SparkSession, indexDir: String): DataFrame = {
-    import s.implicits._
-    val b = channel(s, indexDir, "band_keys")
-    b.as("a").join(b.as("b"),
-        $"a.band" === $"b.band" && $"a.band_key" === $"b.band_key" &&
-          $"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"))
-      .distinct()
-  }
+  def pairsFromStore(s: SparkSession, indexDir: String): DataFrame =
+    Dedup.bandPairs(channel(s, indexDir, "band_keys"))
 
   /** Persist the corpus's near-dup cluster labels next to the index
     * artifacts — one CC contraction at snapshot-build time. This is
@@ -1027,10 +962,7 @@ object IndexStore {
         Seq("band", "band_key"))
       .join(storedLabels.select($"doc_id".as("cid"), $"cluster_id"), Seq("cid"))
       .select($"doc_id".as("id_a"), $"cluster_id".as("id_b")).distinct()
-    val bb = batchBands.as("a").join(batchBands.as("b"),
-        $"a.band" === $"b.band" && $"a.band_key" === $"b.band_key" &&
-          $"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b")).distinct()
+    val bb = Dedup.bandPairs(batchBands)
     val nodes = batch.select($"doc_id")
       .unionByName(storedLabels.select($"cluster_id".as("doc_id")).distinct())
     (Dedup.connectedComponents(nodes, crossE.unionByName(bb)), storedLabels)
@@ -1128,11 +1060,11 @@ object IndexStore {
     // is a no-op (re-folding would duplicate fingerprint/band rows and
     // inflate the bloom's estItems), partial overlap means the caller
     // skipped screenBatch and is refused.
-    probeConcurrently[Option[Long]](
+    runBlocks[Option[Long]](Seq(
       () => { if (prior.contains("mix_census"))
         censusFormatGuard(s, indexDir, prior, "append"); None },
       () => appendGuard("append", batch, "doc_id",
-        channelFrom(s, indexDir, prior, "fingerprints")))(1).foreach { batchN =>
+        channelFrom(s, indexDir, prior, "fingerprints"))))(1).foreach { batchN =>
       // the label DELTA is computed EAGERLY (checkpointed) before the
       // new snapshot stages: the merge must see the pre-append band
       // index. O(batch-driven changes) rows — the fold's write cost
@@ -1187,8 +1119,11 @@ object IndexStore {
     * does.
     * `adopt` lends a frame its producer already checkpointed (CC
     * labels, a trained model) and only takes over its release.
-    * [[screenAndFoldFrom]] (which returns its checkpoint) and
-    * [[appendUnifiedGated]] (the CAS handshake) keep their own. */
+    * This is the one owner of every checkpoint the store takes; only
+    * [[screenAndFoldFrom]] keeps its own, because it hands its
+    * checkpoint to its caller. A checkpoint that concurrent blocks
+    * read is taken here around the [[runBlocks]] call, which returns
+    * only after every block has stopped, so no block outlives it. */
   private def withCheckpoint[T](frame: DataFrame, eager: Boolean = true,
       adopt: Boolean = false)(body: DataFrame => T): T = {
     val c = if (adopt) frame else frame.localCheckpoint(eager = false)
@@ -1199,9 +1134,9 @@ object IndexStore {
   }
 
   /** [[withCheckpoint]] over an optional frame: None lends None. */
-  private def withCheckpointOpt[T](frame: Option[DataFrame])(
+  private def withCheckpointOpt[T](frame: Option[DataFrame], eager: Boolean = true)(
       body: Option[DataFrame] => T): T =
-    frame.fold(body(None))(withCheckpoint(_)(c => body(Some(c))))
+    frame.fold(body(None))(withCheckpoint(_, eager)(c => body(Some(c))))
 
   /** A media batch's byte-shingle fingerprints ([[Dedup.simhash60Bytes]]),
     * checkpointed once for every guard and staging step of the
@@ -1402,7 +1337,7 @@ object IndexStore {
       anchor: String, maxPsi: Double, orderGate: Boolean,
       maxOrderPsi: Double): (Seq[String], DataFrame) = {
     import s.implicits._
-    val v = probeConcurrently[Any](
+    val v = runBlocks[Any](Seq(
       () => driftVsAnchor(s, root, prior, bins(), anchor)
         .select(col("source"), col("n_docs"), col("psi_nchars"),
           col("psi_ntokens"), col("psi_nonalpha"), col("psi_tokhash"),
@@ -1418,7 +1353,7 @@ object IndexStore {
         .as[(String, Long, Double)].collect()
         .map { case (src, nToks, psi) => src ->
           (psi, nToks >= Selection.MinTokhashEvidence && psi > maxOrderPsi) }
-        .toMap)
+        .toMap))
     val rep = v(0).asInstanceOf[Seq[GateRow]]
     val ord = v(1).asInstanceOf[Map[String, (Double, Boolean)]]
     // the report: `psi_order` and the order verdict folded into `held`
@@ -1863,7 +1798,7 @@ object IndexStore {
       // discipline). The commit stays with the caller, after both.
       // Neither is interrupted when the other fails: both read the
       // cached frames released below.
-      stageBlocks(Seq(
+      runBlocks(Seq(
         () => {
           postings.join(docLens, Seq("doc_id"))
             .repartitionByRange(col("term"), col("doc_id"))
@@ -1890,7 +1825,7 @@ object IndexStore {
           staged(root, snap, "doc_lens") ++ stageRow(root, snap, "stats",
             Seq((pn + b.getLong(0), psd + (if (b.isNullAt(1)) 0L else b.getLong(1))))
               .toDF("n_docs", "sum_dl"))
-        }), interrupt = false)
+        }), interrupt = false).reduce(_ ++ _)
     } finally {
       // BLOCKING unpersist: the async default returns while tens of GB
       // of cached posting blocks still drain, and that churn taxed the
@@ -1898,7 +1833,7 @@ object IndexStore {
       // calls after a store write until cleanup settled. Synchronous
       // release charges the cleanup to the write, where it belongs.
       // A staging thread interrupted by a failing sibling (see
-      // [[stageConcurrently]]) must release too ([[uninterruptibly]]).
+      // [[runBlocks]]) must release too ([[uninterruptibly]]).
       uninterruptibly(postings.unpersist(blocking = true))
       uninterruptibly(docLens.unpersist(blocking = true))
       ()
@@ -2962,8 +2897,8 @@ object IndexStore {
       preTok: Option[DataFrame] = None,
       preCensus: Option[DataFrame] = None): Unit = {
     // the two emptiness probes are independent small jobs — overlap
-    // them (probeConcurrently keeps any failure in declaration order)
-    val Seq(dEmpty, vEmpty) = probeConcurrently(() => docs.isEmpty, () => vectors.isEmpty)
+    // them (runBlocks keeps any failure in declaration order)
+    val Seq(dEmpty, vEmpty) = runBlocks(Seq(() => docs.isEmpty, () => vectors.isEmpty))
     // generational guard FIRST — a governed docs-carrying fold onto an
     // old-format census must refuse before ANY channel delta is staged
     // (zero wasted ingest work, no orphaned staging dir)
@@ -2982,8 +2917,8 @@ object IndexStore {
       // the three families' replay guards are independent read-only
       // probes (each 2–3 small jobs); overlap them — refusal precedence
       // stays the sequential order (media, text, vectors) by
-      // probeConcurrently's declaration-order delivery
-      val Seq(mediaGo, textGo, vecGo) = probeConcurrently[Option[Long]](
+      // runBlocks' declaration-order delivery
+      val Seq(mediaGo, textGo, vecGo) = runBlocks[Option[Long]](Seq(
         () => mediaPrintable.flatMap(pr =>
           appendGuard("appendUnified(media)", pr, "doc_id",
             channelFrom(s, root, prior, "media_sim_blocks"),
@@ -2991,7 +2926,7 @@ object IndexStore {
         () => if (dEmpty) None else appendGuard("appendUnified(text)",
           docs, "doc_id", channelFrom(s, root, prior, "doc_lens")),
         () => if (vEmpty) None else appendGuard("appendUnified(vectors)",
-          vectors, "vec_id", channelFrom(s, root, prior, "cells")))
+          vectors, "vec_id", channelFrom(s, root, prior, "cells"))))
       // (both requires below hold vacuously for an all-empty pair)
       require(dEmpty || vEmpty || textGo.isDefined == vecGo.isDefined,
         "appendUnified: one family of the pair is an exact replay and the " +
@@ -3124,7 +3059,7 @@ object IndexStore {
         "hold against; bootstrap with writeUnified(..., governed = true)")
     // the two orphan gates and the gate verdict (census explode, PSI
     // read, order screen) are independent read-only probes — they
-    // overlap on the scheduler (probeConcurrently), with refusal
+    // overlap on the scheduler ([[runBlocks]]), with refusal
     // precedence pinned to this declaration order: vector orphans,
     // payload orphans, census.
     // ONE census explode for the whole gated fold (VERDICT r14 next
@@ -3136,76 +3071,48 @@ object IndexStore {
     // consumes bins-minus-held, which equals censusBins(admitted)
     // bit-identically because bins are per-source additive and holds
     // are whole-source (the unified fold does not screen).
-    // Ownership handshake for the census checkpoint (ADVICE r16): the
-    // probe below allocates it while a SIBLING refusal can interrupt
-    // the probe at any point, and a plain var has no happens-before
-    // edge with this thread's finally when a DIFFERENT probe fails —
-    // the old code could observe null and strand the blocks for the
-    // session. The probe publishes the checkpoint LAZILY (before any
-    // materialization job) via CAS; the finally getAndSet's a tombstone
-    // — whichever side loses the race sees the other's write and
-    // releases, so no interleaving of refusal, interrupt and
-    // materialization leaks: CAS-then-tombstone means exactly one side
-    // observes (published, not-yet-tombstoned) and releases.
-    val binsTomb = s.emptyDataFrame
-    val binsRef = new java.util.concurrent.atomic.AtomicReference[DataFrame]()
-    var verdict: (Seq[String], DataFrame) = null
-    try {
-    probeConcurrently[Unit](
-      () => if (!vEmptyCaller) orphanGate(s, root, prior, docs, vectors,
-        "vec_id", "vector", "vectors", "the one-sided vectors"),
-      () => payloads.filter(!_.isEmpty).foreach(orphanGate(s, root, prior,
-        docs, _, "doc_id", "payload", "media", "the media-only")),
-      () => verdict = gateVerdict(s, root, prior, docs, () => {
-        val bins = censusRequired("appendUnifiedGated", docs)
-          .localCheckpoint(eager = false)
-        if (!binsRef.compareAndSet(null, bins)) {
-          // the owner already unwound (a sibling refused and the finally
-          // tombstoned before we published): nothing is materialized yet
-          // — drop the marker and stop; this probe's result is dead
-          releaseCheckpoint(bins)
-          throw new java.util.concurrent.CancellationException(
-            "appendUnifiedGated: the fold unwound before its census published")
+    // The checkpoint is taken lazily before the probes and released on
+    // every exit by withCheckpoint; the PSI collect is the first action
+    // over it, so it materializes inside that job. A batch without the
+    // governance columns refuses in the census probe's slot.
+    withCheckpointOpt(censusOf(docs), eager = false) { bins =>
+      val (heldSrcs, report) = runBlocks[Option[(Seq[String], DataFrame)]](Seq(
+        () => { if (!vEmptyCaller) orphanGate(s, root, prior, docs, vectors,
+          "vec_id", "vector", "vectors", "the one-sided vectors"); None },
+        () => { payloads.filter(!_.isEmpty).foreach(orphanGate(s, root, prior,
+          docs, _, "doc_id", "payload", "media", "the media-only")); None },
+        () => Some(gateVerdict(s, root, prior, docs,
+          () => bins.getOrElse(censusRequired("appendUnifiedGated", docs)),
+          anchor, maxPsi, orderGate, maxOrderPsi)))).flatten.head
+      val batchBins = bins.get
+      val (admittedDocs, admittedVecs, admittedRaw, admittedPayloads) =
+        if (heldSrcs.isEmpty) (docs, vectors, raw, payloads)
+        else {
+          val heldDocIds = docs.filter(col("source").isin(heldSrcs: _*))
+            .select(col("doc_id"))
+          val heldIds = heldDocIds.select(col("doc_id").as("vec_id"))
+          // held vectors leave the proj deltas too — and held payloads
+          // leave the media family (the q157 discipline: a held source's
+          // rows land in NO channel of the commit)
+          (docs.filter(!col("source").isin(heldSrcs: _*)),
+            vectors.join(heldIds, Seq("vec_id"), "left_anti"),
+            raw.map(_.join(heldIds, Seq("vec_id"), "left_anti")),
+            payloads.map(_.join(heldDocIds, Seq("doc_id"), "left_anti")))
         }
-        // the PSI collect is the first action over `bins`, so it
-        // materializes the checkpoint inside its own job
-        bins
-      }, anchor, maxPsi, orderGate, maxOrderPsi))
-    // all probes succeeded, so the publish CAS won: the reference is
-    // the live checkpoint (materialized by the PSI collect above)
-    val batchBins = binsRef.get()
-    val (heldSrcs, report) = verdict
-    val (admittedDocs, admittedVecs, admittedRaw, admittedPayloads) =
-      if (heldSrcs.isEmpty) (docs, vectors, raw, payloads)
-      else {
-        val heldDocIds = docs.filter(col("source").isin(heldSrcs: _*))
-          .select(col("doc_id"))
-        val heldIds = heldDocIds.select(col("doc_id").as("vec_id"))
-        // held vectors leave the proj deltas too — and held payloads
-        // leave the media family (the q157 discipline: a held source's
-        // rows land in NO channel of the commit)
-        (docs.filter(!col("source").isin(heldSrcs: _*)),
-          vectors.join(heldIds, Seq("vec_id"), "left_anti"),
-          raw.map(_.join(heldIds, Seq("vec_id"), "left_anti")),
-          payloads.map(_.join(heldDocIds, Seq("doc_id"), "left_anti")))
-      }
-    val censusDelta =
-      if (heldSrcs.isEmpty) batchBins
-      else batchBins.filter(!col("source").isin(heldSrcs: _*))
-    // a hold that empties the vector side empties its raw pairing with
-    // it — appendUnifiedFrom's vectors-less-raw refusal is for CALLER
-    // mispairing, not for the breaker's own anti-join (an emptied
-    // payloads frame needs no such collapse: media is per-fold
-    // optional, and an empty frame fingerprints to nothing)
-    val rawEff =
-      if (admittedRaw.isDefined && admittedVecs.isEmpty) None
-      else admittedRaw
-    appendUnifiedFrom(s, root, base, prior, admittedDocs, admittedVecs,
-      rawEff, admittedPayloads, preTok, preCensus = Some(censusDelta))
-    report
-    } finally {
-      val bins = binsRef.getAndSet(binsTomb)
-      if (bins != null) releaseCheckpoint(bins)
+      val censusDelta =
+        if (heldSrcs.isEmpty) batchBins
+        else batchBins.filter(!col("source").isin(heldSrcs: _*))
+      // a hold that empties the vector side empties its raw pairing with
+      // it — appendUnifiedFrom's vectors-less-raw refusal is for CALLER
+      // mispairing, not for the breaker's own anti-join (an emptied
+      // payloads frame needs no such collapse: media is per-fold
+      // optional, and an empty frame fingerprints to nothing)
+      val rawEff =
+        if (admittedRaw.isDefined && admittedVecs.isEmpty) None
+        else admittedRaw
+      appendUnifiedFrom(s, root, base, prior, admittedDocs, admittedVecs,
+        rawEff, admittedPayloads, preTok, preCensus = Some(censusDelta))
+      report
     }
   }
 
@@ -3468,13 +3375,13 @@ object IndexStore {
       s"projectedAnnFromStore: store at $root has no proj_stats channel " +
         "— not a projected-ANN store (writeProjections first)")
     // the two 1-row census gates are independent committed-manifest
-    // reads — overlapped (r17b; guide §2.6, the probeConcurrently
-    // read-only contract), with refusal precedence kept in declaration
-    // order: both requires below still fire in the original sequence.
-    val heads = probeConcurrently[Any](
+    // reads — overlapped ([[runBlocks]]), with
+    // refusal precedence kept in declaration order: both requires
+    // below still fire in the original sequence.
+    val heads = runBlocks[Any](Seq(
       () => channelFrom(s, root, m, "proj_stats").head(),
       () => m.get("vec_stats").map(_ =>
-        channelFrom(s, root, m, "vec_stats").head().getAs[Long]("n_vecs")))
+        channelFrom(s, root, m, "vec_stats").head().getAs[Long]("n_vecs"))))
     val st = heads(0).asInstanceOf[org.apache.spark.sql.Row]
     val nVecsOpt = heads(1).asInstanceOf[Option[Long]]
     val (pk, pd, scheme, fp) = (st.getAs[Int]("k"), st.getAs[Int]("d"),

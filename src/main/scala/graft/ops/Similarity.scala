@@ -370,24 +370,21 @@ object Similarity {
     * query-batch rows) fails LOUDLY here: zip would otherwise silently
     * shrink the batch to one query and the entry would quietly test
     * half its contract (ADVICE r9). */
-  private val twoQidCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
+  private val twoQidCache = new Memo[String, Seq[Long]]
   private def twoQids(s: SparkSession, dir: String): Seq[Long] =
-    twoQidCache.synchronized {
-      twoQidCache.getOrElseUpdate(dir, {
-        import s.implicits._
-        // memoized per dir (the Core.tableRows discipline): a pure
-        // function of the immutable corpus, re-collected by every
-        // batch-hybrid query before the memo
-        val qids = queryBatch(s, dir, normalized(s, dir))
-          .select($"vec_id").orderBy($"vec_id")
-          .limit(2).as[Long].collect().toSeq // bounded: 2 driver-known qids
-        require(qids.size == 2,
-          s"batch-hybrid fixture degenerate: expected 2 query-batch ids at " +
-            s"$dir, got ${qids.size} — zip against the 2-element term list " +
-            "would silently shrink the batch instead of failing")
-        qids
-      })
+    twoQidCache(dir) {
+      import s.implicits._
+      // memoized per dir (the Core.tableRows discipline): a pure
+      // function of the immutable corpus, re-collected by every
+      // batch-hybrid query before the memo
+      val qids = queryBatch(s, dir, normalized(s, dir))
+        .select($"vec_id").orderBy($"vec_id")
+        .limit(2).as[Long].collect().toSeq // bounded: 2 driver-known qids
+      require(qids.size == 2,
+        s"batch-hybrid fixture degenerate: expected 2 query-batch ids at " +
+          s"$dir, got ${qids.size} — zip against the 2-element term list " +
+          "would silently shrink the batch instead of failing")
+      qids
     }
 
   /** JL projections of the raw embeddings, long form (vec_id, j, p):

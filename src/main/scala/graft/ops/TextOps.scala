@@ -223,20 +223,17 @@ object TextOps {
     * call at scale. The id doubles as the hybrid routes' self-exclude
     * doc (it IS the min/max doc_id), so q142/q153 skip their separate
     * 1-row min head too. */
-  private val qprobes =
-    scala.collection.concurrent.TrieMap.empty[(String, Boolean), (Long, Seq[String])]
+  private val qprobes = new Memo[(String, Boolean), (Long, Seq[String])]
   private[graft] def qprobeOfExtreme(s: SparkSession, dir: String,
       useMax: Boolean): (Long, Seq[String]) =
-    qprobes.synchronized {
-      qprobes.getOrElseUpdate((dir, useMax), {
-        import s.implicits._
-        val docs = table(s, dir, "documents")
-        val qid = docs.agg(if (useMax) max($"doc_id") else min($"doc_id"))
-          .head().getLong(0)
-        val txt = docs.filter($"doc_id" === qid)
-          .select(lower($"text")).head().getString(0)
-        (qid, "[a-z]+".r.findAllIn(txt).toSeq.distinct)
-      })
+    qprobes((dir, useMax)) {
+      import s.implicits._
+      val docs = table(s, dir, "documents")
+      val qid = docs.agg(if (useMax) max($"doc_id") else min($"doc_id"))
+        .head().getLong(0)
+      val txt = docs.filter($"doc_id" === qid)
+        .select(lower($"text")).head().getString(0)
+      (qid, "[a-z]+".r.findAllIn(txt).toSeq.distinct)
     }
 
   /** Core BM25 scoring (k1 = 1.2, b = 0.75, Lucene idf), shared by the

@@ -97,6 +97,32 @@ class BenchLogicSpec extends AnyFunSuite {
     assert(Bench.verdictOf(None, None) == "unknown")
   }
 
+  /** [[Bench.stabilized]] over a fixed series: shot i reads `series(i - 1)`
+    * and the labels it was asked for are recorded. */
+  private def shots(maxShots: Int, series: Double*): (Seq[Double], Seq[Int]) = {
+    val asked = scala.collection.mutable.ArrayBuffer.empty[Int]
+    (Bench.stabilized(maxShots) { i => asked += i; series(i - 1) }, asked.toSeq)
+  }
+
+  test("the sentinel stabilizer stops when two consecutive shots agree within 10%") {
+    // a descending (warming) series: 1.06 → 0.73 → 0.65 disagree by 11%,
+    // 0.65 → 0.62 agree by 4.6%
+    val (s, asked) = shots(6, 1.06, 0.73, 0.65, 0.62, 0.61, 0.60)
+    assert(s == Seq(1.06, 0.73, 0.65, 0.62) && s.last == 0.62)
+    assert(asked == Seq(1, 2, 3, 4), "shots are numbered from 1")
+  }
+
+  test("the sentinel stabilizer never counts a failed shot (-1) as agreement") {
+    assert(shots(6, -1.0, -1.0, 0.5, 0.5)._1 == Seq(-1.0, -1.0, 0.5, 0.5))
+    assert(shots(6, 0.5, -1.0, 0.5, 0.52)._1 == Seq(0.5, -1.0, 0.5, 0.52))
+  }
+
+  test("the sentinel stabilizer respects its shot bound") {
+    val (s, asked) = shots(4, 1.0, 2.0, 1.0, 2.0, 1.0, 2.0)
+    assert(s == Seq(1.0, 2.0, 1.0, 2.0) && asked == Seq(1, 2, 3, 4))
+    assert(shots(1, 1.0, 1.0)._1 == Seq(1.0))
+  }
+
   test("driver-contract tripwire: the bench env names and one-line JSON fields stay stable (VERDICT r16 next #7)") {
     // The driver's cross-round PERF compare reads the PREVIOUS round's
     // bench line: renaming an env var or a JSON field silently zeroes

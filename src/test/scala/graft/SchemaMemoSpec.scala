@@ -46,6 +46,24 @@ class SchemaMemoSpec extends SparkSpec {
     }
   }
 
+  test("8 first readers of one path at once launch one inference job") {
+    val path = s"${tmp("race")}/t.parquet"
+    Seq((1, "a"), (2, "b")).toDF("k", "v").write.parquet(path)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val (schemas, jobs) = jobsOf {
+        val reads = (1 to 8).map(_ => pool.submit(new java.util.concurrent.Callable[StructType] {
+          def call(): StructType = { go.await(); Core.readParquet(spark, path).schema }
+        }))
+        go.countDown()
+        reads.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      }
+      assert(schemas.distinct.size == 1 && schemas.head.map(_.name) == Seq("k", "v"))
+      assert(jobs == 1, s"8 racing first reads launched $jobs jobs")
+    } finally pool.shutdownNow()
+  }
+
   test("a warm hybrid lookup launches as many jobs at append fan-out 2 as on a compacted store") {
     val root = tmp("fanout")
     ops.IndexStore.writeUnified(spark, docsOf(0 to 11), vecsOf(0 to 11), cents, root)

@@ -11,9 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The per-JVM store-fixture memo ([[Core.StoreFixtures]]): one build
   * per key, no lock shared between keys, nested builds, the reset
-  * contract and a failed build. Builds here write a marker file, not a
-  * store, so no SparkSession is needed. Every test but the first uses
-  * its own memo, so a reset never touches the program's fixtures. */
+  * contract and a failed build. The first two contracts are also run
+  * against the generic per-key memo it is built on ([[Core.Memo]]).
+  * Builds here write a marker file, not a store, so no SparkSession is
+  * needed. Every test but the first uses its own memo, so a reset
+  * never touches the program's fixtures. */
 class StoreFixtureSpec extends AnyFunSuite {
 
   private val dir = "/store-fixture-spec/corpus"
@@ -33,7 +35,22 @@ class StoreFixtureSpec extends AnyFunSuite {
     finally pool.shutdownNow()
   }
 
-  test("8 concurrent callers of one key run one build and get one root") {
+  /** A per-key memo under test: `call(key)(build)` is the root that
+    * `build` wrote for `key`. */
+  private type Call = String => (String => Unit) => String
+
+  /** [[Core.Memo]] holding each key's root, built under a temp dir. */
+  private def generic(): Call = {
+    val memo = new Core.Memo[String, String]
+    val base = Files.createTempDirectory("graft-memo-spec")
+    key => build => memo(key) { val root = s"$base/$key"; build(root); root }
+  }
+
+  for ((label, call) <- Seq[(String, () => Call)](
+      "" -> (() => key => build => Core.storeFixture(key, dir)(build)),
+      " (Core.Memo)" -> (() => generic())))
+  test("8 concurrent callers of one key run one build and get one root" + label) {
+    val memo = call()
     val builds = new AtomicInteger
     val go = new CountDownLatch(1)
     val pool = Executors.newFixedThreadPool(8)
@@ -41,7 +58,7 @@ class StoreFixtureSpec extends AnyFunSuite {
     try {
       val calls = (1 to 8).map(_ => Future {
         go.await()
-        Core.storeFixture("graft_fxspec_once", dir) { root =>
+        memo("graft_fxspec_once") { root =>
           builds.incrementAndGet()
           Thread.sleep(200) // hold the build while the other callers arrive
           marked(root)
@@ -55,26 +72,30 @@ class StoreFixtureSpec extends AnyFunSuite {
     } finally pool.shutdownNow()
   }
 
-  test("a build of key A held on a latch does not block a build of key B") {
-    val memo = new Core.StoreFixtures
+  for ((label, call) <- Seq[(String, () => (Call, () => Unit))](
+      "" -> (() => { val m = new Core.StoreFixtures
+        (key => build => m(key, dir, "")(build), () => m.reset()) }),
+      " (Core.Memo)" -> (() => (generic(), () => ()))))
+  test("a build of key A held on a latch does not block a build of key B" + label) {
+    val (memo, reset) = call()
     val started = new CountDownLatch(1)
     val release = new CountDownLatch(1)
     val pool = Executors.newSingleThreadExecutor()
     try {
-      val a = Future(memo("graft_fxspec_a", dir, "") { root =>
+      val a = Future(memo("graft_fxspec_a") { root =>
         started.countDown()
         assert(release.await(60, TimeUnit.SECONDS))
         marked(root)
       })(ExecutionContext.fromExecutor(pool))
       assert(started.await(30, TimeUnit.SECONDS), "A's build never started")
-      val b = within(30)(memo("graft_fxspec_b", dir, "")(marked))
+      val b = within(30)(memo("graft_fxspec_b")(marked))
       assert(exists(b) && !a.isCompleted, "B should finish while A's build is held")
       release.countDown()
       assert(exists(Await.result(a, 60.seconds)))
     } finally {
       release.countDown()
       pool.shutdownNow()
-      memo.reset()
+      reset()
     }
   }
 
@@ -131,5 +152,25 @@ class StoreFixtureSpec extends AnyFunSuite {
       assert(exists(root) && builds.get == 2)
       assert(memo("graft_fxspec_fail", dir, "")(build) == root && builds.get == 2)
     } finally memo.reset()
+  }
+
+  test("a Core.Memo build that throws records nothing; the next caller builds again") {
+    val memo = new Core.Memo[String, Int]
+    val builds = new AtomicInteger
+    val e = intercept[IllegalStateException] {
+      memo("k") { builds.incrementAndGet(); throw new IllegalStateException("injected build failure") }
+    }
+    assert(e.getMessage == "injected build failure" && memo.keys == List("k"))
+    assert(memo("k") { builds.incrementAndGet(); 7 } == 7 && builds.get == 2)
+    assert(memo("k")(fail("rebuilt")) == 7 && memo.remove("k").contains(7) && memo.keys.isEmpty)
+  }
+
+  test("a Core.Memo past its key bound drops the least recently used key") {
+    val memo = new Core.Memo[String, String](maxKeys = 2)
+    memo("a")("a1"); memo("b")("b1")
+    assert(memo("a")(fail("rebuilt a")) == "a1") // a is now the most recent
+    memo("c")("c1")
+    assert(memo.keys.toSet == Set("a", "c"))
+    assert(memo("b")("b2") == "b2", "the evicted key built again")
   }
 }
